@@ -1636,7 +1636,7 @@ def main() -> None:
     # a quiet host
     canary_samples = [_canary(spark)]
     run_lists: dict[str, list[float]] = {n: [] for n in HEADLINE}
-    ctor_lists: dict[str, list[float]] = {n: [] for n in CTOR_TIMED}
+    ctor_lists: dict[str, list[dict[str, float]]] = {n: [] for n in CTOR_TIMED}
     frames: dict[str, object] = {}
     n_passes = 3
     for p in range(n_passes):

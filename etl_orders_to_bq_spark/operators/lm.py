@@ -2449,6 +2449,10 @@ def unigram_lm_train(
     model-sized broadcasts and driver-free folds — the loop shuffles
     (piece, count) pairs only.
     No counterpart in the reference engine (SURVEY.md §2.2).
+
+    Construction runs Spark jobs: the census collect (skipped when
+    ``local_threshold`` is None) and, when the census does not fit,
+    the staged per-round fit. Only the returned frame is lazy.
     """
     fit = _unigram_census_try(
         df, text_col, int(seed_size), int(vocab_size), int(rounds),
@@ -2507,6 +2511,8 @@ def unigram_encode(
     groupBy is vocabulary-sized, one bounded fold per word; the same
     ``local_threshold`` census gate replays the fit AND this final
     segmentation pass driver-locally when the vocabulary is bounded.
+
+    Construction runs Spark jobs, as ``unigram_lm_train``'s does.
     """
     fit = _unigram_census_try(
         df, text_col, int(seed_size), int(vocab_size), int(rounds),

@@ -54,9 +54,7 @@ def main(argv: list[str] | None = None) -> int:
     print(f"wrote {etl.output_df.count()} rows to {args.table}")
 
     if args.similar_to is not None:
-        from .operators.similarity import top_k_similar
-
-        for row in top_k_similar(etl.products_df, args.similar_to, k=10).collect():
+        for row in etl.top_k_similar(args.similar_to, k=10).collect():
             print(f"{row['product_id']}\t{row['score']}")
     return 0
 

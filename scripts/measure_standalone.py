@@ -9,6 +9,7 @@ accounting."""
 
 from __future__ import annotations
 
+import argparse
 import os
 import statistics
 import sys
@@ -18,11 +19,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    runs = 3
-    for a in sys.argv[1:]:
-        if a.startswith("--runs"):
-            runs = int(a.split("=")[1])
+    ap = argparse.ArgumentParser(description=__doc__)
+    ap.add_argument("names", nargs="+", help="registry entry names")
+    ap.add_argument("--runs", type=int, default=3)
+    opts = ap.parse_intermixed_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
@@ -43,9 +43,9 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
 
     force(qs["q1_pricing_summary"](spark, "/root/testdata/sf0.001"))
-    for name in args:
+    for name in opts.names:
         ts = []
-        for _ in range(runs):
+        for _ in range(opts.runs):
             t0 = time.perf_counter()
             force(qs[name](spark, sf_dir))
             ts.append(round(time.perf_counter() - t0, 3))

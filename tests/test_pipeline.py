@@ -220,6 +220,66 @@ def test_first_occurrence_semantics_synthetic(spark, tmp_path):
     assert out[12]["price"] == 10.0  # and it still joins the dim
 
 
+def test_lookup_snapshot_synthetic(spark, tmp_path):
+    """Lookups read one products snapshot staged at the first lookup:
+    the same scores and top-k as the lazy frame (a duplicated id keeps
+    its first row, a candidate with no product is absent), no CSV scan
+    left in the plan, and ``process()`` again reads a rewritten file."""
+    from etl_orders_to_bq_spark.operators.similarity import (
+        similar_products,
+        top_k_similar,
+    )
+    from etl_orders_to_bq_spark.plans.inspect import scan_info
+
+    orders = tmp_path / "orders.csv"
+    orders.write_text(
+        ",order_source_id,order_created_datetime,customer_id,status,sum,"
+        "quantity,name,surname,patronymic,product_id\n"
+        "0,11,2019-04-28T18:20:05,1,Paid,100.5,1,Іван,Петренко,,2\n"
+    )
+    products = tmp_path / "products.csv"
+    products.write_text(
+        "product_id,price,goods_group,manufacturer\n"
+        "1,100.0,G,M\n"
+        "2,80.0,G,M\n"
+        "2,500.0,H,N\n"  # duplicated id: the first row is kept
+        "3,120.0,H,M\n"
+        "4,100.0,G,N\n"
+    )
+    etl = OrdersEtl(
+        spark, str(orders), str(products), table_name=str(tmp_path / "out")
+    )
+    etl.process()
+    lazy = etl.products_df
+    assert scan_info(lazy)  # the lazy frame scans the CSV
+
+    cands = [1, 2, 3, 4, 99]  # 99 has no product
+    want = {
+        int(r["product_id"]): float(r["score"])
+        for r in similar_products(lazy, 1, cands).collect()
+    }
+    want_top = [tuple(r) for r in top_k_similar(lazy, 1, k=3).collect()]
+
+    got = etl.find_similar_products(1, cands)
+    assert got == want
+    assert got == pytest.approx({1: 1.0, 2: 0.94, 3: 0.45, 4: 0.8})
+    assert etl.products_df is not lazy
+    assert scan_info(etl.products_df) == []
+    assert [tuple(r) for r in etl.top_k_similar(1, k=3).collect()] == want_top
+    assert [
+        tuple(r) for r in top_k_similar(etl.products_df, 1, k=3).collect()
+    ] == want_top
+    assert [r[0] for r in want_top] == [1, 2, 4]
+
+    products.write_text(
+        "product_id,price,goods_group,manufacturer\n1,100.0,G,M\n2,50.0,G,M\n"
+    )
+    assert etl.find_similar_products(1, [2]) == {2: got[2]}  # still the snapshot
+    etl.process()
+    assert etl.find_similar_products(1, [2, 3]) == pytest.approx({2: 0.85})
+    assert scan_info(etl.products_df) == []
+
+
 def test_corpus_durable_staging_identical(spark, tmp_path):
     """build_training_corpus(checkpoint_path=...) must produce the
     identical chunk set as the in-memory staging path."""

@@ -23,10 +23,19 @@ the three samples agree within ~20%, so a contaminated session is
 self-labeling. The `stress_sf1` section scales the corpus 10x and
 re-times the pair-stage dedup operators (growth = t_10x /
 min(t_1x)); set SPARK_GRAFT_SKIP_SF1=1 to skip it.
+
+Which entries are rebuilt per pass is measured, not listed: the first
+pass builds each entry through ``build_and_force``, which counts the
+SQL executions its construction started. An entry whose construction
+ran any SQL (iterative rounds, staged checkpoints, census or probe
+collects) did its work there, so it is rebuilt on every pass, its
+headline number is construction + force, and `ctor_detail` keeps the
+split. Every other entry is built once and its frame re-forced.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -281,152 +290,133 @@ HEADLINE = [
     "fligner_killeen",
 ]
 
-# Iterative queries run driver-side rounds (with checkpoints) while the
-# DataFrame is CONSTRUCTED, so the timer must wrap construction + force
-# and rebuild per run — forcing a prebuilt frame would time only the
-# final projection over already-materialized checkpoint blocks.
-ITERATIVE = {
-    "pagerank",
-    "corpus_pipeline",
-    # CC rounds + the staged SemDeDup assignment run at construction
-    "entity_resolution",
-    "semdedup",
-    # Lloyd rounds collect centroids during construction
-    "semdedup_kmeans",
-    # the symmetrized edge list is staged (localCheckpoint) and the PQ
-    # query vector collected at construction
-    "adamic_adar",
-    "ann_pq_topk",
-    "ann_ivfpq_topk",
-    # HITS stages per-round label frames (localCheckpoint) and collects
-    # the max at construction
-    "hits_scores",
-    # scalable_ntile collects per-partition counts at construction
-    "rfm_segments",
-    "perplexity_buckets",
-    # count/probe jobs + conditional Lloyd fit run at construction
-    "semdedup_auto",
-    "diverse_sample",
-    # verify='auto' runs a candidate-stats collect probe and lazy
-    # localCheckpoints at construction (advisor r8): rebuild per run
-    # so the timer charges probe + checkpoint materialization
-    "ngram_containment",
-    # the query vector is collected at construction
-    "ann_matryoshka",
-    # the 3 training rounds (pair-count argmax collects) run at
-    # construction; the returned frame is a driver-local shim
-    "bpe_merges",
-    # the scatter-matrix collect + power iteration run at construction
-    "pca_pc1",
-    # vocab-fold staging (localCheckpoints) runs at construction
-    "bpe_encode",
-    # region count/probe jobs run at construction
-    "hard_negatives",
-    # r11: the 9-sum collect + driver Cramer run at construction
-    "ridge_normal",
-    # r11: 3 boosting rounds of argmin/total collects at construction
-    "adaboost_stumps",
-    # r11: 3 MM rounds with per-round localCheckpoints at construction
-    "bradley_terry",
-    # r12: the peel loop (local toPandas fast path or staged rounds)
-    # runs at construction
-    "k_truss",
-    # r12: the bounded transition collect + driver micro-solve run at
-    # construction
-    "markov_attribution",
-    # r12: the lag-covariance collect + driver Durbin-Levinson run at
-    # construction
-    "pacf_durbin",
-    # r12: the complete-block census count runs at construction
-    "friedman_test",
-    # r13: the sorted-distinct treatment/group collects and
-    # complete-block census counts run at construction
-    "jonckheere_terpstra",
-    "page_trend",
-    "quade_test",
-    # r13: the constant-rater-count validation .first() runs at
-    # construction
-    "fleiss_kappa",
-    # r12: the Lloyd fit's per-round centroid collects run at
-    # construction
-    "silhouette",
-    # r12: the complete-block census count runs at construction
-    "cochran_q",
-    # r12: the two distinct counts + overlap count run at construction
-    "capture_recapture",
-    # r13: EM-round staging (localCheckpoints) runs at construction
-    "unigram_lm",
-    "unigram_encode",
-    # r13b: global_cumsum/row_number offset collects (and for the
-    # combinatoric tails, the 2x2/count .first()) run at construction
-    "fisher_exact",
-    "sign_test",
-    "wilcoxon_signed_rank",
-    "adf_test",
-    "kpss_test",
-    "granger_lag1",
-    "anderson_darling",
-    "fligner_killeen",
-    # r13b: the per-iteration 9-sum collects + driver Cramer solves
-    # (logistic) / 7-sum EM collects (gmm) run at construction
-    "logistic_irls",
-    "gmm_em",
-    # r13b: the top-k source collect + BFS frontier loop run at
-    # construction
-    "closeness_centrality",
-    # r13: eps-graph localCheckpoint + CC rounds run at construction
-    "dbscan",
-    # r13: the 2^C mask collect + driver zeta/Shapley run at
-    # construction
-    "shapley_attribution",
-    # r13: global_cumsum_before's per-partition totals collect runs
-    # at construction
-    "mood_median",
-    "pps_systematic",
-}
-# Entries whose CONSTRUCTION also runs real Spark jobs (r13 job-name
-# census over the status store, footer-read jobs excluded: the
-# global_cumsum family's range-sample + stage + totals-collect, lazy
-# checkpoints' AQE stage materialization, probe first()s). r13 kept
-# their `queries` numbers exec-only (the historic methodology) and
-# recorded construction separately in `ctor_detail`. r14 PROMOTES
-# them to the ITERATIVE methodology — the headline number now wraps
-# construction + force, ending the split accounting (r13 verdict
-# item: exec-only flattered entries like hbos_outliers whose
-# optimization moved jobs into construction). The transition is
-# recorded once: `ctor_detail` in BENCH_full.json keeps per-pass
-# {ctor, exec} component runs, so the old exec-only series remains
-# derivable for cross-round comparison against BENCH_r13.
-CTOR_TIMED = {
-    "ann_cosine_topk",
-    "seq_patterns",
-    "mann_whitney",
-    "gini_stump",
-    "vocab_coverage",
-    "hilbert_layout",
-    "roc_curve",
-    "kruskal_wallis",
-    "dunn_posthoc",
-    "streaming_funnel",
-    "log_rank",
-    "wasserstein",
-    "cliffs_delta",
-    "brunner_munzel",
-    "ansari_bradley",
-    "runs_test",
-    "chatterjee_xi",
-    "cramer_von_mises",
-    "kuiper_two_sample",
-    "hbos_outliers",
-    "ecod_outliers",
-    "nelson_aalen",
-    "personalized_pagerank",
-}
 
+def bench_session(app_name: str = "bench"):
+    """The bench's Spark session on local[$SPARK_GRAFT_CPUS], warmed on
+    the smallest fixture. bench.py and the probe scripts share it, so
+    a probe's numbers come from the same JVM as the headline's."""
+    import __spark_entry__ as entry
+    from etl_orders_to_bq_spark.session import get_spark
+
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # a 32-thread local "cluster" on an 8g heap is under-provisioned
+    # (production sizes ~1g/core); the truss growth probe's partial
+    # aggregation maps OOM'd it — match heap to the thread count
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
+    spark = get_spark(
+        app_name=app_name,
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(cpus),
+        # Spark's generated-class cache holds only 100 entries by
+        # default; a 200-query interleaved suite evicts constantly and
+        # re-pays janino compilation on every pass (measured: 28s
+        # in-suite vs 3.8s standalone for ransac_line, whose 64-arm
+        # trial expansion is compile-heavy). Size the cache to the
+        # workload — the same knob a wide production workload tunes.
+        # r13 second pass: the cache must hold the WHOLE suite's
+        # sources or interleaved passes still thrash — measured ~35
+        # generated classes per query (CodegenMetrics: 1107 compiles
+        # for 31 queries), so 200 entries x 3 passes needs ~7000;
+        # 2000 was measured still re-compiling fresh plan instances
+        # (phash_neardup 5.7s vs 1.2s compiled-hot). 16384 fits with
+        # headroom at ~30KB/class (~300MB of the 32g heap).
+        extra_conf={
+            "spark.sql.codegen.cache.maxEntries": "16384",
+            # r14 attribution (scripts/jit_probe.py, full-suite run):
+            # the 200-entry suite generates ~4200 janino classes whose
+            # JIT'd methods exceed the JDK-17 default 240MB reserved
+            # code cache (the two nmethod segments plateaued at the
+            # sweeper threshold, ~160MB, with methods being flushed
+            # and recompiled all suite long — 557s of cumulative
+            # compiler-thread time). 1g reserve measured: warm-pass
+            # total 433.8s -> 348.6s (-20%) on the same 200x2
+            # interleave. The residual sporadic 10-70s stalls are a
+            # DIFFERENT mechanism (see OPTIMIZATION_r14.md: a single
+            # deoptimized decimal-sum hashAgg task burning CPU alone,
+            # jstack-pinned) — attacked operator-side by narrowing
+            # hot decimal sums. Production counterpart: raising
+            # ReservedCodeCacheSize is the standard JVM tuning for
+            # codegen-wide Spark workloads; engine sessions
+            # (session.py) keep JVM defaults.
+            "spark.driver.extraJavaOptions": (
+                "-XX:ReservedCodeCacheSize=1g"
+            ),
+        },
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    # JVM/codegen warmup on the smallest fixture (not counted)
+    _force(entry.queries()["q1_pricing_summary"](spark, entry.SF_SMOKE))
+    return spark
 
 
 def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+def _newest_sql_execution(spark) -> int:
+    """Id of the newest SQL execution in the status store, -1 before the
+    first. Ids only grow, while ``executionsCount()`` stops growing
+    once the store trims to spark.sql.ui.retainedExecutions (1000),
+    which one bench pass exceeds."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).head().executionId() if n else -1
+
+
+def build_and_force(spark, build) -> dict:
+    """Build one entry with ``build()``, then force it; times both and
+    says whether the entry must be rebuilt on every pass.
+
+    Returns {"ctor": s, "exec": s, "rebuild": bool, "frame": df}.
+    ``rebuild`` is True when the construction started any SQL
+    execution: the entry did its work there (iterative rounds, staged
+    checkpoints, census or probe collects), so re-forcing its frame
+    would time only the last projection over materialized blocks.
+    Counting SQL executions, not jobs, matters: reading a parquet
+    footer at construction is a job but runs no query."""
+    before = _newest_sql_execution(spark)
+    t0 = time.perf_counter()
+    frame = build()
+    ctor = time.perf_counter() - t0
+    rebuild = _newest_sql_execution(spark) > before
+    t0 = time.perf_counter()
+    _force(frame)
+    return {
+        "ctor": round(ctor, 3),
+        "exec": round(time.perf_counter() - t0, 3),
+        "rebuild": rebuild,
+        "frame": frame,
+    }
+
+
+def timed_passes(spark, builds: dict, passes: int):
+    """Interleaved timed passes over ``builds`` ({name: zero-argument
+    builder}): pass p forces every entry once, so a transient host-load
+    burst hits at most one sample of each entry. The first pass
+    classifies each entry with ``build_and_force``; an entry whose
+    construction ran SQL is rebuilt and timed as construction + force
+    on every pass, any other reuses its pass-0 frame and is timed as
+    the force alone. Yields (pass, name, sample) with sample
+    {"wall": s}, plus "ctor"/"exec" for a rebuilt entry."""
+    frames: dict[str, object] = {}
+    for p in range(passes):
+        for name, build in builds.items():
+            if name in frames:
+                t0 = time.perf_counter()
+                _force(frames[name])
+                yield p, name, {"wall": round(time.perf_counter() - t0, 3)}
+                continue
+            m = build_and_force(spark, build)
+            if p == 0 and not m["rebuild"]:
+                frames[name] = m["frame"]
+                yield p, name, {"wall": m["exec"]}
+            else:
+                yield p, name, {
+                    "wall": round(m["ctor"] + m["exec"], 3),
+                    "ctor": m["ctor"],
+                    "exec": m["exec"],
+                }
 
 
 def _canary(spark) -> dict:
@@ -1570,118 +1560,39 @@ def main() -> None:
     sf = float(m.group(1)) if m else None
 
     import __spark_entry__ as entry
-    from etl_orders_to_bq_spark.session import get_spark
 
-    # a 32-thread local "cluster" on an 8g heap is under-provisioned
-    # (production sizes ~1g/core); the truss growth probe's partial
-    # aggregation maps OOM'd it — match heap to the thread count
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
-    spark = get_spark(
-        app_name="bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        # Spark's generated-class cache holds only 100 entries by
-        # default; a 200-query interleaved suite evicts constantly and
-        # re-pays janino compilation on every pass (measured: 28s
-        # in-suite vs 3.8s standalone for ransac_line, whose 64-arm
-        # trial expansion is compile-heavy). Size the cache to the
-        # workload — the same knob a wide production workload tunes.
-        # r13 second pass: the cache must hold the WHOLE suite's
-        # sources or interleaved passes still thrash — measured ~35
-        # generated classes per query (CodegenMetrics: 1107 compiles
-        # for 31 queries), so 200 entries x 3 passes needs ~7000;
-        # 2000 was measured still re-compiling fresh plan instances
-        # (phash_neardup 5.7s vs 1.2s compiled-hot). 16384 fits with
-        # headroom at ~30KB/class (~300MB of the 32g heap).
-        extra_conf={
-            "spark.sql.codegen.cache.maxEntries": "16384",
-            # r14 attribution (scripts/jit_probe.py, full-suite run):
-            # the 200-entry suite generates ~4200 janino classes whose
-            # JIT'd methods exceed the JDK-17 default 240MB reserved
-            # code cache (the two nmethod segments plateaued at the
-            # sweeper threshold, ~160MB, with methods being flushed
-            # and recompiled all suite long — 557s of cumulative
-            # compiler-thread time). 1g reserve measured: warm-pass
-            # total 433.8s -> 348.6s (-20%) on the same 200x2
-            # interleave. The residual sporadic 10-70s stalls are a
-            # DIFFERENT mechanism (see OPTIMIZATION_r14.md: a single
-            # deoptimized decimal-sum hashAgg task burning CPU alone,
-            # jstack-pinned) — attacked operator-side by narrowing
-            # hot decimal sums. Production counterpart: raising
-            # ReservedCodeCacheSize is the standard JVM tuning for
-            # codegen-wide Spark workloads; engine sessions
-            # (session.py) keep JVM defaults.
-            "spark.driver.extraJavaOptions": (
-                "-XX:ReservedCodeCacheSize=1g"
-            ),
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
+    spark = bench_session()
     qs = entry.queries()
-
-    # JVM/codegen warmup on the smallest fixture (not counted)
-    _force(qs["q1_pricing_summary"](spark, "/root/testdata/sf0.001"))
 
     timings: dict[str, float] = {}
     detail: dict[str, dict] = {}
-    # Interleaved passes: pass p runs every query once, so a transient
-    # host-load burst hits at most one of each query's three samples.
-    # Non-iterative queries reuse one built frame across passes (plan
-    # construction is not the thing being timed); ITERATIVE entries
-    # rebuild per run because their work happens at construction.
     _canary(spark)  # untimed probe warmup: the first range-sum pays
     # codegen + numpy thread-pool spinup; without this the start
     # sample reads 5-7x the steady state and the spread false-flags
     # a quiet host
     canary_samples = [_canary(spark)]
     run_lists: dict[str, list[float]] = {n: [] for n in HEADLINE}
-    ctor_lists: dict[str, list[dict[str, float]]] = {n: [] for n in CTOR_TIMED}
-    frames: dict[str, object] = {}
+    ctor_lists: dict[str, list[dict[str, float]]] = {}
     n_passes = 3
-    for p in range(n_passes):
-        for name in HEADLINE:
-            if name in ITERATIVE:
-                t0 = time.perf_counter()
-                _force(qs[name](spark, sf_dir))
-            elif name in CTOR_TIMED:
-                # r14: headline = construction + force (the ITERATIVE
-                # methodology — one accounting for every entry whose
-                # construction does work). Components still recorded
-                # per pass into ctor_detail for the one-round
-                # transition table (old exec-only series = the exec
-                # component).
-                t0 = time.perf_counter()
-                f = qs[name](spark, sf_dir)
-                t_ctor = round(time.perf_counter() - t0, 3)
-                t1 = time.perf_counter()
-                _force(f)
-                ctor_lists[name].append(
-                    {
-                        "ctor": t_ctor,
-                        "exec": round(time.perf_counter() - t1, 3),
-                    }
-                )
-            else:
-                if name not in frames:
-                    frames[name] = qs[name](spark, sf_dir)
-                t0 = time.perf_counter()
-                _force(frames[name])
-            run_lists[name].append(round(time.perf_counter() - t0, 3))
-        if p == n_passes - 2:
+    builds = {n: functools.partial(qs[n], spark, sf_dir) for n in HEADLINE}
+    for p, name, s in timed_passes(spark, builds, n_passes):
+        run_lists[name].append(s["wall"])
+        if "ctor" in s:
+            ctor_lists.setdefault(name, []).append(
+                {"ctor": s["ctor"], "exec": s["exec"]}
+            )
+        if p == n_passes - 2 and name == HEADLINE[-1]:
             canary_samples.append(_canary(spark))
     canary_samples.append(_canary(spark))
-    frames.clear()
+    # entries rebuilt per pass (construction ran SQL) keep the split;
+    # their headline `queries` value is min(ctor + exec)
     ctor_detail = {
         name: {
-            # the old (pre-r14) exec-only headline series is exec_min;
-            # the headline `queries` value is now min(ctor + exec)
             "ctor_min": round(min(d["ctor"] for d in ts), 3),
             "exec_min": round(min(d["exec"] for d in ts), 3),
             "runs": ts,
         }
         for name, ts in ctor_lists.items()
-        if ts
     }
     for name, ts in run_lists.items():
         detail[name] = {

@@ -2153,15 +2153,21 @@ def _unigram_backtrack(col_w, col_len, col_dp):
 def _unigram_words_census(df: DataFrame, text_col: str, mw: int):
     """The one corpus-sized stage both unigram entry points share: the
     distinct-word frequency census (tokenize -> groupBy -> length
-    filter). Everything downstream is a pure function of it."""
+    filter), staged so the bounded-collect probe and the distributed
+    fit both read it — ONE corpus scan whichever path runs. Everything
+    downstream is a pure function of it."""
+    from .staging import stage
+
     toks = df.select(
         F.explode(tokenize(normalize_text(text_col))).alias("__w")
     )
-    return (
+    return stage(
         toks.groupBy("__w")
         .agg(F.count("*").alias("__n"))
         .filter((F.length("__w") <= mw) & (F.length("__w") >= 1))
-        .withColumn("__len", F.length("__w"))
+        .withColumn("__len", F.length("__w")),
+        None,
+        "uni_words",
     )
 
 
@@ -2254,28 +2260,22 @@ def _unigram_census_em(
 
 
 def _unigram_census_try(
-    df: DataFrame,
-    text_col: str,
+    words: DataFrame,
     seed_size: int,
     vocab_size: int,
     rounds: int,
     mp: int,
-    mw: int,
     local_threshold: int | None,
 ):
-    """Collect the distinct-word census when it fits the bounded-
-    collect budget and run the EM driver-locally; None when the
-    vocabulary is too large (caller falls back to the distributed
-    loop). The census is vocabulary-sized at ANY corpus scale — this
-    is the 100 TB story: one tokenize+groupBy scan, then zero
-    per-round jobs."""
+    """Collect the staged distinct-word census when it fits the
+    bounded-collect budget and run the EM driver-locally; None when
+    the vocabulary is too large (caller falls back to the distributed
+    loop over the same staged census). The census is vocabulary-sized
+    at ANY corpus scale — this is the 100 TB story: one
+    tokenize+groupBy scan, then zero per-round jobs."""
     if local_threshold is None:
         return None
-    rows = (
-        _unigram_words_census(df, text_col, mw)
-        .limit(int(local_threshold) + 1)
-        .collect()
-    )
+    rows = words.limit(int(local_threshold) + 1).collect()
     if len(rows) > int(local_threshold):
         return None
     word_rows = [(r["__w"], int(r["__n"])) for r in rows]
@@ -2286,23 +2286,16 @@ def _unigram_census_try(
 
 
 def _unigram_fit(
-    df: DataFrame,
-    text_col: str,
+    words: DataFrame,
     seed_size: int,
     vocab_size: int,
     rounds: int,
     mp: int,
-    mw: int,
 ):
-    """Shared trainer: returns (words, cand, final vocab). See
-    unigram_lm_train for the algorithm contract."""
+    """Shared trainer over the staged census ``words``: returns (cand,
+    final vocab). See unigram_lm_train for the algorithm contract."""
     from .staging import stage
 
-    words = stage(
-        _unigram_words_census(df, text_col, mw),
-        None,
-        "uni_words",
-    )
     cand = stage(
         words.select(
             "__w",
@@ -2369,7 +2362,7 @@ def _unigram_fit(
             None,
             f"uni_vocab{rnd + 1}",
         )
-    return words, cand, vocab
+    return cand, vocab
 
 
 def _unigram_prob_map(cand: DataFrame, vocab: DataFrame, mp: int):
@@ -2450,13 +2443,15 @@ def unigram_lm_train(
     (piece, count) pairs only.
     No counterpart in the reference engine (SURVEY.md §2.2).
 
-    Construction runs Spark jobs: the census collect (skipped when
-    ``local_threshold`` is None) and, when the census does not fit,
-    the staged per-round fit. Only the returned frame is lazy.
+    Construction runs Spark jobs: the staged census, its collect
+    (skipped when ``local_threshold`` is None) and, when the census
+    does not fit, the staged per-round fit. Only the returned frame is
+    lazy.
     """
+    words = _unigram_words_census(df, text_col, int(max_word))
     fit = _unigram_census_try(
-        df, text_col, int(seed_size), int(vocab_size), int(rounds),
-        int(max_piece), int(max_word), local_threshold,
+        words, int(seed_size), int(vocab_size), int(rounds),
+        int(max_piece), local_threshold,
     )
     if fit is not None:
         _, vocab_items, _ = fit
@@ -2465,9 +2460,9 @@ def unigram_lm_train(
             "__piece string, __c long",
         )
     else:
-        _, _, vocab = _unigram_fit(
-            df, text_col, int(seed_size), int(vocab_size), int(rounds),
-            int(max_piece), int(max_word),
+        _, vocab = _unigram_fit(
+            words, int(seed_size), int(vocab_size), int(rounds),
+            int(max_piece),
         )
     tot = F.broadcast(
         vocab.agg(F.sum("__c").cast("double").alias("__T"))
@@ -2514,9 +2509,10 @@ def unigram_encode(
 
     Construction runs Spark jobs, as ``unigram_lm_train``'s does.
     """
+    words = _unigram_words_census(df, text_col, int(max_word))
     fit = _unigram_census_try(
-        df, text_col, int(seed_size), int(vocab_size), int(rounds),
-        int(max_piece), int(max_word), local_threshold,
+        words, int(seed_size), int(vocab_size), int(rounds),
+        int(max_piece), local_threshold,
     )
     if fit is not None:
         word_rows, _, segment = fit
@@ -2530,9 +2526,9 @@ def unigram_encode(
                 "word string, n long, n_pieces long, pieces string",
             ).orderBy(F.desc("n"), "word")
         )
-    words, cand, vocab = _unigram_fit(
-        df, text_col, int(seed_size), int(vocab_size), int(rounds),
-        int(max_piece), int(max_word),
+    cand, vocab = _unigram_fit(
+        words, int(seed_size), int(vocab_size), int(rounds),
+        int(max_piece),
     )
     pm = _unigram_prob_map(cand, vocab, int(max_piece))
     seg = _unigram_viterbi_dp(words, pm, int(max_piece))

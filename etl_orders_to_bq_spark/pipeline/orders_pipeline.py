@@ -31,7 +31,6 @@ again.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from ..functions.names import clean_name
@@ -123,8 +122,12 @@ class OrdersEtl:
             with_ingest_order=True,
         )
         products_raw = read_csv_raw(
-            self.spark, self.products_csv, PRODUCTS_RAW_SCHEMA, columns=PRODUCTS_COLUMNS
-        ).withColumn(INGEST_ORDER_COL, F.monotonically_increasing_id())
+            self.spark,
+            self.products_csv,
+            PRODUCTS_RAW_SCHEMA,
+            columns=PRODUCTS_COLUMNS,
+            with_ingest_order=True,
+        )
 
         orders = first_occurrence_dedup(
             self.cast_orders(orders_raw),

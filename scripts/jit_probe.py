@@ -1,8 +1,8 @@
 """Attribution probe for the suite's 32-core anti-scaling (r14).
 
-Replays a bench-shaped workload (heavy headline entries, interleaved
-passes, same session config as bench.py) while sampling driver-JVM
-health counters through JMX after every query:
+Replays a bench-shaped workload (the first headline entries through
+bench.py's session and interleaved pass loop) while sampling
+driver-JVM health counters through JMX after every query:
 
 - JIT: total compilation time, code-cache pool usage/max (three
   CodeHeap pools on JDK 17), compiles disabled?
@@ -18,19 +18,15 @@ engine behavior touched.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-N_QUERIES = int(sys.argv[1]) if len(sys.argv) > 1 else 40
-PASSES = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-CODE_CACHE = sys.argv[3] if len(sys.argv) > 3 else None
-
 import __spark_entry__ as entry  # noqa: E402
-from etl_orders_to_bq_spark.session import get_spark  # noqa: E402
+import bench  # noqa: E402
 
 
 def jvm_stats(spark) -> dict:
@@ -74,68 +70,39 @@ def jvm_stats(spark) -> dict:
 
 
 def main() -> None:
+    n_queries = int(sys.argv[1]) if len(sys.argv) > 1 else 40
+    passes = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
-    extra = {"spark.sql.codegen.cache.maxEntries": "16384"}
-    if CODE_CACHE:
-        extra["spark.driver.extraJavaOptions"] = (
-            f"-XX:ReservedCodeCacheSize={CODE_CACHE}"
-        )
-    spark = get_spark(
-        app_name="jit_probe",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        extra_conf=extra,
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
+    spark = bench.bench_session("jit_probe")
     qs = entry.queries()
-    import bench
 
-    names = [n for n in bench.HEADLINE if n in qs][:N_QUERIES]
+    names = [n for n in bench.HEADLINE if n in qs][:n_queries]
     # always end each pass with the two sentinels we are attributing
     for sentinel in ("phash_neardup", "ransac_line"):
         if sentinel in names:
             names.remove(sentinel)
         names.append(sentinel)
 
-    def force(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    force(qs["q1_pricing_summary"](spark, "/root/testdata/sf0.001"))
     base = jvm_stats(spark)
     print("BASE", json.dumps(base))
 
-    frames: dict[str, object] = {}
-    for p in range(PASSES):
-        for name in names:
-            t0 = time.perf_counter()
-            if name in bench.ITERATIVE or name in bench.CTOR_TIMED:
-                force(qs[name](spark, sf_dir))
-            else:
-                if name not in frames:
-                    frames[name] = qs[name](spark, sf_dir)
-                force(frames[name])
-            wall = time.perf_counter() - t0
-            s = jvm_stats(spark)
-            tot_gc = sum(g["ms"] for g in s["gc"].values())
-            cc_used = sum(
-                v["used_mb"]
-                for k, v in s["pools"].items()
-                if "CodeHeap" in k
-            )
-            cc_max = sum(
-                v["max_mb"]
-                for k, v in s["pools"].items()
-                if "CodeHeap" in k
-            )
-            print(
-                f"p{p} {name:28s} {wall:7.2f}s jit={s['jit_ms']/1000:7.1f}s "
-                f"gc={tot_gc/1000:6.1f}s cc={cc_used:.0f}/{cc_max:.0f}MB "
-                f"janino={s.get('janino_compiles', '?')}",
-                flush=True,
-            )
+    builds = {n: functools.partial(qs[n], spark, sf_dir) for n in names}
+    for p, name, sample in bench.timed_passes(spark, builds, passes):
+        s = jvm_stats(spark)
+        tot_gc = sum(g["ms"] for g in s["gc"].values())
+        cc_used = sum(
+            v["used_mb"] for k, v in s["pools"].items() if "CodeHeap" in k
+        )
+        cc_max = sum(
+            v["max_mb"] for k, v in s["pools"].items() if "CodeHeap" in k
+        )
+        print(
+            f"p{p} {name:28s} {sample['wall']:7.2f}s "
+            f"jit={s['jit_ms']/1000:7.1f}s "
+            f"gc={tot_gc/1000:6.1f}s cc={cc_used:.0f}/{cc_max:.0f}MB "
+            f"janino={s.get('janino_compiles', '?')}",
+            flush=True,
+        )
     print("FINAL", json.dumps(jvm_stats(spark)))
 
 

@@ -1,15 +1,19 @@
-"""Standalone noop-sink min-of-N measurement for named registry
-entries (guide §1.4): isolates a query from suite state. Usage:
+"""Time named registry entries apart from the rest of the suite (guide
+§1.4), on bench.py's session and pass loop, so the numbers compare
+with the headline's. Usage:
 
     python scripts/measure_standalone.py name1 name2 ... [--runs N]
 
-Prints per-entry {min, median, runs}; ITERATIVE-style entries are
-always rebuilt per run (construction included) — the conservative
-accounting."""
+Runs N interleaved passes over the names (bench.timed_passes: an entry
+whose construction runs SQL is rebuilt and timed as construction +
+force, any other re-forces one frame). Prints the Spark JVM's pid
+first, so a parallel jcmd/jstack watch can attach to it, then one
+timestamped line per force, then {min, median, runs} per entry."""
 
 from __future__ import annotations
 
 import argparse
+import functools
 import os
 import statistics
 import sys
@@ -24,31 +28,20 @@ def main() -> None:
     ap.add_argument("--runs", type=int, default=3)
     opts = ap.parse_intermixed_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
 
     import __spark_entry__ as entry
-    from etl_orders_to_bq_spark.session import get_spark
+    import bench
 
-    spark = get_spark(
-        app_name="measure_standalone",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        extra_conf={"spark.sql.codegen.cache.maxEntries": "16384"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench.bench_session("measure_standalone")
     qs = entry.queries()
-
-    def force(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    force(qs["q1_pricing_summary"](spark, "/root/testdata/sf0.001"))
-    for name in opts.names:
-        ts = []
-        for _ in range(opts.runs):
-            t0 = time.perf_counter()
-            force(qs[name](spark, sf_dir))
-            ts.append(round(time.perf_counter() - t0, 3))
+    jvm = spark.sparkContext._jvm
+    print("JVMPID", jvm.java.lang.ProcessHandle.current().pid(), flush=True)
+    builds = {n: functools.partial(qs[n], spark, sf_dir) for n in opts.names}
+    walls: dict[str, list[float]] = {n: [] for n in opts.names}
+    for p, name, s in bench.timed_passes(spark, builds, opts.runs):
+        walls[name].append(s["wall"])
+        print(f"{time.time():.1f} p{p} {name:26s} {s['wall']:7.2f}s", flush=True)
+    for name, ts in walls.items():
         print(
             f"{name}: min={min(ts)} median={statistics.median(ts)} "
             f"runs={ts}",

@@ -378,3 +378,37 @@ def test_unigram_encode_census_matches_distributed(spark):
         max_piece=4, max_word=16, local_threshold=None,
     ).collect()
     assert a == b
+
+
+def test_unigram_fallback_scans_corpus_once(spark):
+    """When the census exceeds local_threshold, the bounded-collect
+    probe and the distributed fit read ONE staged census: building
+    either frame scans the corpus once, not once per consumer."""
+    from pyspark.sql import functions as F
+
+    from etl_orders_to_bq_spark.operators.lm import (
+        unigram_encode,
+        unigram_lm_train,
+    )
+
+    docs = [
+        ("abab abab ab banana bandana",),
+        ("the cat sat on the mat the hat",),
+        ("zq zq zqzq xyxy xy",),
+    ]
+    for build in (unigram_lm_train, unigram_encode):
+        scanned = spark.sparkContext.accumulator(0)
+
+        def tally(text):
+            scanned.add(1)
+            return text
+
+        df = spark.createDataFrame(docs, ["text"]).select(
+            F.udf(tally, "string")("text").alias("text")
+        )
+        build(
+            df, "text", seed_size=12, vocab_size=8, rounds=2,
+            max_piece=3, local_threshold=2,
+        )
+        assert scanned.value == len(docs), build.__name__
+

@@ -63,50 +63,32 @@ def test_registry_is_stalest_verified_first():
     """The driver snapshots a 50-entry prefix of queries(), so the
     registry must order entries stalest-first: never-driver-verified
     entries lead (new work always gets rows), then NON-DECREASING by
-    the round each entry was last verified in — bounding every query's
+    the round each entry was last verified in over the FULL
+    CORRECTNESS_r*.json history — bounding every query's
     re-verification age to ~|registry|/50 rounds instead of letting
-    r1-r2 verifications go stale forever. scripts/registry_rotate.py
-    regenerates the ordering; this test pins it."""
+    r1-r2 verifications go stale forever. queries() derives this order
+    from the records; this test pins the derivation."""
     here = os.path.dirname(os.path.abspath(entry.__file__))
-    by_round: dict[int, set[str]] = {}
+    last: dict[str, int] = {}
     for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
         rnd = int(
             os.path.basename(path).removeprefix("CORRECTNESS_r")
             .removesuffix(".json")
         )
-        by_round[rnd] = set(json.load(open(path)))
+        for name in json.load(open(path)):
+            last[name] = max(last.get(name, 0), rnd)
     names = list(entry.queries())
-
-    def drift_at(max_round):
-        last: dict[str, int] = {}
-        for rnd, verified in by_round.items():
-            if rnd > max_round:
-                continue
-            for name in verified:
-                last[name] = max(last.get(name, 0), rnd)
-        rounds = [last.get(n, 0) for n in names]  # 0 = never verified
-        for i in range(1, len(rounds)):
-            if rounds[i] < rounds[i - 1]:
-                return i, rounds
-        return None, rounds
-
-    # The driver writes CORRECTNESS_r{N}.json AFTER the builder's last
-    # commit of round N, so at judge time there is always one more
-    # round file than the last rotation could have seen. Accept an
-    # ordering consistent with EITHER the full history (just rotated)
-    # or the history minus the newest file (rotated last round, the
-    # newest file landed afterwards) — both mean rotation is current.
-    newest = max(by_round)
-    drift_full, rounds_full = drift_at(newest)
-    drift_prev, _ = drift_at(newest - 1)
-    assert drift_full is None or drift_prev is None, (
-        f"registry not stalest-verified-first even ignoring "
-        f"CORRECTNESS_r{newest:02d}.json: {names[drift_full]!r} (last "
-        f"verified r{rounds_full[drift_full]}) sits after "
-        f"{names[drift_full - 1]!r} (r{rounds_full[drift_full - 1]}); "
-        f"run scripts/registry_rotate.py"
+    rounds = [last.get(n, 0) for n in names]  # 0 = never verified
+    drift = next(
+        (i for i in range(1, len(rounds)) if rounds[i] < rounds[i - 1]),
+        None,
     )
-    rounds = rounds_full
+    assert drift is None, (
+        f"registry not stalest-verified-first: {names[drift]!r} (last "
+        f"verified r{rounds[drift]}) sits after {names[drift - 1]!r} "
+        f"(r{rounds[drift - 1]}); queries() must sort by the last "
+        f"CORRECTNESS_r*.json round each name appears in"
+    )
     unverified = sum(1 for r in rounds if r == 0)
     # One driver snapshot verifies 50; never-verified entries always
     # lead, so a backlog > 50 simply drains over ceil(n/50) rounds —
@@ -118,3 +100,20 @@ def test_registry_is_stalest_verified_first():
         "work would wait 3+ rounds for its first verification; slow "
         "down additions or split the round"
     )
+
+
+def test_registry_order_without_records_is_definition_order(tmp_path):
+    """A copy of the module with no CORRECTNESS_r*.json next to it
+    still loads its full registry, in q_* definition order."""
+    import importlib.util
+    import shutil
+
+    shutil.copy(entry.__file__, tmp_path / "entry_copy.py")
+    spec = importlib.util.spec_from_file_location(
+        "entry_copy", tmp_path / "entry_copy.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    defined = [n[2:] for n in vars(mod) if n.startswith("q_")]
+    assert list(mod.queries()) == defined
+    assert set(defined) == set(entry.queries())

@@ -29,6 +29,7 @@ from ..functions.vectors import (
     l2_norm,
     lit_doubles,
 )
+from .staging import stage
 
 
 def _query_cosine(vec_col: str, query_vec: list[float], method: str):
@@ -1233,7 +1234,7 @@ def dbscan_labels(
         .filter(F.col("__dist") <= float(eps))
         .select("__a", "__b")
     )
-    near = near.localCheckpoint(eager=True)
+    near = stage(near, "dbscan_near")
     # counts cover EVERY point, not just those with an eps-neighbor:
     # a zero-neighbor point still counts itself (__nn = 1), so with
     # min_pts = 1 it is a singleton CORE cluster per classic DBSCAN,

@@ -569,7 +569,6 @@ def adaboost_stumps(
                 F.sum(F.when(~F.col("__p"), F.col("__w")).otherwise(0))
                 .alias("__wn"),
             ),
-            None,
             f"ada_per{t}",
         )
         cum = global_cumsum_before(
@@ -1370,8 +1369,8 @@ def logistic_irls(
             comp.unpersist()
         # every Newton iteration rescans the projected base; persist
         # the 3-column frame once (storage is O(rows * 3 doubles) — at
-        # cluster scale swap for a durable staged parquet, the
-        # shortest_paths checkpoint_path pattern).
+        # cluster scale swap for ``staging.stage`` under a durable
+        # spark.graft.stagingDir).
         base = base.persist()
 
     # ---- per-round plan, built ONCE (r13 opt): every Column below

@@ -253,7 +253,6 @@ def minhash_band_keys(
     bands: int = 4,
     shingle_len: int = 3,
     hash_fn: str = "md5",
-    checkpoint_path: str | None = None,
 ) -> DataFrame:
     """(id, band, bk) rows: each doc's LSH band keys — the PERSISTABLE
     banding artifact. Docs sharing any (band, bk) are near-dup
@@ -272,7 +271,7 @@ def minhash_band_keys(
     # slower at 2 bands). (id, num_hashes minima) is tiny next to the
     # text, so the staged frame is the same "write signatures, then
     # band" shape production dedup uses at scale.
-    sig = stage(sig, checkpoint_path, "minhash_signatures", eager=False)
+    sig = stage(sig, "minhash_signatures", eager=False)
 
     band_structs = []
     for b in range(bands):
@@ -294,7 +293,6 @@ def minhash_lsh_candidates(
     shingle_len: int = 3,
     max_bucket: int = 1000,
     hash_fn: str = "md5",
-    checkpoint_path: str | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via LSH banding.
 
@@ -314,14 +312,12 @@ def minhash_lsh_candidates(
     ``hash_fn="numpy"``/``"xxhash64"`` select the fast signature paths
     for production hash counts (see ``minhash_signature``).
 
-    ``checkpoint_path`` switches signature staging from
-    ``localCheckpoint`` (executor blocks, no fault tolerance) to a
-    durable parquet write+reread under that path — the production
-    "write signatures, then band" shape (see ``staging.stage``).
+    Signatures are staged through ``staging.stage`` (durable parquet
+    under the session's ``spark.graft.stagingDir``) — the production
+    "write signatures, then band" shape.
     """
     exploded = minhash_band_keys(
-        df, text_col, id_col, num_hashes, bands, shingle_len, hash_fn,
-        checkpoint_path,
+        df, text_col, id_col, num_hashes, bands, shingle_len, hash_fn
     )
 
     buckets = (
@@ -701,7 +697,7 @@ def ngram_containment(
         # so a duplicated pair would multiply n_common — dedup here,
         # not in the caller's contract
         pairs = pairs.select("id_a", "id_b").distinct()
-    pairs = pairs.localCheckpoint(eager=False)
+    pairs = stage(pairs, "ngc_pairs", eager=False)
     cand_ids = (
         pairs.select(F.col("id_a").alias(id_col))
         .unionByName(pairs.select(F.col("id_b").alias(id_col)))
@@ -770,7 +766,7 @@ def _containment_exploded(
     distinct per doc, so kept rows = |A ∩ B|); the count groupBy is
     map-side combinable. No row ever holds more than one shingle.
     """
-    sh = sh.localCheckpoint(eager=False)  # shingle CPU paid once
+    sh = stage(sh, "ngc_shingles", eager=False)  # shingle CPU paid once
     counts = sh.select(
         F.col(id_col), F.size("__sh").alias("__n")
     )

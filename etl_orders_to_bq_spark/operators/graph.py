@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .staging import stage
+from .staging import stage, staging_dir
 
 # Iterative operators run on CONTRACTED graphs (nation-level rollups,
 # LSH candidate pairs after banding) whose size is set by the key
@@ -40,8 +40,8 @@ from .staging import stage
 # semantics are preserved bit-for-bit (integer label math for
 # CC; the identical update formula for PageRank, whose 6dp-rounded
 # gate output is insensitive to float summation order). Pass
-# local_threshold=None (or set a checkpoint_path, which implies the
-# durable-staging contract) to force the distributed path.
+# local_threshold=None (or set spark.graft.stagingDir, the durable
+# staging contract of staging.py) to force the distributed path.
 SMALL_GRAPH_EDGES = 1 << 16
 
 
@@ -83,7 +83,6 @@ def connected_components(
     dst: str = "id_b",
     max_iter: int = 20,
     on_exhaustion: str = "raise",
-    checkpoint_path: str | None = None,
     local_threshold: int | None = SMALL_GRAPH_EDGES,
 ) -> DataFrame:
     """Resolve undirected edges into components.
@@ -99,10 +98,10 @@ def connected_components(
     components, so the default is to ``raise``; pass
     ``on_exhaustion="warn"`` to get the partial labels anyway.
 
-    ``checkpoint_path`` stages the edge set and per-round labels as
-    durable parquet instead of executor-block ``localCheckpoint`` —
-    survives executor loss on a real cluster (see ``staging.stage``);
-    it also disables the small-graph driver-local fast path (see
+    The edge set and per-round labels go through ``staging.stage``, so
+    the session's ``spark.graft.stagingDir`` makes them durable parquet
+    that survives executor loss on a real cluster; that setting also
+    disables the small-graph driver-local fast path (see
     ``SMALL_GRAPH_EDGES``), as does ``local_threshold=None``.
     """
     if on_exhaustion not in ("raise", "warn"):
@@ -115,9 +114,9 @@ def connected_components(
     # and without this the whole upstream pipeline that produced the
     # edges (e.g. the LSH candidate chain) re-executes per round —
     # measured 3-4x slower on the sf0.1 dedup-cluster path
-    und = stage(und, checkpoint_path, "cc_edges")
+    und = stage(und, "cc_edges")
 
-    if checkpoint_path is None and local_threshold is not None:
+    if staging_dir(edges.sparkSession) is None and local_threshold is not None:
         # one bounded collect over the already-staged blocks decides AND
         # fetches: threshold+1 rows (~1 MB) either proves the graph is
         # small enough or is discarded for the distributed path
@@ -155,11 +154,7 @@ def connected_components(
         # without staging, Catalyst executes the hop join twice per
         # round (no CSE across join inputs) — a lazy checkpoint halves
         # the per-round work (measured ~1.3x faster corpus capstone).
-        # On the durable path this must ALSO go through stage(): a
-        # localCheckpoint here would leave every round's first half
-        # executor-resident, so one lost executor mid-round could still
-        # fail the "durable" run.
-        hopped = stage(hopped, checkpoint_path, f"cc_hopped_r{rnd}", eager=False)
+        hopped = stage(hopped, f"cc_hopped_r{rnd}", eager=False)
         # pointer-doubling step: label <- label(label). Labels are node
         # ids and every node has a labels row, so a self-join on
         # label = id compresses chains exponentially (the large-star
@@ -180,7 +175,7 @@ def connected_components(
                 ).alias("changed"),
             )
         )
-        new_labels = stage(new_labels, checkpoint_path, f"cc_labels_r{rnd}")
+        new_labels = stage(new_labels, f"cc_labels_r{rnd}")
         # early-exit on the already-materialized frame: isEmpty pulls at
         # most one row from the staged blocks, no full count
         if new_labels.filter(F.col("changed")).isEmpty():
@@ -217,7 +212,6 @@ def triangle_count(
     edges: DataFrame,
     src: str = "a",
     dst: str = "b",
-    checkpoint_path: str | None = None,
 ) -> DataFrame:
     """Per-node triangle participation counts: (node, n_triangles).
 
@@ -232,8 +226,8 @@ def triangle_count(
     comparator.
 
     The oriented edge set is staged once (it feeds all three join
-    sides); ``checkpoint_path`` makes that durable parquet like the
-    other graph operators. Shuffles carry (int, int) pairs only.
+    sides) through ``staging.stage``, like the other graph
+    operators. Shuffles carry (int, int) pairs only.
 
     No counterpart in the reference engine (SURVEY.md §2.2 — no joins
     beyond the single left-equi).
@@ -245,7 +239,6 @@ def triangle_count(
         )
         .filter(F.col("a") != F.col("b"))
         .distinct(),
-        checkpoint_path,
         "tri_edges",
     )
     e1 = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
@@ -303,7 +296,6 @@ def pagerank(
     iterations: int = 10,
     damping: float = 0.85,
     tol: float | None = None,
-    checkpoint_path: str | None = None,
     local_threshold: int | None = SMALL_GRAPH_EDGES,
     stage_every: int = 5,
 ) -> DataFrame:
@@ -325,11 +317,10 @@ def pagerank(
     unset to keep the one-job lazy schedule when the iteration count is
     the contract (e.g. oracle parity).
 
-    ``checkpoint_path`` stages the static edge set, node list, and
-    per-round ranks as durable parquet instead of executor-block
-    ``localCheckpoint`` — survives executor loss on a real cluster
-    (see ``staging.stage``), same knob as ``connected_components``.
-    Setting it (or ``local_threshold=None``) also forces the
+    The static edge set, node list, and per-round ranks go through
+    ``staging.stage`` (durable parquet under the session's
+    ``spark.graft.stagingDir``, as for ``connected_components``).
+    That setting (or ``local_threshold=None``) also forces the
     distributed path; otherwise a contracted graph at or under
     ``local_threshold`` staged edges iterates driver-locally in numpy
     with the identical formula (see ``SMALL_GRAPH_EDGES``).
@@ -346,10 +337,10 @@ def pagerank(
     """
     e = stage(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct(),
-        checkpoint_path,
         "pr_edges",
     )
-    if checkpoint_path is None and local_threshold is not None:
+    durable = staging_dir(edges.sparkSession) is not None
+    if not durable and local_threshold is not None:
         head = e.limit(local_threshold + 1).collect()
         if len(head) <= local_threshold:
             return _pagerank_local(
@@ -360,13 +351,11 @@ def pagerank(
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))
         .distinct(),
-        checkpoint_path,
         "pr_nodes",
     )
     n = nodes.count()
     ed = stage(
         e.join(e.groupBy("src").agg(F.count("*").alias("outdeg")), "src"),
-        checkpoint_path,
         "pr_outdeg",
     )
 
@@ -400,13 +389,11 @@ def pagerank(
         # parquet per round by design.
         if (
             tol is not None
-            or checkpoint_path is not None
+            or durable
             or (rnd + 1) % max(stage_every, 1) == 0
             or rnd == iterations - 1
         ):
-            new_ranks = stage(
-                new_ranks, checkpoint_path, f"pr_ranks_r{rnd}", eager=False
-            )
+            new_ranks = stage(new_ranks, f"pr_ranks_r{rnd}", eager=False)
         if tol is not None:
             prev = ranks.select("id", F.col("rank").alias("__prev"))
             delta = (
@@ -454,7 +441,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     rounds: int = 4,
-    checkpoint_path: str | None = None,
     local_threshold: int | None = SMALL_GRAPH_EDGES,
     stage_every: int = 5,
     until_converged: bool = False,
@@ -491,8 +477,8 @@ def label_propagation(
       execution);
     - contracted graphs at or under ``local_threshold`` staged edges
       iterate driver-locally (see ``SMALL_GRAPH_EDGES``); pass
-      ``local_threshold=None`` or a ``checkpoint_path`` to pin the
-      distributed loop.
+      ``local_threshold=None`` or set ``spark.graft.stagingDir`` to
+      pin the distributed loop.
 
     No counterpart in the reference engine (SURVEY.md §2.2 — no joins
     beyond one left-equi, no iteration).
@@ -505,10 +491,10 @@ def label_propagation(
             .filter(F.col("src") != F.col("dst"))
         )
         .distinct(),
-        checkpoint_path,
         "lpa_edges",
     )
-    if checkpoint_path is None and local_threshold is not None:
+    durable = staging_dir(edges.sparkSession) is not None
+    if not durable and local_threshold is not None:
         head = sym.limit(local_threshold + 1).collect()
         if len(head) <= local_threshold:
             return _lpa_local(
@@ -537,13 +523,11 @@ def label_propagation(
         )
         if (
             until_converged
-            or checkpoint_path is not None
+            or durable
             or (rnd + 1) % max(stage_every, 1) == 0
             or rnd == rounds - 1
         ):
-            new_labels = stage(
-                new_labels, checkpoint_path, f"lpa_labels_r{rnd}", eager=False
-            )
+            new_labels = stage(new_labels, f"lpa_labels_r{rnd}", eager=False)
         if until_converged and rnd < rounds - 1:
             # existence probe on the two materialized round frames: any
             # node whose label moved? (limit(1) — never a full count)
@@ -567,7 +551,6 @@ def shortest_paths(
     dst: str = "dst",
     directed: bool = False,
     max_hops: int = 20,
-    checkpoint_path: str | None = None,
 ) -> DataFrame:
     """Single-source unweighted shortest path lengths via BFS frontier
     expansion. Returns ``(node, distance)`` for every node reachable
@@ -577,8 +560,7 @@ def shortest_paths(
     edge table plus an anti-join against already-visited nodes — the
     frontier (not the whole graph) drives the shuffle, so late rounds
     over a shrinking frontier are cheap. Rounds are staged
-    (``localCheckpoint``, or durable parquet under
-    ``checkpoint_path``) to truncate lineage; the loop exits as soon
+    (``staging.stage``) to truncate lineage; the loop exits as soon
     as a frontier comes back empty.
 
     At 100 TB scale this is the textbook Pregel BFS mapped onto
@@ -590,13 +572,11 @@ def shortest_paths(
         e = e.unionByName(
             edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
         )
-    e = stage(e.filter(F.col("a") != F.col("b")).distinct(),
-              checkpoint_path, "sp_edges")
+    e = stage(e.filter(F.col("a") != F.col("b")).distinct(), "sp_edges")
 
     spark = edges.sparkSession
     frontier = stage(
         spark.createDataFrame([(int(source), 0)], "node long, distance int"),
-        checkpoint_path,
         "sp_f0",
     )
     visited = [frontier]
@@ -611,7 +591,7 @@ def shortest_paths(
             .join(seen.select("node"), "node", "left_anti")
             .withColumn("distance", F.lit(hop))
         )
-        nxt = stage(nxt, checkpoint_path, f"sp_f{hop}")
+        nxt = stage(nxt, f"sp_f{hop}")
         if nxt.isEmpty():
             break
         visited.append(nxt)
@@ -664,7 +644,6 @@ def kcore(
     dst: str = "dst",
     max_rounds: int = 200,
     on_exhaustion: str = "raise",
-    checkpoint_path: str | None = None,
     local_threshold: int | None = 1 << 20,
 ) -> DataFrame:
     """The k-core of an undirected graph: the maximal subgraph where
@@ -695,9 +674,9 @@ def kcore(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    und = stage(und, checkpoint_path, "kcore_edges")
+    und = stage(und, "kcore_edges")
 
-    if checkpoint_path is None and local_threshold is not None:
+    if staging_dir(edges.sparkSession) is None and local_threshold is not None:
         # peeling runs on CONTRACTED graphs (the gate/bench graph's
         # node domain is mod-1000, so its edge count is bounded no
         # matter the input scale); threshold is higher than
@@ -728,7 +707,7 @@ def kcore(
             und.join(keep, "a", "left_semi")
             .join(keep.withColumnRenamed("a", "b"), "b", "left_semi")
         )
-        und = stage(und, checkpoint_path, f"kcore_e{rnd}")
+        und = stage(und, f"kcore_e{rnd}")
         # survivors of this round may lose further neighbors' edges, so
         # next round's population is counted from its own degree table;
         # but the upper bound for the convergence test is this round's
@@ -759,7 +738,6 @@ def adamic_adar(
     max_degree: int | None = None,
     include_existing: bool = False,
     ndigits: int = 6,
-    checkpoint_path: str | None = None,
 ) -> DataFrame:
     """Adamic-Adar link-prediction scores for every 2-hop node pair:
 
@@ -798,7 +776,6 @@ def adamic_adar(
             .filter(F.col("a") != F.col("b"))
         )
         .distinct(),
-        checkpoint_path,
         "aa_edges",
     )
     deg = sym.groupBy("a").agg(F.count("*").alias("__deg"))
@@ -861,7 +838,6 @@ def neighbor_jaccard(
     max_degree: int | None = None,
     include_existing: bool = False,
     ndigits: int = 6,
-    checkpoint_path: str | None = None,
     broadcast_degrees: bool = False,
 ) -> DataFrame:
     """Neighborhood-Jaccard link prediction for 2-hop pairs:
@@ -896,7 +872,6 @@ def neighbor_jaccard(
             .filter(F.col("a") != F.col("b"))
         )
         .distinct(),
-        checkpoint_path,
         "nj_edges",
     )
     deg = sym.groupBy("a").agg(F.count("*").alias("__deg"))
@@ -954,7 +929,6 @@ def hits_scores(
     dst: str = "dst",
     rounds: int = 2,
     ndigits: int = 6,
-    checkpoint_path: str | None = None,
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999, public literature)
     over a directed edge list, fixed-round and oracle-exact.
@@ -985,7 +959,6 @@ def hits_scores(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
         .distinct(),
-        checkpoint_path,
         "hits_edges",
     )
     # staged once: nodes feeds two left-joins per round plus the final
@@ -994,7 +967,6 @@ def hits_scores(
         e.select(F.col("a").alias("id"))
         .unionByName(e.select(F.col("b").alias("id")))
         .distinct(),
-        checkpoint_path,
         "hits_nodes",
     )
     hub = nodes.withColumn("hub", F.lit(1).cast("long"))
@@ -1016,8 +988,8 @@ def hits_scores(
         hub = nodes.join(hub, "id", "left").select(
             "id", F.coalesce("hub", F.lit(0)).alias("hub")
         )
-        hub = stage(hub, checkpoint_path, "hits_hub")
-        auth = stage(auth, checkpoint_path, "hits_auth")
+        hub = stage(hub, "hits_hub")
+        auth = stage(auth, "hits_auth")
     mx = (
         auth.agg(F.max("auth").alias("ma"))
         .crossJoin(hub.agg(F.max("hub").alias("mh")))
@@ -1117,7 +1089,6 @@ def local_clustering(
     src: str = "src",
     dst: str = "dst",
     max_degree: int | None = None,
-    checkpoint_path: str | None = None,
     ndigits: int = 6,
 ) -> DataFrame:
     """Per-node local clustering coefficient (Watts & Strogatz 1998,
@@ -1149,7 +1120,6 @@ def local_clustering(
             .filter(F.col("a") != F.col("b"))
         )
         .distinct(),
-        checkpoint_path,
         "lcc_edges",
     )
     deg = sym.groupBy("a").agg(F.count("*").alias("degree"))
@@ -1475,7 +1445,6 @@ def k_truss(
     dst: str = "dst",
     max_rounds: int = 100,
     on_exhaustion: str = "raise",
-    checkpoint_path: str | None = None,
     local_threshold: int | None = 1 << 20,
 ) -> DataFrame:
     """The k-truss of an undirected graph: the maximal subgraph where
@@ -1499,11 +1468,11 @@ def k_truss(
     scale. Mass-removal rounds (removed > ~1/4 of edges — dense
     graphs shedding most of the graph at once) fall back to a full
     survivor recount instead: censusing the small kept set is
-    cheaper than enumerating the huge removed set's triangles. Convergence costs one count per round; each round's
-    support frame is staged (localCheckpoint or durable parquet via
-    ``checkpoint_path`` — the kcore discipline). Peeling removes
-    >= 1 edge per non-final round, so rounds <= |peeled edges|;
-    cascade chains can legitimately be long, hence
+    cheaper than enumerating the huge removed set's triangles.
+    Convergence costs one count per round; each round's support frame
+    is staged (``staging.stage`` — the kcore discipline). Peeling
+    removes >= 1 edge per non-final round, so rounds <= |peeled
+    edges|; cascade chains can legitimately be long, hence
     ``max_rounds``/``on_exhaustion`` (same contract as kcore: the
     exhausted result is a SUPERSET of the true truss, so the
     default raises).
@@ -1522,7 +1491,6 @@ def k_truss(
         edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct(),
-        checkpoint_path,
         "truss_edges",
     )
 
@@ -1555,7 +1523,7 @@ def k_truss(
             .agg(F.count("*").alias("support"))
         )
 
-    if checkpoint_path is None and local_threshold is not None:
+    if staging_dir(edges.sparkSession) is None and local_threshold is not None:
         # truss peeling runs on CONTRACTED graphs (the gate/bench
         # fixture's node domain is mod-1000, so its distinct edge
         # count is bounded no matter the input scale); wedge work per
@@ -1566,8 +1534,8 @@ def k_truss(
         # typically large enough that the distributed peel's
         # parallelism beats one process's latency-bound probes —
         # measured at 3.5M edges / 810M wedges: ~150 s distributed on
-        # local[16] vs ~190 s for the vectorized numpy peel); checkpoint_path disables the fast path (the
-        # kcore discipline), and pytest pins local == distributed.
+        # local[16] vs ~190 s for the vectorized numpy peel); durable
+        # staging disables it (kcore discipline), tests pin local == dist.
         head = e.limit(local_threshold + 1).toPandas()
         if len(head) <= local_threshold:
             # id-range guard (advisor r11): the local peel packs edges
@@ -1625,7 +1593,6 @@ def k_truss(
         e.join(_support(e), ["a", "b"], "left").select(
             "a", "b", F.coalesce("support", F.lit(0)).alias("support")
         ),
-        checkpoint_path,
         "truss_sup0",
     )
     n_cur = sup.count()
@@ -1652,7 +1619,6 @@ def k_truss(
                     "b",
                     F.coalesce("support", F.lit(0)).alias("support"),
                 ),
-                checkpoint_path,
                 f"truss_sup{rnd + 1}",
             )
             continue
@@ -1707,7 +1673,6 @@ def k_truss(
                 (F.col("support") - F.coalesce("__dec", F.lit(0)))
                 .alias("support"),
             ),
-            checkpoint_path,
             f"truss_sup{rnd + 1}",
         )
     if on_exhaustion == "return":
@@ -1775,7 +1740,6 @@ def personalized_pagerank(
     seed_col: str = "id",
     iterations: int = 10,
     damping: float = 0.85,
-    checkpoint_path: str | None = None,
     local_threshold: int | None = SMALL_GRAPH_EDGES,
     stage_every: int = 5,
 ) -> DataFrame:
@@ -1806,11 +1770,11 @@ def personalized_pagerank(
         edges.select(
             F.col(src).alias("src"), F.col(dst).alias("dst")
         ).distinct(),
-        checkpoint_path,
         "ppr_edges",
     )
     sd = seeds.select(F.col(seed_col).alias("id")).distinct()
-    if checkpoint_path is None and local_threshold is not None:
+    durable = staging_dir(edges.sparkSession) is not None
+    if not durable and local_threshold is not None:
         head = e.limit(local_threshold + 1).collect()
         if len(head) <= local_threshold:
             node_set = {x for r in head for x in (r["src"], r["dst"])}
@@ -1828,12 +1792,10 @@ def personalized_pagerank(
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))
         .distinct(),
-        checkpoint_path,
         "ppr_nodes",
     )
     seeded = stage(
         nodes.join(sd.withColumn("__seed", F.lit(1)), "id", "left"),
-        checkpoint_path,
         "ppr_seeded",
     )
     m = seeded.filter(F.col("__seed").isNotNull()).count()
@@ -1842,7 +1804,6 @@ def personalized_pagerank(
     ).otherwise(F.lit(0.0))
     ed = stage(
         e.join(e.groupBy("src").agg(F.count("*").alias("outdeg")), "src"),
-        checkpoint_path,
         "ppr_outdeg",
     )
     ranks = seeded.select("id", reset.alias("rank"), "__seed")
@@ -1866,14 +1827,11 @@ def personalized_pagerank(
             "__seed",
         )
         if (
-            checkpoint_path is not None
+            durable
             or (rnd + 1) % max(stage_every, 1) == 0
             or rnd == iterations - 1
         ):
-            new_ranks = stage(
-                new_ranks, checkpoint_path, f"ppr_ranks_r{rnd}",
-                eager=False,
-            )
+            new_ranks = stage(new_ranks, f"ppr_ranks_r{rnd}", eager=False)
         ranks = new_ranks
     return ranks.select("id", "rank")
 
@@ -1885,7 +1843,6 @@ def closeness_centrality(
     dst: str = "dst",
     directed: bool = False,
     max_hops: int = 8,
-    checkpoint_path: str | None = None,
     ndigits: int = 6,
 ) -> DataFrame:
     """Exact closeness and harmonic centrality of the ``k_sources``
@@ -1926,7 +1883,6 @@ def closeness_centrality(
             & F.col("b").isNotNull()
             & (F.col("a") != F.col("b"))
         ).distinct(),
-        checkpoint_path,
         "cc_edges",
     )
     deg = (
@@ -1941,7 +1897,6 @@ def closeness_centrality(
         spark.createDataFrame(
             [(s, s, 0) for s in srcs], "s long, node long, dist int"
         ),
-        checkpoint_path,
         "cc_f0",
     )
     visited = frontier
@@ -1955,7 +1910,7 @@ def closeness_centrality(
             )
             .withColumn("dist", F.lit(hop))
         )
-        nxt = stage(nxt, checkpoint_path, f"cc_f{hop}")
+        nxt = stage(nxt, f"cc_f{hop}")
         if nxt.limit(1).count() == 0:
             break
         # the union of already-staged frontiers needs no staging of its

@@ -252,7 +252,6 @@ def bpe_encode(
     text_col: str = "text",
     id_col: str = "doc_id",
     eow: str = "</w>",
-    checkpoint_path: str | None = None,
     ndigits: int = 6,
 ) -> DataFrame:
     """Apply a learned BPE merge list to a corpus — the inference half
@@ -286,7 +285,6 @@ def bpe_encode(
             vocab.withColumn(
                 "syms", _apply_bpe_merge(F.col("syms"), a, b)
             ),
-            checkpoint_path,
             f"bpe_enc_v{i + 1}",
             eager=False,
         )
@@ -322,7 +320,6 @@ def learn_bpe_merges(
     df: DataFrame,
     n_merges: int,
     text_col: str = "text",
-    checkpoint_path: str | None = None,
 ) -> list[tuple[str, str, int]]:
     """Learn the first ``n_merges`` BPE merges from a corpus (Sennrich
     et al. 2016): each round, count adjacent symbol pairs over the
@@ -334,13 +331,12 @@ def learn_bpe_merges(
     Scale: the corpus is scanned ONCE (word count); every round after
     that runs over the distinct-word table — one vocabulary-sized
     groupBy plus a 1-row driver collect per round. The re-merged
-    vocabulary is staged per round (``localCheckpoint``, or durable
-    parquet under ``checkpoint_path``) so lineage doesn't stack
-    ``n_merges`` folds deep.
+    vocabulary is staged per round (``staging.stage``) so lineage
+    doesn't stack ``n_merges`` folds deep.
     """
     from .staging import stage
 
-    vocab = stage(bpe_word_symbols(df, text_col), checkpoint_path, "bpe_v0")
+    vocab = stage(bpe_word_symbols(df, text_col), "bpe_v0")
     merges: list[tuple[str, str, int]] = []
     for rnd in range(n_merges):
         top = (
@@ -355,7 +351,6 @@ def learn_bpe_merges(
         merges.append((a, b, n))
         vocab = stage(
             vocab.withColumn("syms", _apply_bpe_merge(F.col("syms"), a, b)),
-            checkpoint_path,
             f"bpe_v{rnd + 1}",
         )
     return merges
@@ -473,7 +468,8 @@ def source_kl_divergence(
     # rollup of it — without the staging, three independent consumers
     # would re-tokenize the corpus three times
     per_sw = stage(
-        toks.groupBy(group_col, "w").agg(F.count("*").alias("__c_sw"))
+        toks.groupBy(group_col, "w").agg(F.count("*").alias("__c_sw")),
+        "kl_source_words",
     )
     vocab = per_sw.groupBy("w").agg(F.sum("__c_sw").alias("__c_all"))
     totals_s = per_sw.groupBy(group_col).agg(F.sum("__c_sw").alias("__t_s"))
@@ -2166,7 +2162,6 @@ def _unigram_words_census(df: DataFrame, text_col: str, mw: int):
         .agg(F.count("*").alias("__n"))
         .filter((F.length("__w") <= mw) & (F.length("__w") >= 1))
         .withColumn("__len", F.length("__w")),
-        None,
         "uni_words",
     )
 
@@ -2321,7 +2316,6 @@ def _unigram_fit(
         .withColumn(
             "__piece", F.substring("__w", F.col("__pos"), F.col("__l"))
         ),
-        None,
         "uni_cand",
     )
     chars = cand.filter(F.col("__l") == 1).select("__piece").distinct()
@@ -2336,7 +2330,6 @@ def _unigram_fit(
             chars.join(seed.select("__piece"), "__piece", "left_anti")
             .select("__piece", F.lit(1).cast("long").alias("__c"))
         ),
-        None,
         "uni_vocab0",
     )
     for rnd in range(rounds):
@@ -2359,7 +2352,6 @@ def _unigram_fit(
                     top.select("__piece"), "__piece", "left_anti"
                 ).select("__piece", F.lit(1).cast("long").alias("__c"))
             ),
-            None,
             f"uni_vocab{rnd + 1}",
         )
     return cand, vocab

@@ -3616,7 +3616,7 @@ def _log_factorial_table(
     # callers join this table 2-4 times (one branch per factorial in
     # the tail term); stage once so the range shuffle + offsets
     # collect run once, not per branch
-    return stage(lf, None, "lf_table")
+    return stage(lf, "lf_table")
 
 
 def fisher_exact(
@@ -4448,7 +4448,6 @@ def fligner_killeen(
         u.groupBy("__g", "__u").agg(
             F.count("*").cast("long").alias("__m")
         ),
-        None,
         "fk_gu",
     )
     uc = gu.groupBy("__u").agg(

@@ -86,7 +86,7 @@ def bradley_terry(
     # per fit at sf0.1, ~2.1 s -> ~0.8 s construction)
     from .staging import stage
 
-    directed = stage(directed, None, "bt_directed")
+    directed = stage(directed, "bt_directed")
     totals = directed.groupBy("__i").agg(
         F.sum("__n").alias("n_comparisons"),
         F.sum("__w").alias("n_wins"),
@@ -94,7 +94,7 @@ def bradley_terry(
     cur = totals.select(
         "__i", F.lit(1 * m1).cast("long").alias("__s")
     )
-    for _ in range(int(rounds)):
+    for rnd in range(int(rounds)):
         # denom_i = sum_j n_ij / (w_i + w_j), folded in OPPONENT order
         joined = (
             directed.join(
@@ -156,7 +156,7 @@ def bradley_terry(
         # the iterate is k rows — checkpoint per round (the staging
         # discipline for iterative operators) or the join lineage
         # re-derives every earlier round inside every later one
-        cur = cur.localCheckpoint()
+        cur = stage(cur, f"bt_strength_r{rnd}")
     return (
         totals.join(cur, "__i")
         .select(

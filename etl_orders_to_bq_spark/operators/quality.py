@@ -981,7 +981,6 @@ def hbos_outliers(
     # of construction-time jobs.
     binned = stage(
         binned.select("__id", "__f", "__bin"),
-        None,
         "hbos_binned",
         eager=False,
     )

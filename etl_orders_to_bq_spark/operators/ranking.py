@@ -42,7 +42,6 @@ def _global_row_number_with_total(
     order_cols: list,
     num_partitions: int | None,
     out_col: str,
-    checkpoint_path: str | None,
 ) -> tuple[DataFrame, int]:
     """Shared core: the numbered frame plus the total row count (the
     prefix-sum accumulator — already known driver-side, so callers
@@ -54,7 +53,6 @@ def _global_row_number_with_total(
         df.repartitionByRange(n, *cols).withColumn(
             "__pid", F.spark_partition_id()
         ),
-        checkpoint_path,
         "ranked_input",
     )
     counts = {
@@ -91,18 +89,15 @@ def global_row_number(
     order_cols: list,
     num_partitions: int | None = None,
     out_col: str = "rn",
-    checkpoint_path: str | None = None,
 ) -> DataFrame:
     """Append exact 1-based global row numbers under the total order
     given by ``order_cols`` (Column expressions or names; include a
     unique tie-break column — equal keys across a range boundary would
-    otherwise make the numbering partition-dependent).
-
-    ``checkpoint_path`` stages the ranged frame as durable parquet
-    (``staging.stage``) instead of executor-block localCheckpoint —
-    same fault-tolerance knob as the iterative graph operators."""
+    otherwise make the numbering partition-dependent). The ranged
+    frame is staged through ``staging.stage``, like the iterative
+    graph operators."""
     out, _ = _global_row_number_with_total(
-        df, order_cols, num_partitions, out_col, checkpoint_path
+        df, order_cols, num_partitions, out_col
     )
     return out
 
@@ -113,7 +108,6 @@ def global_cumsum_before(
     value_col: str | list,
     num_partitions: int | None = None,
     out_col: str | list = "cum_before",
-    checkpoint_path: str | None = None,
 ) -> DataFrame:
     """Exact running sum of ``value_col`` over all rows STRICTLY
     BEFORE the current row in the total order of ``order_cols`` —
@@ -156,7 +150,6 @@ def global_cumsum_before(
         df.repartitionByRange(n, *cols).withColumn(
             "__pid", F.spark_partition_id()
         ),
-        checkpoint_path,
         "cumsum_input",
     )
     # bounded collect: one (pid, sums...) row per partition
@@ -204,7 +197,6 @@ def scalable_ntile(
     n_buckets: int,
     num_partitions: int | None = None,
     out_col: str = "ntile",
-    checkpoint_path: str | None = None,
 ) -> DataFrame:
     """Exact ``ntile(n)`` semantics without a global window.
 
@@ -214,7 +206,7 @@ def scalable_ntile(
     partition-parallel; the oracle-parity gate (`decile_report`)
     verifies equality with the window ntile."""
     ranked, total = _global_row_number_with_total(
-        df, order_cols, num_partitions, "__rn", checkpoint_path
+        df, order_cols, num_partitions, "__rn"
     )
     q, r = divmod(total, n_buckets)
     rn = F.col("__rn")
@@ -233,7 +225,6 @@ def shard_plan(
     df: DataFrame,
     key_cols: list,
     num_shards: int,
-    checkpoint_path: str | None = None,
 ) -> DataFrame:
     """Plan a balanced range-sharding of ``df`` on ``key_cols``: the
     boundary table a writer (``sinks.write_range_sorted``) or a
@@ -260,7 +251,6 @@ def shard_plan(
         key_cols,
         None,
         "__rn",
-        checkpoint_path,
     )
     names = [
         c if isinstance(c, str) else ranked.select(c).columns[0]
@@ -456,7 +446,7 @@ def median_ci(
         F.col(value_col).alias("__v")
     )
     ranked, n = _global_row_number_with_total(
-        vals, ["__v"], num_partitions, "__rn", None
+        vals, ["__v"], num_partitions, "__rn"
     )
     spark = df.sparkSession
     if n == 0:
@@ -547,7 +537,6 @@ def curriculum_order(
     order_cols: list,
     n_buckets: int = 10,
     num_partitions: int | None = None,
-    checkpoint_path: str | None = None,
 ) -> DataFrame:
     """Curriculum interleave: difficulty-tile the corpus by
     ``order_cols`` (ascending = easiest first), then emit a
@@ -574,7 +563,7 @@ def curriculum_order(
     function of q, r, so ``cycle = rn - start`` is a projection).
     """
     ranked, total = _global_row_number_with_total(
-        df, order_cols, num_partitions, "__rn", checkpoint_path
+        df, order_cols, num_partitions, "__rn"
     )
     q, r = divmod(total, n_buckets)
     rn = F.col("__rn")

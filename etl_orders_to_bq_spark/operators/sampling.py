@@ -52,7 +52,7 @@ def hash_negatives(
     )
     # stage once: the rank window otherwise re-executes for the count
     # job AND both sides of the resolve join (three global sorts)
-    ranked = stage(ranked, None, "neg_ranks")
+    ranked = stage(ranked, "neg_ranks")
     n = ranked.count()
     if n < 2:
         raise ValueError("need at least 2 distinct ids to draw negatives")

@@ -279,7 +279,6 @@ def semdedup_keep(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_cluster: int = 1_000_000,
-    checkpoint_path: str | None = None,
     pair_method: str = "grouped",
     assign_method: str = "auto",
 ) -> DataFrame:
@@ -311,7 +310,7 @@ def semdedup_keep(
     - "numpy" / "column": the join shape — cluster self-join +
       per-pair cosine (Arrow einsum / pure-Column expression) +
       anti-join. The assigned table is then STAGED once
-      (``staging.stage``; ``checkpoint_path`` for durable parquet):
+      (``staging.stage``):
       it feeds three plan branches, and without staging Catalyst
       duplicates the assignment into each — measured 2x slower at the
       gate SF. Kept for plan scrutiny and as the no-grouped-map
@@ -379,7 +378,7 @@ def semdedup_keep(
             _keep, schema=out_schema
         )
 
-    assigned = stage(assigned, checkpoint_path, "semdedup_assigned")
+    assigned = stage(assigned, "semdedup_assigned")
     lower = assigned.select(
         F.col(id_col).alias("__lid"),
         F.col("__v").alias("__lv"),
@@ -543,7 +542,6 @@ def auto_region_assign(
     seeds = _hyperplanes(dim, k, seed)
     probe_assigned = stage(
         assign_ivf_clusters(embeddings, seeds, vec_col, assign_method),
-        None,
         "auto_region_probe",
         eager=False,
     )

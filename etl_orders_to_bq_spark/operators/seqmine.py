@@ -50,7 +50,6 @@ def seq_pattern_support(
     id_col: str,
     min_support: int = 1,
     ndigits: int = 6,
-    checkpoint_path: str | None = None,
 ) -> DataFrame:
     """Support table ``(from_type, to_type, n_users,
     support_ratio)`` for ordered type pairs; ``support_ratio``
@@ -68,7 +67,6 @@ def seq_pattern_support(
             F.min("rn").alias("first_rn"),
             F.max("rn").alias("last_rn"),
         ),
-        checkpoint_path,
         "seq_summary",
         eager=False,
     )

@@ -52,6 +52,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .staging import stage
+
 
 def _tokens(df: DataFrame, text_col: str, id_col: str, ngram: int):
     from ..functions.text import normalize_text, word_ngrams
@@ -117,8 +119,8 @@ def set_similarity_join(
         raise ValueError(f"threshold must be in (0, 1]: {threshold}")
     if strategy not in ("auto", "prefix", "count"):
         raise ValueError(f"unknown strategy: {strategy}")
-    tok = _tokens(df, text_col, id_col, ngram).localCheckpoint(
-        eager=False
+    tok = stage(
+        _tokens(df, text_col, id_col, ngram), "ssj_tokens", eager=False
     )
     sizes = tok.groupBy(id_col).agg(F.count("*").alias("__s"))
     dfreq = tok.groupBy("__t").agg(F.count("*").alias("__df"))
@@ -164,7 +166,8 @@ def set_similarity_join(
     pref = per_doc.select(
         F.col(id_col),
         F.explode(F.slice("__rs", 1, prefix_len)).alias("__pr"),
-    ).localCheckpoint(eager=False)
+    )
+    pref = stage(pref, "ssj_prefix", eager=False)
 
     if strategy == "auto":
         # stage-2 probe (the count plan was NOT obviously cheap):
@@ -268,8 +271,8 @@ def rarity_weighted_jaccard(
     """
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1]: {threshold}")
-    tok = _tokens(df, text_col, id_col, ngram).localCheckpoint(
-        eager=False
+    tok = stage(
+        _tokens(df, text_col, id_col, ngram), "rwj_tokens", eager=False
     )
     wts = tok.groupBy("__t").agg(
         F.floor(

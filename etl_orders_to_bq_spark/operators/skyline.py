@@ -39,7 +39,6 @@ def skyline_2d(
     x_col: str,
     y_col: str,
     num_partitions: int | None = None,
-    checkpoint_path: str | None = None,
 ) -> DataFrame:
     """Rows of ``df`` on the min-min Pareto frontier of
     ``(x_col, y_col)``, original schema preserved.
@@ -54,7 +53,6 @@ def skyline_2d(
         .agg(F.min(y_col).alias("__y"))
         .repartitionByRange(n, F.col(x_col))
         .withColumn("__pid", F.spark_partition_id()),
-        checkpoint_path,
         "skyline_perx",
     )
     # pass 1: per-partition min(y) -> strict-prefix min per partition

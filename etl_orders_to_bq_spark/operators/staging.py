@@ -1,27 +1,54 @@
-"""Durable staging for iterative / reused intermediate frames.
+"""Staging for iterative / reused intermediate frames; :func:`stage` is
+the package's only staging point.
 
 Iterative operators (LSH banding, connected components, PageRank) must
 materialize an intermediate once and reuse it across rounds — otherwise
 Catalyst re-executes the producing pipeline per round and the unrolled
-plan grows without bound. Two staging strategies:
+plan grows without bound. The strategy is one session setting,
+``spark.graft.stagingDir``, read here (:func:`staging_dir`) and nowhere
+else:
 
-- ``localCheckpoint``: stores RDD blocks on executors. Fast (no
-  serialization to a filesystem), fine on local[*] and for tests, but
-  has NO fault tolerance — on a real cluster, losing one executor
-  mid-query kills the job. This is the default for parity with the
-  in-memory behavior.
-- parquet round-trip (``checkpoint_path=``): write the frame to
-  ``{checkpoint_path}/{name}`` and read it back. Durable, resumable,
-  and the shape production dedup pipelines use at 100 TB ("write
-  signatures, then band"); also gives the reread scan real column
-  pruning/pushdown. Slightly slower locally; strictly safer at scale.
+- unset (default): ``localCheckpoint``. RDD blocks on executors; fast,
+  fine on local[*] and for tests, but NO fault tolerance — on a real
+  cluster, losing one executor mid-query kills the job.
+- a directory: parquet write+reread under it. Durable, resumable, the
+  shape production dedup uses at 100 TB ("write signatures, then
+  band"), with real column pruning on the reread. Operators with a
+  driver-local fast path take the distributed loop while it is set.
+
+``spark.checkpoint.dir`` cannot be the switch: it is a core setting,
+fixed at runtime, and a reliable RDD checkpoint lacks the parquet
+reread's file-size stats (see :func:`_rebound_checkpoint_stats`).
 """
 
 from __future__ import annotations
 
 import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+STAGING_DIR_CONF = "spark.graft.stagingDir"
+
+
+def staging_dir(spark: SparkSession) -> str | None:
+    """The durable staging directory, or None for local staging."""
+    return spark.conf.get(STAGING_DIR_CONF, None)
+
+
+@contextmanager
+def durable_staging(spark: SparkSession, path: str) -> Iterator[None]:
+    """Stage under ``path`` inside the block, then restore the setting."""
+    prev = staging_dir(spark)
+    spark.conf.set(STAGING_DIR_CONF, path)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(STAGING_DIR_CONF)
+        else:
+            spark.conf.set(STAGING_DIR_CONF, prev)
 
 
 def _rebound_checkpoint_stats(df: DataFrame) -> None:
@@ -78,29 +105,27 @@ def _rebound_checkpoint_stats(df: DataFrame) -> None:
 
 
 def stage(
-    df: DataFrame,
-    checkpoint_path: str | None = None,
-    name: str | None = None,
-    eager: bool = True,
+    df: DataFrame, name: str | None = None, eager: bool = True
 ) -> DataFrame:
     """Materialize ``df`` for reuse across actions/rounds.
 
-    With ``checkpoint_path`` set, writes parquet to
-    ``{checkpoint_path}/{name}_{uuid}`` and returns the reread frame —
-    durable on any shared filesystem / object store. The per-call uuid
-    suffix means two operator invocations sharing a ``checkpoint_path``
-    NEVER clobber each other's staged files (an overwrite of a fixed
-    path would silently corrupt earlier lazily-returned frames that
-    still reference it); retention of the directory is the caller's
-    concern, like any checkpoint location. Otherwise falls back to
+    With ``spark.graft.stagingDir`` set, writes parquet to
+    ``{dir}/{name}_{uuid}`` and returns the reread frame — durable on
+    any shared filesystem / object store. The per-call uuid suffix means
+    two operator invocations sharing a directory NEVER clobber each
+    other's staged files (an overwrite of a fixed path would silently
+    corrupt earlier lazily-returned frames that still reference it);
+    retention of the directory is the caller's concern, like any
+    checkpoint location. Otherwise falls back to
     ``localCheckpoint(eager=eager)``.
     """
-    if checkpoint_path is None:
+    target_dir = staging_dir(df.sparkSession)
+    if target_dir is None:
         out = df.localCheckpoint(eager=eager)
         if eager:
             _rebound_checkpoint_stats(out)
         return out
     stem = f"{name}_" if name else ""
-    target = f"{checkpoint_path.rstrip('/')}/{stem}{uuid.uuid4().hex[:12]}"
+    target = f"{target_dir.rstrip('/')}/{stem}{uuid.uuid4().hex[:12]}"
     df.write.mode("error").parquet(target)
     return df.sparkSession.read.parquet(target)

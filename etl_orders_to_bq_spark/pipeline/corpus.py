@@ -38,12 +38,11 @@ def build_training_corpus(
     num_hashes: int = 4,
     bands: int = 2,
     hash_fn: str = "md5",
-    checkpoint_path: str | None = None,
 ) -> DataFrame:
     """Returns (doc_id, chunk_idx, chunk_text, n_tokens) for the
-    cleaned, deduplicated corpus. ``checkpoint_path`` switches every
-    staging point (exact-dedup output, LSH signatures, CC rounds) to
-    durable parquet (see ``staging.stage``).
+    cleaned, deduplicated corpus. Every staging point (exact-dedup
+    output, LSH signatures, CC rounds) goes through ``staging.stage``,
+    so the session's ``spark.graft.stagingDir`` makes them durable.
 
     ``hash_fn`` selects the MinHash signature path (see
     ``minhash_signature``): "md5" is the oracle-reproducible default;
@@ -63,8 +62,7 @@ def build_training_corpus(
     # survivors anti-join consume this frame — without staging, the
     # regex-heavy filter + fingerprint shuffle execute twice
     exact = stage(
-        exact_dedup(filtered, text_col, id_col),
-        checkpoint_path, "corpus_exact", eager=False,
+        exact_dedup(filtered, text_col, id_col), "corpus_exact", eager=False
     )
 
     pairs = minhash_lsh_candidates(
@@ -74,11 +72,8 @@ def build_training_corpus(
         num_hashes=num_hashes,
         bands=bands,
         hash_fn=hash_fn,
-        checkpoint_path=checkpoint_path,
     )
-    clusters = connected_components(
-        pairs, "id_a", "id_b", checkpoint_path=checkpoint_path
-    )
+    clusters = connected_components(pairs, "id_a", "id_b")
     # drop every clustered doc that is not its cluster's representative
     losers = clusters.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col)

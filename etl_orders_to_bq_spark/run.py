@@ -16,6 +16,9 @@ from __future__ import annotations
 
 import argparse
 
+from pyspark.sql import functions as F
+
+from .operators.quality import observed_write
 from .pipeline import OrdersEtl
 from .session import get_spark
 
@@ -49,9 +52,13 @@ def main(argv: list[str] | None = None) -> int:
         table_name=args.table,
         sink_format=args.sink_format,
     )
-    etl.process()
-    etl.write(if_exists=args.if_exists)
-    print(f"wrote {etl.output_df.count()} rows to {args.table}")
+    # counted in the write pass: a separate count() would re-run the
+    # lazy pipeline (CSV scans, dedup shuffle)
+    rows = observed_write(
+        etl.process(), args.table, {"rows": F.count(F.lit(1))},
+        fmt=args.sink_format, if_exists=args.if_exists,
+    )["rows"]
+    print(f"wrote {rows} rows to {args.table}")
 
     if args.similar_to is not None:
         for row in etl.top_k_similar(args.similar_to, k=10).collect():

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampType
 
+from ..operators.staging import stage
 from ..schemas import TESTDATA_TABLES
 
 # Parquet columns that SOME fixture generations write as
@@ -39,7 +40,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     without the cast the two fixture generations yield different
     schemas for schema-sensitive consumers (dtype assertions,
     LTZ-vs-NTZ sink type mappings). A genuine nanos file's normalized
-    frame is eagerly staged (localCheckpoint) before the conf is
+    frame is eagerly staged (``staging.stage``) before the conf is
     restored — the lazy scan re-reads the conf at execution time, so
     without materialization the frame would fail with "Illegal Parquet
     type: INT64 (NANOS)" after restore, and keeping the conf set
@@ -65,7 +66,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # frame then no longer depends on it. Fixture tables are
             # the only place the legacy conf is ever needed, so the
             # executor-memory cost is bounded and local.
-            df = df.localCheckpoint(eager=True)
+            df = stage(df, f"{name}_micros")
     finally:
         if prev is None:
             spark.conf.unset(conf_key)

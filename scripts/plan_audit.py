@@ -11,10 +11,17 @@ Usage: python scripts/plan_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers import the package too, and they inherit the
+# environment, not this process's sys.path: set it before the JVM starts
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 
 def _walk_plan(node):
@@ -101,8 +108,6 @@ def main() -> int:
     # an artifact of the audit's scale, not a property of the plan. Such
     # queries are re-audited one SF up (the sibling sf0.01 fixture next
     # to the requested dir), where rows survive the filters.
-    import os
-
     fallback_dir = None
     if "sf0.001" in sf_dir:
         candidate = sf_dir.replace("sf0.001", "sf0.01")
@@ -154,7 +159,7 @@ def main() -> int:
             f"{'y' if cg else 'n'} | {sh_rec} | {sh_bytes} |"
         )
     out = "\n".join(lines) + "\n"
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write(out)
     bad = [r for r in rows if r[1] < 0]
     cartesian = [r for r in rows if "CartesianProduct" in r[2]]

@@ -591,12 +591,13 @@ def test_pagerank_star_orders_hub_first(spark):
 
 
 def test_pagerank_durable_staging_and_tol_early_exit(spark, tmp_path):
-    """Durable staging (checkpoint_path=) must produce identical ranks
-    to the in-memory path, and tol= must stop early on a converged
+    """Durable staging (spark.graft.stagingDir) must produce identical
+    ranks to the in-memory path, and tol= must stop early on a converged
     graph: a directed ring is at its fixpoint (uniform 1/N) after round
     one, so the staged-rank round directories prove the loop exited
     instead of running all 10 iterations."""
     from etl_orders_to_bq_spark.operators.graph import pagerank
+    from etl_orders_to_bq_spark.operators.staging import durable_staging
 
     n = 6
     edges = spark.createDataFrame(
@@ -607,25 +608,20 @@ def test_pagerank_durable_staging_and_tol_early_exit(spark, tmp_path):
         for r in pagerank(edges, iterations=5).collect()
     }
     dur_path = tmp_path / "pr"
-    dur = {
-        (r["id"], round(r["rank"], 12))
-        for r in pagerank(
-            edges, iterations=5, checkpoint_path=str(dur_path)
-        ).collect()
-    }
+    with durable_staging(spark, str(dur_path)):
+        dur = {
+            (r["id"], round(r["rank"], 12))
+            for r in pagerank(edges, iterations=5).collect()
+        }
     assert dur == mem and len(dur) == n
     assert list(dur_path.glob("pr_edges_*"))
 
     tol_path = tmp_path / "pr_tol"
-    ranks = {
-        r["id"]: r["rank"]
-        for r in pagerank(
-            edges,
-            iterations=10,
-            tol=1e-9,
-            checkpoint_path=str(tol_path),
-        ).collect()
-    }
+    with durable_staging(spark, str(tol_path)):
+        ranks = {
+            r["id"]: r["rank"]
+            for r in pagerank(edges, iterations=10, tol=1e-9).collect()
+        }
     for v in ranks.values():
         assert abs(v - 1.0 / n) < 1e-12
     staged_rounds = list(tol_path.glob("pr_ranks_r*"))
@@ -633,15 +629,15 @@ def test_pagerank_durable_staging_and_tol_early_exit(spark, tmp_path):
 
 
 def test_lsh_chain_parquet_staging_identical(docs, spark, tmp_path):
-    """The durable-staging path (checkpoint_path= -> parquet write+reread
-    instead of localCheckpoint) must produce the identical candidate
-    pairs and components as the in-memory path."""
+    """The durable-staging path (spark.graft.stagingDir -> parquet
+    write+reread instead of localCheckpoint) must produce the identical
+    candidate pairs and components as the in-memory path."""
     from etl_orders_to_bq_spark.operators.graph import connected_components
+    from etl_orders_to_bq_spark.operators.staging import durable_staging
 
     mem_pairs = minhash_lsh_candidates(docs, num_hashes=8, bands=4)
-    dur_pairs = minhash_lsh_candidates(
-        docs, num_hashes=8, bands=4, checkpoint_path=str(tmp_path / "lsh")
-    )
+    with durable_staging(spark, str(tmp_path / "lsh")):
+        dur_pairs = minhash_lsh_candidates(docs, num_hashes=8, bands=4)
     mem = {(r["id_a"], r["id_b"]) for r in mem_pairs.collect()}
     dur = {(r["id_a"], r["id_b"]) for r in dur_pairs.collect()}
     assert dur == mem and len(dur) > 0
@@ -651,12 +647,11 @@ def test_lsh_chain_parquet_staging_identical(docs, spark, tmp_path):
         (r["id"], r["component"])
         for r in connected_components(mem_pairs).collect()
     }
-    dur_cc = {
-        (r["id"], r["component"])
-        for r in connected_components(
-            dur_pairs, checkpoint_path=str(tmp_path / "cc")
-        ).collect()
-    }
+    with durable_staging(spark, str(tmp_path / "cc")):
+        dur_cc = {
+            (r["id"], r["component"])
+            for r in connected_components(dur_pairs).collect()
+        }
     assert dur_cc == mem_cc and len(dur_cc) > 0
     assert list((tmp_path / "cc").glob("cc_edges_*"))
 
@@ -1047,19 +1042,20 @@ def test_minhash_hash_families_agree_on_true_dups_not_fp(spark):
         assert not missed, f"{fn} missed planted true dups: {missed}"
 
 
-def test_small_graph_local_fast_paths_match_distributed(spark):
+def test_small_graph_local_fast_paths_match_distributed(spark, tmp_path):
     """connected_components and pagerank switch to an exact driver-
     local iteration when the staged edge set fits SMALL_GRAPH_EDGES
     (contracted graphs are scale-independent; per-round Catalyst
     planning dominates otherwise). The fast path must be
     indistinguishable: identical components, ranks equal to the
     distributed formula well past the 6dp gate rounding, and both
-    knobs (local_threshold=None, checkpoint_path) must force the
+    knobs (local_threshold=None, spark.graft.stagingDir) must force the
     distributed path."""
     from etl_orders_to_bq_spark.operators.graph import (
         connected_components,
         pagerank,
     )
+    from etl_orders_to_bq_spark.operators.staging import durable_staging
 
     edges = spark.createDataFrame(
         [(i, (i * i + 1) % 41) for i in range(200)] + [(7, 7), (40, 3)],
@@ -1071,6 +1067,12 @@ def test_small_graph_local_fast_paths_match_distributed(spark):
         for r in connected_components(edges, local_threshold=None).collect()
     }
     assert local == dist
+    # the durable setting forces the distributed loop: only that loop
+    # stages per-round label frames
+    with durable_staging(spark, str(tmp_path / "cc")):
+        dur = {tuple(r) for r in connected_components(edges).collect()}
+    assert dur == local
+    assert list((tmp_path / "cc").glob("cc_labels_r*"))
 
     pr_local = {
         r["id"]: r["rank"]
@@ -1084,6 +1086,14 @@ def test_small_graph_local_fast_paths_match_distributed(spark):
     }
     assert set(pr_local) == set(pr_dist)
     assert all(abs(pr_local[k] - pr_dist[k]) < 1e-12 for k in pr_dist)
+    with durable_staging(spark, str(tmp_path / "pr")):
+        pr_dur = {
+            r["id"]: r["rank"]
+            for r in pagerank(edges, "id_a", "id_b", iterations=7).collect()
+        }
+    assert set(pr_dur) == set(pr_dist)
+    assert all(abs(pr_dur[k] - pr_dist[k]) < 1e-12 for k in pr_dist)
+    assert list((tmp_path / "pr").glob("pr_ranks_r*"))
     # ranks are a probability vector under literal dangling semantics:
     # total mass <= 1 (dangling mass leaks), every rank >= base
     assert 0 < sum(pr_local.values()) <= 1.0 + 1e-9

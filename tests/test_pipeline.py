@@ -280,9 +280,52 @@ def test_lookup_snapshot_synthetic(spark, tmp_path):
     assert scan_info(etl.products_df) == []
 
 
+def test_run_cli_counts_rows_in_the_write_pass(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """run.main prints the row count it wrote, counted in the write pass:
+    it starts exactly the SQL executions of process() + write(), not one
+    more for a separate count() that re-runs the lazy pipeline."""
+    from bench import _newest_sql_execution
+    from etl_orders_to_bq_spark import run
+
+    orders = tmp_path / "orders.csv"
+    orders.write_text(
+        ",order_source_id,order_created_datetime,customer_id,status,sum,"
+        "quantity,name,surname,patronymic,product_id\n"
+        "0,11,2019-04-28T18:20:05,1,Paid,100.5,1,Ivan,Petrenko,,2\n"
+        "1,11,2019-04-28T18:20:05,1,Paid,100.5,1,Ivan,Petrenko,,2\n"
+        "2,12,2019-04-29T10:00:00,2,New,7,2,Olha,Ivanenko,,1\n"
+    )
+    products = tmp_path / "products.csv"
+    products.write_text(
+        "product_id,price,goods_group,manufacturer\n1,100.0,G,M\n2,80.0,G,M\n"
+    )
+    monkeypatch.setattr(run, "get_spark", lambda **_: spark)
+    out = tmp_path / "out"
+    before = _newest_sql_execution(spark)
+    assert run.main(
+        ["--orders", str(orders), "--products", str(products),
+         "--table", str(out)]
+    ) == 0
+    main_execs = _newest_sql_execution(spark) - before
+    written = spark.read.parquet(str(out)).count()
+    assert written == 2
+    assert capsys.readouterr().out == f"wrote {written} rows to {out}\n"
+
+    etl = OrdersEtl(
+        spark, str(orders), str(products), table_name=str(tmp_path / "o2")
+    )
+    before = _newest_sql_execution(spark)
+    etl.process()
+    etl.write()
+    assert main_execs == _newest_sql_execution(spark) - before
+
+
 def test_corpus_durable_staging_identical(spark, tmp_path):
-    """build_training_corpus(checkpoint_path=...) must produce the
-    identical chunk set as the in-memory staging path."""
+    """build_training_corpus under a durable spark.graft.stagingDir must
+    produce the identical chunk set as the in-memory staging path."""
+    from etl_orders_to_bq_spark.operators.staging import durable_staging
     from etl_orders_to_bq_spark.pipeline.corpus import build_training_corpus
     from etl_orders_to_bq_spark.sources.parquet import read_table
 
@@ -290,10 +333,8 @@ def test_corpus_durable_staging_identical(spark, tmp_path):
         "doc_id", "text"
     )
     mem = build_training_corpus(docs, lang="en", min_quality=0.5)
-    dur = build_training_corpus(
-        docs, lang="en", min_quality=0.5,
-        checkpoint_path=str(tmp_path / "stage"),
-    )
+    with durable_staging(spark, str(tmp_path / "stage")):
+        dur = build_training_corpus(docs, lang="en", min_quality=0.5)
     key = ["doc_id", "chunk_idx", "chunk_text", "n_tokens"]
     mem_rows = {tuple(r[k] for k in key) for r in mem.collect()}
     dur_rows = {tuple(r[k] for k in key) for r in dur.collect()}

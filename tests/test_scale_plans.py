@@ -510,10 +510,11 @@ def test_global_ranking_property_matches_window(spark):
 
 
 def test_global_ranking_durable_staging_identical(spark, tmp_path):
-    """The checkpoint_path durable path must number rows identically to
-    the in-memory path (the __pid column is materialized data, so the
-    parquet roundtrip preserves offset consistency)."""
+    """The durable path (spark.graft.stagingDir) must number rows
+    identically to the in-memory path (the __pid column is materialized
+    data, so the parquet roundtrip preserves offset consistency)."""
     from etl_orders_to_bq_spark.operators.ranking import global_row_number
+    from etl_orders_to_bq_spark.operators.staging import durable_staging
 
     o = read_table(spark, SF, "orders")
     spend = o.groupBy("o_custkey").agg(
@@ -524,12 +525,11 @@ def test_global_ranking_durable_staging_identical(spark, tmp_path):
         (r["o_custkey"], r["rn"])
         for r in global_row_number(spend, order).collect()
     }
-    dur = {
-        (r["o_custkey"], r["rn"])
-        for r in global_row_number(
-            spend, order, checkpoint_path=str(tmp_path / "rank")
-        ).collect()
-    }
+    with durable_staging(spark, str(tmp_path / "rank")):
+        dur = {
+            (r["o_custkey"], r["rn"])
+            for r in global_row_number(spend, order).collect()
+        }
     assert dur == mem and len(dur) > 0
     assert list((tmp_path / "rank").glob("ranked_input_*"))
 
@@ -821,11 +821,7 @@ def test_stage_localcheckpoint_stats_do_not_compound(spark):
     bounded default, not a compounding product."""
     from etl_orders_to_bq_spark.operators.staging import stage
 
-    df = stage(
-        spark.range(64).selectExpr("id as a", "id % 7 as b"),
-        None,
-        "s0",
-    )
+    df = stage(spark.range(64).selectExpr("id as a", "id % 7 as b"), "s0")
     for r in range(5):
         nxt = (
             df.alias("l")
@@ -834,7 +830,7 @@ def test_stage_localcheckpoint_stats_do_not_compound(spark):
             .agg(F.count("*").alias("a"))
             .select("a", "b")
         )
-        df = stage(nxt, None, f"s{r + 1}")
+        df = stage(nxt, f"s{r + 1}")
     bits = int(
         df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     ).bit_length()

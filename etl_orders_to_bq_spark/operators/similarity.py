@@ -15,10 +15,20 @@ reproduce it exactly.
 Here the scorer is pure column arithmetic over a broadcast 1-row target
 (cross join) — whole-stage codegen, no UDF, no Python loop — so the same
 operator scores 8 candidates or 8 billion.
+
+:class:`DriverProducts` is the same score in numpy over a driver copy of
+a small products frame, for point lookups that should start no Spark
+job. It keeps Spark's float operation order and rounding, and returns
+None (defer to :func:`similar_products`) wherever Spark's null, NaN or
+ANSI divide-by-zero semantics would differ from numpy's.
 """
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
@@ -47,6 +57,86 @@ def score_similarity(
         F.lit(1.0) - F.abs(target_price - price) / F.greatest(target_price, price)
     ) * F.lit(MANUFACTURER_WEIGHT)
     return F.round(group_term + manu_term + price_term, 5)
+
+
+def _round5(x: float) -> float:
+    """Spark's ``round(double, 5)``: HALF_UP on the decimal string of the
+    double. ``repr`` is that string: JDK 17's ``Double.toString`` gave
+    the same digits for every 6-dp midpoint in [0, 1], the only doubles
+    where the two could round differently (pinned by
+    tests/test_similarity_fastpath.py)."""
+    return float(Decimal(repr(float(x))).quantize(Decimal("1e-5"), ROUND_HALF_UP))
+
+
+def score_similarity_np(
+    price: np.ndarray,
+    goods_group: np.ndarray,
+    manufacturer: np.ndarray,
+    target_price: float,
+    target_group: str,
+    target_manufacturer: str,
+) -> list[float]:
+    """:func:`score_similarity` in numpy, for positive finite prices and
+    a non-null target group and manufacturer: same weights, same float
+    operation order ``(group + manu) + price``, same rounding."""
+    group_term = np.where(goods_group == target_group, GROUP_WEIGHT, 0.0)
+    manu_term = np.where(manufacturer == target_manufacturer, PRICE_WEIGHT, 0.0)
+    price_term = (
+        1.0 - np.abs(target_price - price) / np.maximum(target_price, price)
+    ) * MANUFACTURER_WEIGHT
+    return [_round5(x) for x in (group_term + manu_term) + price_term]
+
+
+class DriverProducts:
+    """A driver copy of a products frame (the ``similar_products``
+    default columns): price, group and manufacturer arrays plus an
+    id -> row position map, scored by :func:`score_similarity_np` with
+    no Spark job."""
+
+    def __init__(self, table: pa.Table):
+        ids = table.column("product_id")
+        valid = ids.is_valid()
+        # a null id matches no candidate, as in the Spark ``isin``
+        self.pos = dict(
+            zip(
+                ids.filter(valid).to_numpy().tolist(),
+                np.flatnonzero(valid.to_numpy(zero_copy_only=False)).tolist(),
+            )
+        )
+        self.price, self.goods_group, self.manufacturer = (
+            table.column(c).to_numpy(zero_copy_only=False)
+            for c in ("price", "goods_group", "manufacturer")
+        )
+
+    def similar(
+        self, target_id: int, candidate_ids: list[int] | None
+    ) -> dict[int, float] | None:
+        """``{id: score}`` as ``similar_products(...).collect()`` gives it,
+        or None where the Spark scorer must answer: a null, NaN,
+        infinite or non-positive target or candidate price (Spark gives
+        a null or NaN score, or raises DIVIDE_BY_ZERO under ANSI), or a
+        null target group or manufacturer (null equality scores 0 in
+        Spark, but ``None == None`` holds in numpy)."""
+        t = self.pos.get(target_id)
+        if t is None:
+            return {}
+        t_price = self.price[t]
+        t_group, t_manu = self.goods_group[t], self.manufacturer[t]
+        if t_group is None or t_manu is None or not (
+            np.isfinite(t_price) and t_price > 0
+        ):
+            return None
+        wanted = self.pos if candidate_ids is None else dict.fromkeys(candidate_ids)
+        ids = [int(c) for c in wanted if c in self.pos]
+        rows = np.array([self.pos[c] for c in ids], dtype=np.int64)
+        price = self.price[rows]
+        if not np.all(np.isfinite(price) & (price > 0)):
+            return None
+        scores = score_similarity_np(
+            price, self.goods_group[rows], self.manufacturer[rows],
+            t_price, t_group, t_manu,
+        )
+        return dict(zip(ids, scores))
 
 
 def similar_products(

@@ -18,7 +18,7 @@ else:
 
 ``spark.checkpoint.dir`` cannot be the switch: it is a core setting,
 fixed at runtime, and a reliable RDD checkpoint lacks the parquet
-reread's file-size stats (see :func:`_rebound_checkpoint_stats`).
+reread's file-size stats (see :func:`rebind_checkpoint_stats`).
 """
 
 from __future__ import annotations
@@ -51,7 +51,7 @@ def durable_staging(spark: SparkSession, path: str) -> Iterator[None]:
             spark.conf.set(STAGING_DIR_CONF, prev)
 
 
-def _rebound_checkpoint_stats(df: DataFrame) -> None:
+def rebind_checkpoint_stats(df: DataFrame) -> None:
     """Replace the Catalyst size estimate a localCheckpoint INHERITS
     from its origin plan (``LogicalRDD.originStats``, Spark 3.4+) with
     the checkpoint's ACTUAL materialized byte size.
@@ -75,14 +75,23 @@ def _rebound_checkpoint_stats(df: DataFrame) -> None:
     construct Scala BigInt arguments directly. Reflection is
     version-guarded — on any mismatch the stats are left as-is (the
     pre-fix behavior), never an error. Lazy checkpoints (eager=False)
-    have no blocks yet and are left alone; their consumer is staged
-    eagerly downstream, which rebounds the chain there."""
+    have no blocks until their first action: ``stage`` leaves them
+    alone, and a caller that forces one itself (``OrdersEtl``'s
+    products snapshot) rebinds after that action. Frames built on
+    ``df`` see the new estimate; ``df``'s own plan, if already
+    optimized, keeps the old one.
+
+    The block sizes come from the status store, which the listener bus
+    fills asynchronously, so the bus is drained first; a block not yet
+    recorded there would leave the estimate unbound."""
     try:
         jlp = df._jdf.queryExecution().logical()
         if jlp.getClass().getSimpleName() != "LogicalRDD":
             return
         rdd_id = jlp.rdd().id()
-        infos = df.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo()
+        jsc = df.sparkSession.sparkContext._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty()
+        infos = jsc.getRDDStorageInfo()
         size = None
         for i in range(len(infos)):
             if infos[i].id() == rdd_id:
@@ -123,7 +132,7 @@ def stage(
     if target_dir is None:
         out = df.localCheckpoint(eager=eager)
         if eager:
-            _rebound_checkpoint_stats(out)
+            rebind_checkpoint_stats(out)
         return out
     stem = f"{name}_" if name else ""
     target = f"{target_dir.rstrip('/')}/{stem}{uuid.uuid4().hex[:12]}"

@@ -11,11 +11,11 @@ Plan shape (and why it scales):
     -> repair+cast projections                   -- codegen, no shuffle
     -> first-occurrence dedup (window)           -- the ONE shuffle
     -> clean-name projections                    -- codegen + 1 arrow UDF
-    -> broadcast left join with products         -- no shuffle
+    -> left join with products                   -- broadcast: no shuffle
     -> sink
-Products (small dim) broadcasts under the autoBroadcastJoinThreshold; at
-a 100x products scale Catalyst falls back to shuffled hash join on its
-own — no code change.
+The products join carries no hint: Catalyst broadcasts products while
+their size estimate is within ``spark.sql.autoBroadcastJoinThreshold``
+and plans a shuffled join above it (or with the threshold at -1).
 
 Similarity lookups are the one eager step. The reference reads products
 into a frame once and scores every lookup in memory
@@ -23,21 +23,26 @@ into a frame once and scores every lookup in memory
 deduplicated products frame once (``staging.stage``) and rebinds
 ``products_df`` to that snapshot, so later lookups, and
 ``top_k_similar(etl.products_df, ...)``, read it instead of re-scanning
-and re-deduplicating the CSV. ``output_df`` keeps the lazy plan, and
-``process()`` drops the snapshot, so a changed products file is read
-again.
+and re-deduplicating the CSV. The same threshold bounds a driver copy:
+when the snapshot's size estimate is within it, the staging job also
+collects the snapshot into numpy arrays
+(``similarity.DriverProducts``), and ``find_similar_products`` scores
+there with no Spark job; above it, or for the null and non-positive
+prices the numpy scorer defers, lookups run the Spark scorer on the
+snapshot. The staging job's description names the branch taken.
+``output_df`` keeps the lazy plan, and ``process()`` drops the snapshot
+and the copy, so a changed products file is read again.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.functions import broadcast
 
 from ..functions.names import clean_name
 from ..functions.repair import cast_columns, repair_decimal_comma, strip_non_digits
 from ..operators.dedup import first_occurrence_dedup
-from ..operators.similarity import similar_products, top_k_similar
-from ..operators.staging import stage
+from ..operators.similarity import DriverProducts, similar_products, top_k_similar
+from ..operators.staging import rebind_checkpoint_stats, stage
 from ..schemas import (
     ORDERS_COLUMNS,
     ORDERS_RAW_SCHEMA,
@@ -77,6 +82,7 @@ class OrdersEtl:
         self.products_df: DataFrame | None = None
         self.output_df: DataFrame | None = None
         self._products_staged = False
+        self._products_local: DriverProducts | None = None
 
     # -- transformation stages (each lazy, individually testable) ----------
 
@@ -99,14 +105,15 @@ class OrdersEtl:
         return out
 
     def join_frames(self, orders_df: DataFrame, products_df: DataFrame) -> DataFrame:
-        """O7: broadcast left equi-join, products attrs appended.
+        """O7: left equi-join, products attrs appended; broadcast or
+        shuffled by ``spark.sql.autoBroadcastJoinThreshold``.
 
         pandas ``merge`` keeps the join key in its original column
         position (reference etl/orders_etl.py:194-198); Spark's
         ``join(on=)`` moves it first, so re-project to orders columns
         followed by the product attributes.
         """
-        joined = orders_df.join(broadcast(products_df), on="product_id", how="left")
+        joined = orders_df.join(products_df, on="product_id", how="left")
         product_attrs = [c for c in products_df.columns if c != "product_id"]
         return joined.select(*orders_df.columns, *product_attrs)
 
@@ -145,6 +152,7 @@ class OrdersEtl:
         self.orders_df = orders
         self.products_df = products
         self._products_staged = False
+        self._products_local = None
         # reference column order: orders cols then product attrs
         # (merge on product_id keeps the key in place, etl/orders_etl.py:194-198)
         self.output_df = self.join_frames(orders, products)
@@ -173,20 +181,66 @@ class OrdersEtl:
         if self.products_df is None:
             raise RuntimeError("process() must run before a similarity lookup")
         if not self._products_staged:
-            self.products_df = stage(self.products_df, name="products")
-            self._products_staged = True
+            self._stage_products()
         return self.products_df
+
+    def _stage_products(self) -> None:
+        """Stage ``products_df``, with a driver copy when it is small.
+
+        The snapshot's Catalyst size estimate (inherited from the lazy
+        frame until the blocks exist) is the number a join tests against
+        ``spark.sql.autoBroadcastJoinThreshold`` before collecting this
+        frame to the driver. Within it, the snapshot is staged lazily and
+        ``toArrow`` collects it into ``_products_local``: one job both
+        materializes the blocks and brings the copy to the driver, then
+        the estimate is rebound to the block size. Otherwise it is staged
+        eagerly, with no copy."""
+        jdf = self.products_df._jdf
+        size = int(jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        conf = self.spark._jsparkSession.sessionState().conf()
+        limit = conf.autoBroadcastJoinThreshold()
+        keep = 0 <= size <= limit
+        branch = "driver copy kept" if keep else "Spark scorer"
+        description = (
+            f"OrdersEtl products snapshot: {branch}, sizeInBytes {size} "
+            f"{'<=' if keep else '>'} spark.sql.autoBroadcastJoinThreshold {limit}"
+        )
+        sc = self.spark.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(description)
+        try:
+            snap = stage(self.products_df, name="products", eager=not keep)
+            if keep:
+                self._products_local = DriverProducts(snap.toArrow())
+        finally:
+            sc.setLocalProperty("spark.job.description", prev)
+        if keep:
+            rebind_checkpoint_stats(snap)
+        self.products_df = snap
+        self._products_staged = True
 
     def find_similar_products(
         self, target_id: int, candidate_ids: list[int]
     ) -> dict[int, float]:
-        """Reference EP3: dict-of-scores shim over the columnar scorer.
+        """Reference EP3: dict of scores for the candidates found.
 
         Reads the products snapshot taken at the first lookup, as the
         reference scores against the frame it read once; call
-        ``process()`` again to pick up a changed products file."""
-        scored = similar_products(self._lookup_products(), target_id, candidate_ids)
-        return {int(r["product_id"]): float(r["score"]) for r in scored.collect()}
+        ``process()`` again to pick up a changed products file. With a
+        driver copy (see ``_stage_products``) the scores come from
+        numpy and no Spark job runs; otherwise, and where the numpy
+        scorer defers, from the columnar scorer. A null price scores
+        NaN, as the reference's pandas arithmetic gives."""
+        products = self._lookup_products()
+        if self._products_local is not None:
+            scores = self._products_local.similar(target_id, candidate_ids)
+            if scores is not None:
+                return scores
+        scored = similar_products(products, target_id, candidate_ids)
+        return {
+            int(r["product_id"]): float("nan") if r["score"] is None else r["score"]
+            for r in scored.collect()
+        }
 
     def top_k_similar(self, target_id: int, k: int = 10) -> DataFrame:
         """The ``k`` products most similar to ``target_id``, from the

@@ -24,23 +24,36 @@ os.environ["PYTHONPATH"] = os.pathsep.join(
 )
 
 
-def _walk_plan(node):
-    """Yield every node of an executed plan, descending through AQE
-    wrappers and materialized query stages; a ReusedExchange is yielded
-    but not descended (its work was already counted at the original)."""
+def _walk_plan(node, seen=None):
+    """Yield every node of an executed plan once, descending through AQE
+    wrappers, materialized query stages and reused exchanges.
+
+    A ReusedExchange leads to its original, and each plan instance is
+    yielded once (by ``SparkPlan.id``), so shared work counts once. The
+    original is not always elsewhere in the final tree: when two
+    broadcasts read the same shuffle stage, AQE prints in full whichever
+    stage it created first, and the other broadcast, reused, may be the
+    only path to that shuffle. Skipping reused exchanges made the
+    volume depend on stage timing (graph_modularity read 10,947 or
+    9,274 shuffle rows from one audit to the next)."""
+    seen = set() if seen is None else seen
+    if node.id() in seen:
+        return
+    seen.add(node.id())
     name = node.getClass().getSimpleName()
     yield node, name
     if "AdaptiveSparkPlan" in name:
-        yield from _walk_plan(node.executedPlan())
+        yield from _walk_plan(node.executedPlan(), seen)
         return
-    if "QueryStage" in name and "Reused" not in name:
-        yield from _walk_plan(node.plan())
+    if "QueryStage" in name:
+        yield from _walk_plan(node.plan(), seen)
         return
     if "ReusedExchange" in name:
+        yield from _walk_plan(node.child(), seen)
         return
     ch = node.children()
     for i in range(ch.size()):
-        yield from _walk_plan(ch.apply(i))
+        yield from _walk_plan(ch.apply(i), seen)
 
 
 def shuffle_volume(df):

@@ -263,6 +263,7 @@ def test_lookup_snapshot_synthetic(spark, tmp_path):
     got = etl.find_similar_products(1, cands)
     assert got == want
     assert got == pytest.approx({1: 1.0, 2: 0.94, 3: 0.45, 4: 0.8})
+    assert etl._products_local is not None  # 5 rows: a driver copy is kept
     assert etl.products_df is not lazy
     assert scan_info(etl.products_df) == []
     assert [tuple(r) for r in etl.top_k_similar(1, k=3).collect()] == want_top
@@ -276,8 +277,36 @@ def test_lookup_snapshot_synthetic(spark, tmp_path):
     )
     assert etl.find_similar_products(1, [2]) == {2: got[2]}  # still the snapshot
     etl.process()
+    assert etl._products_local is None  # the driver copy goes with it
     assert etl.find_similar_products(1, [2, 3]) == pytest.approx({2: 0.85})
     assert scan_info(etl.products_df) == []
+
+
+def test_find_similar_products_null_price_scores_nan(spark, tmp_path):
+    """A candidate with a null price scores NaN, as the reference's
+    pandas arithmetic gives, instead of crashing the dict shim on
+    Spark's null score."""
+    import math
+
+    orders = tmp_path / "orders.csv"
+    orders.write_text(
+        ",order_source_id,order_created_datetime,customer_id,status,sum,"
+        "quantity,name,surname,patronymic,product_id\n"
+        "0,11,2019-04-28T18:20:05,1,Paid,100.5,1,Іван,Петренко,,2\n"
+    )
+    products = tmp_path / "products.csv"
+    products.write_text(
+        "product_id,price,goods_group,manufacturer\n"
+        "1,100.0,G,M\n2,,G,M\n3,50.0,H,N\n"
+    )
+    etl = OrdersEtl(
+        spark, str(orders), str(products), table_name=str(tmp_path / "out")
+    )
+    etl.process()
+    got = etl.find_similar_products(1, [2, 3])
+    assert got.keys() == {2, 3}
+    assert math.isnan(got[2])
+    assert got[3] == 0.15
 
 
 def test_run_cli_counts_rows_in_the_write_pass(

@@ -86,6 +86,31 @@ def test_small_dim_broadcasts_unaided(spark):
     assert "BroadcastHashJoin" in _plan(j)
 
 
+def test_orders_products_join_follows_broadcast_threshold(spark, tmp_path):
+    """OrdersEtl's products join carries no broadcast hint: it broadcasts
+    within spark.sql.autoBroadcastJoinThreshold and sort-merges with the
+    threshold at -1, the same bound that decides the lookup copy."""
+    from etl_orders_to_bq_spark.pipeline import OrdersEtl
+    from etl_orders_to_bq_spark.plans import join_strategies
+
+    orders = tmp_path / "orders.csv"
+    orders.write_text(
+        ",order_source_id,order_created_datetime,customer_id,status,sum,"
+        "quantity,name,surname,patronymic,product_id\n"
+        "0,11,2019-04-28T18:20:05,1,Paid,100.5,1,Ivan,Petrenko,,42\n"
+    )
+    products = tmp_path / "products.csv"
+    products.write_text("product_id,price,goods_group,manufacturer\n42,10.0,G,M\n")
+    etl = OrdersEtl(spark, str(orders), str(products))
+    assert join_strategies(etl.process()) == ["BroadcastHashJoin"]
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        assert join_strategies(etl.process()) == ["SortMergeJoin"]
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
 def test_window_dedup_single_exchange(spark):
     """First-occurrence dedup must cost exactly one shuffle."""
     from etl_orders_to_bq_spark.operators.dedup import first_occurrence_dedup

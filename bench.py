@@ -1392,6 +1392,9 @@ def _sf1_stress(spark, sf_dir: str, cpus: int) -> dict:
         # distributed — the shipped 1x config is ALSO recorded, since
         # mixing backends would fake a cliff
         from etl_orders_to_bq_spark.operators.graph import k_truss
+        from etl_orders_to_bq_spark.operators.staging import (
+            local_fold_max_rows,
+        )
 
         li1 = (
             spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -1417,9 +1420,8 @@ def _sf1_stress(spark, sf_dir: str, cpus: int) -> dict:
             .localCheckpoint()
         )
         t1 = _timed(lambda: k_truss(li1, k=8), runs=2)
-        t1d = _timed(
-            lambda: k_truss(li1, k=8, local_threshold=None), runs=2
-        )
+        with local_fold_max_rows(spark, 0):
+            t1d = _timed(lambda: k_truss(li1, k=8), runs=2)
         t4 = _timed10(lambda: k_truss(li4, k=8))
         out["k_truss_1x"] = t1["min"]
         out["k_truss_1x_distributed"] = t1d["min"]
@@ -1452,8 +1454,9 @@ def _sf1_stress(spark, sf_dir: str, cpus: int) -> dict:
             ).localCheckpoint()
 
         c1, c4 = _cascade_edges(9), _cascade_edges(33)
-        tc1 = _timed10(lambda: k_truss(c1, k=4, local_threshold=None, max_rounds=30))
-        tc4 = _timed10(lambda: k_truss(c4, k=4, local_threshold=None, max_rounds=30))
+        with local_fold_max_rows(spark, 0):
+            tc1 = _timed10(lambda: k_truss(c1, k=4, max_rounds=30))
+            tc4 = _timed10(lambda: k_truss(c4, k=4, max_rounds=30))
         out["k_truss_cascade_5r"] = tc1
         out["k_truss_cascade_17r"] = tc4
         out["k_truss_cascade_rounds_growth"] = round(
@@ -1605,19 +1608,30 @@ def main() -> None:
     # end-to-end reference-parity pipeline (CSV scan -> repair -> dedup
     # -> clean -> broadcast join -> parquet sink) on the reference data;
     # the reference's own pandas run of the same work is the
-    # single-node baseline this must match or beat
+    # single-node baseline this must match or beat. Without the
+    # reference files, the benchmark generator writes input of the same
+    # size (2,502 order rows, 3,765 products) at a fixed seed, and the
+    # row's detail names which input ran.
     import shutil
     import tempfile
+    from pathlib import Path
 
     from etl_orders_to_bq_spark.pipeline import OrdersEtl
 
     out_dir = tempfile.mkdtemp(prefix="bench_pipeline_")
     try:
+        ref = "/root/reference/input_data"
+        orders_csv = f"{ref}/orders_s.csv"
+        products_csv = f"{ref}/products_s.csv"
+        source = "reference orders_s.csv + products_s.csv"
+        if not os.path.exists(orders_csv):
+            from perfbench.gen import write_dataset
+
+            ds = write_dataset(Path(out_dir) / "input", 41, 2502, 3765)
+            orders_csv, products_csv = ds.orders_csv, ds.products_csv
+            source = "perfbench/gen.py seed 41, 2502 orders, 3765 products"
         etl = OrdersEtl(
-            spark,
-            "/root/reference/input_data/orders_s.csv",
-            "/root/reference/input_data/products_s.csv",
-            table_name=f"{out_dir}/out",
+            spark, orders_csv, products_csv, table_name=f"{out_dir}/out"
         )
         ts = []
         for _ in range(3):
@@ -1629,6 +1643,7 @@ def main() -> None:
             "median": round(statistics.median(ts), 3),
             "min": round(min(ts), 3),
             "runs": ts,
+            "input": source,
         }
         timings["orders_pipeline_e2e"] = d["min"]
         detail["orders_pipeline_e2e"] = d

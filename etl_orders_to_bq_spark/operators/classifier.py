@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import normalize_text, tokenize
+from .staging import LOCAL_FOLD_ROWS, local_fold_limit
 
 
 def hashed_features(
@@ -1244,7 +1245,6 @@ def logistic_irls(
     iterations: int = 8,
     ndigits: int = 6,
     census_compress: bool = True,
-    local_threshold: int | None = 65536,
 ) -> DataFrame:
     """Distributed logistic-regression fit ``P(y=1) = sigmoid(b0 +
     b1*x1 + b2*x2)`` by iteratively reweighted least squares /
@@ -1266,7 +1266,7 @@ def logistic_irls(
     integer sums over the census equal the row sums EXACTLY. When the
     census is small enough (<= max(1024, n/4) groups) the 8 Newton
     scans touch the census instead of the corpus; when it also fits
-    the bounded-collect budget (``local_threshold`` rows) the whole
+    the local-fold limit (``staging.local_fold_limit``) the whole
     loop runs driver-local with zero per-round jobs
     (``_irls_census_fit``; numpy float64 == JVM double op-for-op).
     High-cardinality features fall back to the original full-row
@@ -1335,19 +1335,14 @@ def logistic_irls(
         m_groups = int(st["m"])
         n_all = int(st["n"] or 0)
         weighted = m_groups <= max(1024, n_all // 4)
-    if (
-        weighted
-        and local_threshold is not None
-        and m_groups <= int(local_threshold)
-    ):
-        # driver-local fit over the bounded census (the k_truss /
-        # ridge bounded-collect discipline: <= 65536 rows, ~2 MB).
-        # Every per-round op replays the Column chain's IEEE double
-        # sequence exactly (numpy float64 == JVM double, same
-        # operation order, no FMA), the micro quantization is the
-        # same floor form, and the count-weighted sums are exact
-        # integers — pinned local == distributed by
-        # test_logistic_irls_local_matches_distributed.
+    limit = local_fold_limit(spark0, LOCAL_FOLD_ROWS)
+    if weighted and 0 < limit and m_groups <= limit:
+        # driver-local fit over the bounded census: every per-round
+        # op replays the Column chain's IEEE double sequence exactly
+        # (numpy float64 == JVM double, same operation order, no FMA),
+        # the micro quantization is the same floor form, and the
+        # count-weighted sums are exact integers — pinned local ==
+        # distributed by test_logistic_irls_local_matches_distributed.
         rows = comp.collect()
         comp.unpersist()
         n_rows, iters_run, b = _irls_census_fit(

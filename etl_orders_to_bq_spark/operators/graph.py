@@ -24,7 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .staging import stage, staging_dir
+from .staging import LOCAL_FOLD_ROWS, LOCAL_PEEL_ROWS, local_fold_limit
+from .staging import local_rows, stage, staging_dir
 
 # Iterative operators run on CONTRACTED graphs (nation-level rollups,
 # LSH candidate pairs after banding) whose size is set by the key
@@ -33,16 +34,15 @@ from .staging import stage, staging_dir
 # comfortably on the driver, per-round Catalyst planning dominates the
 # actual work by orders of magnitude (measured: 10 PageRank rounds over
 # 625 edges EXECUTE in 0.12s but spend ~3s planning/staging), so the
-# operators below switch to an exact driver-local iteration under this
-# edge-count threshold — the same adaptive discipline as AQE, and the
-# same bounded-collect class as Lloyd's k x dim centroid pull
-# (ann.py). 64k edges x ~16 B is ~1 MB on the driver. Distributed
-# semantics are preserved bit-for-bit (integer label math for
-# CC; the identical update formula for PageRank, whose 6dp-rounded
-# gate output is insensitive to float summation order). Pass
-# local_threshold=None (or set spark.graft.stagingDir, the durable
-# staging contract of staging.py) to force the distributed path.
-SMALL_GRAPH_EDGES = 1 << 16
+# operators below iterate exactly on the driver whenever
+# ``staging.local_rows`` fetches the staged edges (LOCAL_FOLD_ROWS, or
+# LOCAL_PEEL_ROWS for the kcore/k_truss peels, unless the session's
+# local-fold limit overrides it; 0 or durable staging forces the
+# distributed path) — the same adaptive discipline as AQE, and the same
+# bounded-collect class as Lloyd's k x dim centroid pull (ann.py).
+# Distributed semantics are preserved bit-for-bit (integer label math
+# for CC; the identical update formula for PageRank, whose 6dp-rounded
+# gate output is insensitive to float summation order).
 
 
 def _cc_local(pairs: list[tuple], spark) -> DataFrame:
@@ -83,7 +83,6 @@ def connected_components(
     dst: str = "id_b",
     max_iter: int = 20,
     on_exhaustion: str = "raise",
-    local_threshold: int | None = SMALL_GRAPH_EDGES,
 ) -> DataFrame:
     """Resolve undirected edges into components.
 
@@ -101,8 +100,8 @@ def connected_components(
     The edge set and per-round labels go through ``staging.stage``, so
     the session's ``spark.graft.stagingDir`` makes them durable parquet
     that survives executor loss on a real cluster; that setting also
-    disables the small-graph driver-local fast path (see
-    ``SMALL_GRAPH_EDGES``), as does ``local_threshold=None``.
+    disables the small-graph driver-local fast path (see the module
+    note on contracted graphs), as does a local-fold limit of 0.
     """
     if on_exhaustion not in ("raise", "warn"):
         raise ValueError(f"unknown on_exhaustion mode: {on_exhaustion}")
@@ -116,15 +115,9 @@ def connected_components(
     # measured 3-4x slower on the sf0.1 dedup-cluster path
     und = stage(und, "cc_edges")
 
-    if staging_dir(edges.sparkSession) is None and local_threshold is not None:
-        # one bounded collect over the already-staged blocks decides AND
-        # fetches: threshold+1 rows (~1 MB) either proves the graph is
-        # small enough or is discarded for the distributed path
-        head = und.limit(local_threshold + 1).collect()
-        if len(head) <= local_threshold:
-            return _cc_local(
-                [(r["a"], r["b"]) for r in head], edges.sparkSession
-            )
+    head = local_rows(und, LOCAL_FOLD_ROWS)
+    if head is not None:
+        return _cc_local([(r["a"], r["b"]) for r in head], edges.sparkSession)
 
     labels = (
         und.select(F.col("a").alias("id"))
@@ -296,7 +289,6 @@ def pagerank(
     iterations: int = 10,
     damping: float = 0.85,
     tol: float | None = None,
-    local_threshold: int | None = SMALL_GRAPH_EDGES,
     stage_every: int = 5,
 ) -> DataFrame:
     """PageRank over a directed edge list, fixed-iteration by default.
@@ -320,10 +312,10 @@ def pagerank(
     The static edge set, node list, and per-round ranks go through
     ``staging.stage`` (durable parquet under the session's
     ``spark.graft.stagingDir``, as for ``connected_components``).
-    That setting (or ``local_threshold=None``) also forces the
-    distributed path; otherwise a contracted graph at or under
-    ``local_threshold`` staged edges iterates driver-locally in numpy
-    with the identical formula (see ``SMALL_GRAPH_EDGES``).
+    That setting (or a local-fold limit of 0) also forces the
+    distributed path; otherwise a contracted graph whose staged edges
+    fit the local-fold limit iterates driver-locally in numpy with the
+    identical formula (see the module note on contracted graphs).
 
     Scale notes (same discipline as ``connected_components``):
 
@@ -339,14 +331,13 @@ def pagerank(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct(),
         "pr_edges",
     )
+    head = local_rows(e, LOCAL_FOLD_ROWS)
+    if head is not None:
+        return _pagerank_local(
+            [(r["src"], r["dst"]) for r in head],
+            iterations, damping, tol, edges.sparkSession,
+        )
     durable = staging_dir(edges.sparkSession) is not None
-    if not durable and local_threshold is not None:
-        head = e.limit(local_threshold + 1).collect()
-        if len(head) <= local_threshold:
-            return _pagerank_local(
-                [(r["src"], r["dst"]) for r in head],
-                iterations, damping, tol, edges.sparkSession,
-            )
     nodes = stage(
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))
@@ -441,7 +432,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     rounds: int = 4,
-    local_threshold: int | None = SMALL_GRAPH_EDGES,
     stage_every: int = 5,
     until_converged: bool = False,
 ) -> DataFrame:
@@ -475,10 +465,10 @@ def label_propagation(
     - per-round lineage truncation every ``stage_every`` rounds (the
       pagerank measurement: planning dominates contracted-graph
       execution);
-    - contracted graphs at or under ``local_threshold`` staged edges
-      iterate driver-locally (see ``SMALL_GRAPH_EDGES``); pass
-      ``local_threshold=None`` or set ``spark.graft.stagingDir`` to
-      pin the distributed loop.
+    - contracted graphs whose staged edges fit the local-fold limit
+      iterate driver-locally (see the module note on contracted
+      graphs); a limit of 0 or a set ``spark.graft.stagingDir`` pins
+      the distributed loop.
 
     No counterpart in the reference engine (SURVEY.md §2.2 — no joins
     beyond one left-equi, no iteration).
@@ -493,16 +483,13 @@ def label_propagation(
         .distinct(),
         "lpa_edges",
     )
+    head = local_rows(sym, LOCAL_FOLD_ROWS)
+    if head is not None:
+        return _lpa_local(
+            [(r["src"], r["dst"]) for r in head],
+            rounds, edges.sparkSession, until_converged,
+        )
     durable = staging_dir(edges.sparkSession) is not None
-    if not durable and local_threshold is not None:
-        head = sym.limit(local_threshold + 1).collect()
-        if len(head) <= local_threshold:
-            return _lpa_local(
-                [(r["src"], r["dst"]) for r in head],
-                rounds,
-                edges.sparkSession,
-                until_converged,
-            )
     labels = sym.select(F.col("src").alias("id")).distinct().select(
         "id", F.col("id").alias("label")
     )
@@ -644,7 +631,6 @@ def kcore(
     dst: str = "dst",
     max_rounds: int = 200,
     on_exhaustion: str = "raise",
-    local_threshold: int | None = 1 << 20,
 ) -> DataFrame:
     """The k-core of an undirected graph: the maximal subgraph where
     every node keeps degree >= k, found by iterative peeling (drop
@@ -676,18 +662,13 @@ def kcore(
     )
     und = stage(und, "kcore_edges")
 
-    if staging_dir(edges.sparkSession) is None and local_threshold is not None:
-        # peeling runs on CONTRACTED graphs (the gate/bench graph's
-        # node domain is mod-1000, so its edge count is bounded no
-        # matter the input scale); threshold is higher than
-        # CC/PageRank's because peel state is two int arrays pulled
-        # via Arrow (1M directed edges ~ 16 MB), and rounds that
-        # cascade one node each cost microseconds instead of a
-        # scheduler round-trip. max_rounds/on_exhaustion only govern
-        # the distributed loop — the local peel runs to fixpoint.
-        head = und.limit(local_threshold + 1).toPandas()
-        if len(head) <= local_threshold:
-            return _kcore_local(head, k, edges.sparkSession)
+    # contracted graphs peel on the driver (the module note): rounds
+    # that cascade one node each cost microseconds instead of a
+    # scheduler round-trip. max_rounds/on_exhaustion only govern the
+    # distributed loop — the local peel runs to fixpoint.
+    head = local_rows(und, LOCAL_PEEL_ROWS, arrow=True)
+    if head is not None:
+        return _kcore_local(head, k, edges.sparkSession)
 
     n_before = None  # carried across rounds: round r's survivors are
     # round r+1's population, so ONE count job per round suffices
@@ -1445,7 +1426,6 @@ def k_truss(
     dst: str = "dst",
     max_rounds: int = 100,
     on_exhaustion: str = "raise",
-    local_threshold: int | None = 1 << 20,
 ) -> DataFrame:
     """The k-truss of an undirected graph: the maximal subgraph where
     every EDGE sits in at least k-2 triangles (Cohen 2008, public
@@ -1523,56 +1503,50 @@ def k_truss(
             .agg(F.count("*").alias("support"))
         )
 
-    if staging_dir(edges.sparkSession) is None and local_threshold is not None:
-        # truss peeling runs on CONTRACTED graphs (the gate/bench
-        # fixture's node domain is mod-1000, so its distinct edge
-        # count is bounded no matter the input scale); wedge work per
-        # round is the expensive part and the local peel does it in
-        # one numpy pass per round instead of 3 shuffle joins. The
-        # threshold bounds the pulled edge list (1 << 20 canonical
-        # pairs ~ 16 MB, the kcore bound; past it the wedge census is
-        # typically large enough that the distributed peel's
-        # parallelism beats one process's latency-bound probes —
-        # measured at 3.5M edges / 810M wedges: ~150 s distributed on
-        # local[16] vs ~190 s for the vectorized numpy peel); durable
-        # staging disables it (kcore discipline), tests pin local == dist.
-        head = e.limit(local_threshold + 1).toPandas()
-        if len(head) <= local_threshold:
-            # id-range guard (advisor r11): the local peel packs edges
-            # as a*(2^32)+b in int64, which silently WRAPS for ids >=
-            # 2^31 (products overflow) and breaks the packed sort
-            # order for negative ids. Graphs carrying 64-bit hash ids
-            # or signed ids fall through to the distributed peel,
-            # which never packs.
-            if len(head) == 0 or (
-                int(head["a"].min()) >= 0
-                and int(head["b"].max()) < (1 << 31)
-            ):
-                return _k_truss_local(head, k, edges.sparkSession)
-        else:
-            # dense-domain probe (r13): past the edge-count bound a
-            # SMALL NODE DOMAIN still admits the local A@A matmul path
-            # — a 4096-node graph supports at most ~8.4M canonical
-            # edges (~130 MB pulled), and one matmul round is ~1.4e11
-            # flops, far cheaper than a distributed wedge census over
-            # hundreds of millions of triangles (measured: the 4x
-            # dense growth probe, 1.4M edges / 226M triangles, 37 s
-            # distributed -> ~3 s matmul). One tiny agg job decides;
-            # huge-domain graphs fall through unchanged.
-            rng = e.agg(
-                F.min("a").alias("lo"),
-                F.max("b").alias("hi"),
-                F.count("*").alias("m"),
-            ).first()
-            if (
-                rng["lo"] is not None
-                and int(rng["lo"]) >= 0
-                and int(rng["hi"]) < _DENSE_DOMAIN_IDS
-                and int(rng["m"]) <= (1 << 23)
-            ):
-                return _k_truss_local(
-                    e.toPandas(), k, edges.sparkSession
-                )
+    # truss peeling runs on CONTRACTED graphs (the gate/bench fixture's
+    # node domain is mod-1000, so its distinct edge count is bounded no
+    # matter the input scale); wedge work per round is the expensive
+    # part and the local peel does it in one numpy pass per round
+    # instead of 3 shuffle joins. The bound on the pulled edge list is
+    # the kcore one (LOCAL_PEEL_ROWS canonical pairs ~ 16 MB); past it
+    # the wedge census is typically large enough that the distributed
+    # peel's parallelism beats one process's latency-bound probes —
+    # measured at 3.5M edges / 810M wedges: ~150 s distributed on
+    # local[16] vs ~190 s for the vectorized numpy peel. Tests pin
+    # local == dist.
+    head = local_rows(e, LOCAL_PEEL_ROWS, arrow=True)
+    if head is not None:
+        # id-range guard (advisor r11): the local peel packs edges as
+        # a*(2^32)+b in int64, which silently WRAPS for ids >= 2^31
+        # (products overflow) and breaks the packed sort order for
+        # negative ids. Graphs carrying 64-bit hash ids or signed ids
+        # fall through to the distributed peel, which never packs.
+        if len(head) == 0 or (
+            int(head["a"].min()) >= 0 and int(head["b"].max()) < (1 << 31)
+        ):
+            return _k_truss_local(head, k, edges.sparkSession)
+    elif local_fold_limit(edges.sparkSession, LOCAL_PEEL_ROWS) > 0:
+        # dense-domain probe (r13): past the edge-count bound a SMALL
+        # NODE DOMAIN still admits the local A@A matmul path — a
+        # 4096-node graph supports at most ~8.4M canonical edges
+        # (~130 MB pulled), and one matmul round is ~1.4e11 flops, far
+        # cheaper than a distributed wedge census over hundreds of
+        # millions of triangles (measured: the 4x dense growth probe,
+        # 1.4M edges / 226M triangles, 37 s distributed -> ~3 s
+        # matmul). One tiny agg job decides; huge-domain graphs fall
+        # through unchanged.
+        rng = e.agg(
+            F.min("a").alias("lo"),
+            F.max("b").alias("hi"),
+            F.count("*").alias("m"),
+        ).first()
+        if (
+            rng["lo"] is not None
+            and int(rng["lo"]) >= 0
+            and int(rng["hi"]) < _DENSE_DOMAIN_IDS
+            and int(rng["m"]) <= (1 << 23)
+        ):
+            return _k_truss_local(e.toPandas(), k, edges.sparkSession)
 
     # Incremental support maintenance (advisor r11): the full
     # oriented-wedge census runs ONCE; every later round recounts only
@@ -1740,7 +1714,6 @@ def personalized_pagerank(
     seed_col: str = "id",
     iterations: int = 10,
     damping: float = 0.85,
-    local_threshold: int | None = SMALL_GRAPH_EDGES,
     stage_every: int = 5,
 ) -> DataFrame:
     """Personalized PageRank (Page et al. 1999 §6; Haveliwala 2002,
@@ -1760,7 +1733,7 @@ def personalized_pagerank(
     ``seed_col``) and stay distributed: the reset vector is a left
     join against the node list, never a driver collect (the local
     fast path intersects seeds with the contracted node set, which is
-    driver-small by the threshold's definition).
+    driver-small by the local-fold limit's definition).
 
     Scale: identical to ``pagerank`` — static edge+outdeg side staged
     once, one |edges| shuffle per round, lineage truncated every
@@ -1773,21 +1746,18 @@ def personalized_pagerank(
         "ppr_edges",
     )
     sd = seeds.select(F.col(seed_col).alias("id")).distinct()
+    head = local_rows(e, LOCAL_FOLD_ROWS)
+    if head is not None:
+        node_set = {x for r in head for x in (r["src"], r["dst"])}
+        seed_set = {
+            r["id"]
+            for r in sd.filter(F.col("id").isin(list(node_set))).collect()
+        }
+        return _ppr_local(
+            [(r["src"], r["dst"]) for r in head],
+            seed_set, iterations, damping, edges.sparkSession,
+        )
     durable = staging_dir(edges.sparkSession) is not None
-    if not durable and local_threshold is not None:
-        head = e.limit(local_threshold + 1).collect()
-        if len(head) <= local_threshold:
-            node_set = {x for r in head for x in (r["src"], r["dst"])}
-            seed_set = {
-                r["id"]
-                for r in sd.filter(
-                    F.col("id").isin(list(node_set))
-                ).collect()
-            }
-            return _ppr_local(
-                [(r["src"], r["dst"]) for r in head],
-                seed_set, iterations, damping, edges.sparkSession,
-            )
     nodes = stage(
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))

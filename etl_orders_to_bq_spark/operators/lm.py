@@ -2260,18 +2260,17 @@ def _unigram_census_try(
     vocab_size: int,
     rounds: int,
     mp: int,
-    local_threshold: int | None,
 ):
     """Collect the staged distinct-word census when it fits the
-    bounded-collect budget and run the EM driver-locally; None when
-    the vocabulary is too large (caller falls back to the distributed
+    local-fold limit and run the EM driver-locally; None when the
+    vocabulary is too large (caller falls back to the distributed
     loop over the same staged census). The census is vocabulary-sized
     at ANY corpus scale — this is the 100 TB story: one
     tokenize+groupBy scan, then zero per-round jobs."""
-    if local_threshold is None:
-        return None
-    rows = words.limit(int(local_threshold) + 1).collect()
-    if len(rows) > int(local_threshold):
+    from .staging import LOCAL_FOLD_ROWS, local_rows
+
+    rows = local_rows(words, LOCAL_FOLD_ROWS)
+    if rows is None:
         return None
     word_rows = [(r["__w"], int(r["__n"])) for r in rows]
     vocab_items, segment = _unigram_census_em(
@@ -2389,7 +2388,6 @@ def unigram_lm_train(
     rounds: int = 3,
     max_piece: int = 4,
     max_word: int = 16,
-    local_threshold: int | None = 65536,
 ) -> DataFrame:
     """Unigram-LM subword vocabulary training (Kudo 2018 / the
     SentencePiece trainer, public literature) — the third of the three
@@ -2426,7 +2424,7 @@ def unigram_lm_train(
 
     Scale: one corpus-sized tokenize+groupBy; everything after is
     bounded by |distinct words|. When the distinct-word census fits
-    the bounded-collect budget (``local_threshold`` rows, the
+    the local-fold limit (``staging.local_rows``, the
     gmm_em/logistic_irls census-fit discipline) the WHOLE EM loop
     replays driver-locally from one collect — zero per-round jobs,
     bit-identical results (test_unigram_census_fit_matches_
@@ -2436,14 +2434,14 @@ def unigram_lm_train(
     No counterpart in the reference engine (SURVEY.md §2.2).
 
     Construction runs Spark jobs: the staged census, its collect
-    (skipped when ``local_threshold`` is None) and, when the census
-    does not fit, the staged per-round fit. Only the returned frame is
-    lazy.
+    (skipped at a local-fold limit of 0 or under durable staging) and,
+    when the census does not fit, the staged per-round fit. Only the
+    returned frame is lazy.
     """
     words = _unigram_words_census(df, text_col, int(max_word))
     fit = _unigram_census_try(
         words, int(seed_size), int(vocab_size), int(rounds),
-        int(max_piece), local_threshold,
+        int(max_piece),
     )
     if fit is not None:
         _, vocab_items, _ = fit
@@ -2480,7 +2478,6 @@ def unigram_encode(
     rounds: int = 3,
     max_piece: int = 4,
     max_word: int = 16,
-    local_threshold: int | None = 65536,
 ) -> DataFrame:
     """Segment the corpus's distinct words under a freshly-trained
     unigram LM (``unigram_lm_train``'s fit, then ONE more Viterbi
@@ -2496,7 +2493,7 @@ def unigram_encode(
 
     Scale: identical to the trainer — everything after the distinct
     groupBy is vocabulary-sized, one bounded fold per word; the same
-    ``local_threshold`` census gate replays the fit AND this final
+    local-fold census gate replays the fit AND this final
     segmentation pass driver-locally when the vocabulary is bounded.
 
     Construction runs Spark jobs, as ``unigram_lm_train``'s does.
@@ -2504,7 +2501,7 @@ def unigram_encode(
     words = _unigram_words_census(df, text_col, int(max_word))
     fit = _unigram_census_try(
         words, int(seed_size), int(vocab_size), int(rounds),
-        int(max_piece), local_threshold,
+        int(max_piece),
     )
     if fit is not None:
         word_rows, _, segment = fit

@@ -34,6 +34,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .staging import LOCAL_FOLD_ROWS, local_fold_limit
+
 
 def _round6(x: float) -> float:
     """Half-away 6dp (the pacf_durbin driver-side discipline)."""
@@ -117,13 +119,27 @@ def _gmm_census_fit(vs, cnts, n, w1, mu1, s1, mu2, s2, rounds):
     return rounds_run, w1, mu1, s1, mu2, s2
 
 
+def _gmm_frame(spark, n: int, fit: tuple | None) -> DataFrame:
+    """gmm_em_1d's one output row from ``fit`` = (rounds_run, w1, mu1,
+    s1, mu2, s2) in cents; None for a fit that never started (n < 2)."""
+    if fit is None:
+        row = (n, 0, None, None, None, None, None)
+    else:
+        rounds_run, w1, *cents = fit
+        row = (n, rounds_run, w1, *(_round6(c / 100.0) for c in cents))
+    return spark.createDataFrame(
+        [row],
+        "n long, rounds_run long, weight_1 double, mu_1 double, "
+        "sigma_1 double, mu_2 double, sigma_2 double",
+    )
+
+
 def gmm_em_1d(
     df: DataFrame,
     value_col: str,
     rounds: int = 6,
     ndigits: int = 6,
     census_compress: bool = True,
-    local_threshold: int | None = 65536,
 ) -> DataFrame:
     """Fit ``p(v) = w1 N(mu1, s1) + (1-w1) N(mu2, s2)`` by ``rounds``
     fixed EM iterations over exact integer cents.
@@ -145,11 +161,12 @@ def gmm_em_1d(
     term is a pure function of the cents value, so a distinct-value
     census with counts replays the row sums EXACTLY. With
     ``census_compress`` (default) the fit censuses values first; when
-    the census fits the bounded-collect budget (``local_threshold``
-    rows, <= 65536 ~ 1 MB) the whole EM loop runs driver-local
-    (``_gmm_census_fit``; numpy float64 == JVM double op-for-op) with
-    ONE Spark job instead of 1 + rounds corpus scans. High-cardinality
-    values fall back to the original per-round distributed scans.
+    the census fits the local-fold limit (``staging.local_fold_limit``,
+    by default ``LOCAL_FOLD_ROWS`` rows ~ 1 MB) the whole EM loop runs
+    driver-local (``_gmm_census_fit``; numpy float64 == JVM double
+    op-for-op) with ONE Spark job instead of 1 + rounds corpus scans.
+    High-cardinality values fall back to the original per-round
+    distributed scans.
     Both paths pinned identical by
     ``test_gmm_census_fit_matches_distributed``.
     """
@@ -164,7 +181,8 @@ def gmm_em_1d(
     dec38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     z38 = F.lit(0).cast("decimal(38,0)")
     census_rows = None
-    if census_compress and local_threshold is not None:
+    limit = local_fold_limit(spark0, LOCAL_FOLD_ROWS)
+    if census_compress and limit > 0:
         comp = (
             proj.groupBy("__v")
             .agg(F.count("*").cast("long").alias("__cnt"))
@@ -177,17 +195,12 @@ def gmm_em_1d(
             ),
         ).first()
         m_groups, n = int(st["m"]), int(st["n"])
-        if m_groups <= int(local_threshold):
+        if m_groups <= limit:
             census_rows = comp.collect()
         comp.unpersist()
         if census_rows is not None:
             if n < 2:
-                return spark0.createDataFrame(
-                    [(n, 0, None, None, None, None, None)],
-                    "n long, rounds_run long, weight_1 double, "
-                    "mu_1 double, sigma_1 double, mu_2 double, "
-                    "sigma_2 double",
-                )
+                return _gmm_frame(spark0, n, None)
             vl = [int(r["__v"]) for r in census_rows]
             cl = [int(r["__cnt"]) for r in census_rows]
             # exact integer moments == the distributed decimal sums
@@ -196,7 +209,7 @@ def gmm_em_1d(
             mean = float(s) / float(n)
             var = float(n * ss - s * s) / (float(n) * float(n))
             std = math.sqrt(var) if var > 0 else 0.0
-            rounds_run, w1, mu1, s1, mu2, s2 = _gmm_census_fit(
+            fit = _gmm_census_fit(
                 vl,
                 cl,
                 n,
@@ -207,22 +220,7 @@ def gmm_em_1d(
                 _round6(std),
                 int(rounds) if std > 0.0 else 0,
             )
-            return spark0.createDataFrame(
-                [
-                    (
-                        n,
-                        rounds_run,
-                        w1,
-                        _round6(mu1 / 100.0),
-                        _round6(s1 / 100.0),
-                        _round6(mu2 / 100.0),
-                        _round6(s2 / 100.0),
-                    )
-                ],
-                "n long, rounds_run long, weight_1 double, "
-                "mu_1 double, sigma_1 double, mu_2 double, "
-                "sigma_2 double",
-            )
+            return _gmm_frame(spark0, n, fit)
     base = proj.persist()  # every EM round rescans; one long col cached
     mom = base.agg(
         F.count("*").cast("long").alias("n"),
@@ -234,11 +232,7 @@ def gmm_em_1d(
     n = int(mom["n"])
     if n < 2:
         base.unpersist()
-        return df.sparkSession.createDataFrame(
-            [(n, 0, None, None, None, None, None)],
-            "n long, rounds_run long, weight_1 double, mu_1 double, "
-            "sigma_1 double, mu_2 double, sigma_2 double",
-        )
+        return _gmm_frame(spark0, n, None)
     s, ss = int(mom["s"]), int(mom["ss"])
     # float() each exact integer BEFORE dividing — the oracle casts
     # decimal -> double then divides, and matching that two-step
@@ -320,18 +314,4 @@ def gmm_em_1d(
         mu2, s2 = _round6(nmu2), _round6(math.sqrt(nvar2))
         rounds_run += 1
     base.unpersist()
-    return df.sparkSession.createDataFrame(
-        [
-            (
-                n,
-                rounds_run,
-                w1,
-                _round6(mu1 / 100.0),
-                _round6(s1 / 100.0),
-                _round6(mu2 / 100.0),
-                _round6(s2 / 100.0),
-            )
-        ],
-        "n long, rounds_run long, weight_1 double, mu_1 double, "
-        "sigma_1 double, mu_2 double, sigma_2 double",
-    )
+    return _gmm_frame(spark0, n, (rounds_run, w1, mu1, s1, mu2, s2))

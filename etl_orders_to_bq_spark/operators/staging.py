@@ -19,6 +19,15 @@ else:
 ``spark.checkpoint.dir`` cannot be the switch: it is a core setting,
 fixed at runtime, and a reliable RDD checkpoint lacks the parquet
 reread's file-size stats (see :func:`rebind_checkpoint_stats`).
+
+Driver-local folds have one door too: when a staged census or edge
+list is small, one bounded collect (:func:`local_rows`) fetches it and
+the loop replays on the driver, pinned equal to the distributed loop by
+twin tests. The limit is ``spark.graft.localFoldMaxRows``, read by
+:func:`local_fold_limit` and nowhere else: unset, each operator's
+default (:data:`LOCAL_FOLD_ROWS`, or :data:`LOCAL_PEEL_ROWS` for the
+Arrow-pulled peels); N, at most N rows; 0, never, and no probe job
+runs. A set ``spark.graft.stagingDir`` also means 0.
 """
 
 from __future__ import annotations
@@ -30,6 +39,12 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 
 STAGING_DIR_CONF = "spark.graft.stagingDir"
+LOCAL_FOLD_CONF = "spark.graft.localFoldMaxRows"
+
+# Default local-fold bounds: rows collected as Python tuples (64k x ~16 B
+# ~ 1 MB), and edge lists pulled through Arrow for the peels (~16 MB).
+LOCAL_FOLD_ROWS = 1 << 16
+LOCAL_PEEL_ROWS = 1 << 20
 
 
 def staging_dir(spark: SparkSession) -> str | None:
@@ -37,18 +52,49 @@ def staging_dir(spark: SparkSession) -> str | None:
     return spark.conf.get(STAGING_DIR_CONF, None)
 
 
+def local_fold_limit(spark: SparkSession, default: int) -> int:
+    """The most rows an operator may fold driver-locally (<= 0: never):
+    the session setting, else ``default``; 0 under durable staging."""
+    if staging_dir(spark) is not None:
+        return 0
+    value = spark.conf.get(LOCAL_FOLD_CONF, None)
+    return default if value is None else int(value)
+
+
+def local_rows(df: DataFrame, default: int, arrow: bool = False):
+    """``df``'s Rows (a pandas frame with ``arrow``) if it has at most
+    :func:`local_fold_limit` rows, else None. One job of limit+1 rows
+    decides and fetches; none runs at a limit of 0."""
+    limit = local_fold_limit(df.sparkSession, default)
+    if limit <= 0:
+        return None
+    head = df.limit(limit + 1)
+    head = head.toPandas() if arrow else head.collect()
+    return head if len(head) <= limit else None
+
+
 @contextmanager
-def durable_staging(spark: SparkSession, path: str) -> Iterator[None]:
-    """Stage under ``path`` inside the block, then restore the setting."""
-    prev = staging_dir(spark)
-    spark.conf.set(STAGING_DIR_CONF, path)
+def _session_setting(spark: SparkSession, key: str, value: str) -> Iterator:
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
     try:
         yield
     finally:
         if prev is None:
-            spark.conf.unset(STAGING_DIR_CONF)
+            spark.conf.unset(key)
         else:
-            spark.conf.set(STAGING_DIR_CONF, prev)
+            spark.conf.set(key, prev)
+
+
+def durable_staging(spark: SparkSession, path: str):
+    """Stage under ``path`` inside the block, then restore the setting."""
+    return _session_setting(spark, STAGING_DIR_CONF, path)
+
+
+def local_fold_max_rows(spark: SparkSession, n: int):
+    """Fold at most ``n`` rows driver-locally inside the block (0: the
+    distributed loop always), then restore the setting."""
+    return _session_setting(spark, LOCAL_FOLD_CONF, str(int(n)))
 
 
 def rebind_checkpoint_stats(df: DataFrame) -> None:

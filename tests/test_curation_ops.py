@@ -556,30 +556,31 @@ def test_kcore_exhaustion_modes(spark):
     import pytest
 
     from etl_orders_to_bq_spark.operators.graph import kcore
+    from etl_orders_to_bq_spark.operators.staging import local_fold_max_rows
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(8)], "src long, dst long"
     )
-    # local_threshold=None throughout: the driver-local numpy peel
+    # local-fold limit 0 throughout: the driver-local numpy peel
     # runs to fixpoint and never exhausts, so pin the distributed loop
-    with pytest.raises(RuntimeError, match="did not converge"):
-        kcore(chain, k=2, max_rounds=2, local_threshold=None)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        partial = kcore(
-            chain, k=2, max_rounds=2, on_exhaustion="return",
-            local_threshold=None,
-        )
-        n_partial = partial.count()
-    assert any("max_rounds" in str(x.message) for x in w)
-    # 2 rounds peeled 2 nodes off each end; true 2-core of a chain is
-    # empty, so the partial result is a strict superset
-    assert 0 < n_partial < 9
-    with pytest.raises(ValueError, match="on_exhaustion"):
-        kcore(chain, k=2, on_exhaustion="keep")
-    # and with the (new, generous) default rounds the chain does
-    # converge — to the empty core
-    assert kcore(chain, k=2, local_threshold=None).count() == 0
+    with local_fold_max_rows(spark, 0):
+        with pytest.raises(RuntimeError, match="did not converge"):
+            kcore(chain, k=2, max_rounds=2)
+        with warnings.catch_warnings(record=True) as w:
+            warnings.simplefilter("always")
+            partial = kcore(
+                chain, k=2, max_rounds=2, on_exhaustion="return"
+            )
+            n_partial = partial.count()
+        assert any("max_rounds" in str(x.message) for x in w)
+        # 2 rounds peeled 2 nodes off each end; true 2-core of a chain
+        # is empty, so the partial result is a strict superset
+        assert 0 < n_partial < 9
+        with pytest.raises(ValueError, match="on_exhaustion"):
+            kcore(chain, k=2, on_exhaustion="keep")
+        # and with the (new, generous) default rounds the chain does
+        # converge — to the empty core
+        assert kcore(chain, k=2).count() == 0
 
 
 def test_guard_rails_survivorship_and_attribution(spark):
@@ -827,23 +828,22 @@ def test_label_propagation_early_exit_two_communities(spark):
     the fixed 4-round contract agree. Both the driver-local fast path
     and the pinned distributed loop are exercised."""
     from etl_orders_to_bq_spark.operators.graph import label_propagation
+    from etl_orders_to_bq_spark.operators.staging import local_fold_max_rows
 
     tri = [(0, 1), (1, 2), (0, 2), (10, 11), (11, 12), (10, 12), (2, 10)]
     edges = spark.createDataFrame(tri, "src long, dst long")
-    for thresh in (None, 64_000):  # distributed loop / local fast path
-        fixed = {
-            r["id"]: r["label"]
-            for r in label_propagation(
-                edges, rounds=4, local_threshold=thresh
-            ).collect()
-        }
-        conv = {
-            r["id"]: r["label"]
-            for r in label_propagation(
-                edges, rounds=50, local_threshold=thresh,
-                until_converged=True,
-            ).collect()
-        }
+    for thresh in (0, 64_000):  # distributed loop / local fast path
+        with local_fold_max_rows(spark, thresh):
+            fixed = {
+                r["id"]: r["label"]
+                for r in label_propagation(edges, rounds=4).collect()
+            }
+            conv = {
+                r["id"]: r["label"]
+                for r in label_propagation(
+                    edges, rounds=50, until_converged=True
+                ).collect()
+            }
         assert conv == fixed, thresh
         # two communities: each triangle collapses to its min label
         assert conv[0] == conv[1] == conv[2] == 0

@@ -378,20 +378,22 @@ def test_connected_components_exhaustion_raises(spark):
     import pytest as _pytest
 
     from etl_orders_to_bq_spark.operators.graph import connected_components
+    from etl_orders_to_bq_spark.operators.staging import local_fold_max_rows
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "id_a long, id_b long"
     )
-    # local_threshold=None: the driver-local fast path is exact
+    # local-fold limit 0: the driver-local fast path is exact
     # union-find and never exhausts, so pin the distributed loop
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=2, local_threshold=None)
-    # warn mode returns partial labels instead
-    with _pytest.warns(UserWarning, match="did not converge"):
-        out = connected_components(
-            edges, max_iter=2, on_exhaustion="warn", local_threshold=None
-        )
-        assert out.count() == 41
+    with local_fold_max_rows(spark, 0):
+        with _pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(edges, max_iter=2)
+        # warn mode returns partial labels instead
+        with _pytest.warns(UserWarning, match="did not converge"):
+            out = connected_components(
+                edges, max_iter=2, on_exhaustion="warn"
+            )
+            assert out.count() == 41
 
 
 def test_minhash_xxhash64_fast_path(spark):
@@ -1044,28 +1046,29 @@ def test_minhash_hash_families_agree_on_true_dups_not_fp(spark):
 
 def test_small_graph_local_fast_paths_match_distributed(spark, tmp_path):
     """connected_components and pagerank switch to an exact driver-
-    local iteration when the staged edge set fits SMALL_GRAPH_EDGES
+    local iteration when the staged edge set fits the local-fold limit
     (contracted graphs are scale-independent; per-round Catalyst
     planning dominates otherwise). The fast path must be
     indistinguishable: identical components, ranks equal to the
     distributed formula well past the 6dp gate rounding, and both
-    knobs (local_threshold=None, spark.graft.stagingDir) must force the
-    distributed path."""
+    settings (a local-fold limit of 0, spark.graft.stagingDir) must
+    force the distributed path."""
     from etl_orders_to_bq_spark.operators.graph import (
         connected_components,
         pagerank,
     )
-    from etl_orders_to_bq_spark.operators.staging import durable_staging
+    from etl_orders_to_bq_spark.operators.staging import (
+        durable_staging,
+        local_fold_max_rows,
+    )
 
     edges = spark.createDataFrame(
         [(i, (i * i + 1) % 41) for i in range(200)] + [(7, 7), (40, 3)],
         "id_a long, id_b long",
     )
     local = {tuple(r) for r in connected_components(edges).collect()}
-    dist = {
-        tuple(r)
-        for r in connected_components(edges, local_threshold=None).collect()
-    }
+    with local_fold_max_rows(spark, 0):
+        dist = {tuple(r) for r in connected_components(edges).collect()}
     assert local == dist
     # the durable setting forces the distributed loop: only that loop
     # stages per-round label frames
@@ -1078,12 +1081,11 @@ def test_small_graph_local_fast_paths_match_distributed(spark, tmp_path):
         r["id"]: r["rank"]
         for r in pagerank(edges, "id_a", "id_b", iterations=7).collect()
     }
-    pr_dist = {
-        r["id"]: r["rank"]
-        for r in pagerank(
-            edges, "id_a", "id_b", iterations=7, local_threshold=None
-        ).collect()
-    }
+    with local_fold_max_rows(spark, 0):
+        pr_dist = {
+            r["id"]: r["rank"]
+            for r in pagerank(edges, "id_a", "id_b", iterations=7).collect()
+        }
     assert set(pr_local) == set(pr_dist)
     assert all(abs(pr_local[k] - pr_dist[k]) < 1e-12 for k in pr_dist)
     with durable_staging(spark, str(tmp_path / "pr")):
@@ -1106,6 +1108,7 @@ def test_kcore_local_peel_matches_distributed(spark):
     runs to fixpoint regardless of max_rounds (which only bounds the
     distributed loop)."""
     from etl_orders_to_bq_spark.operators.graph import kcore
+    from etl_orders_to_bq_spark.operators.staging import local_fold_max_rows
 
     # clique of 8 (7-regular) with a 30-node chain hanging off node 0
     clique = [(i, j) for i in range(8) for j in range(i + 1, 8)]
@@ -1113,10 +1116,8 @@ def test_kcore_local_peel_matches_distributed(spark):
     edges = spark.createDataFrame(clique + chain, "src long, dst long")
 
     loc = sorted(tuple(r) for r in kcore(edges, k=3).collect())
-    dist = sorted(
-        tuple(r)
-        for r in kcore(edges, k=3, local_threshold=None).collect()
-    )
+    with local_fold_max_rows(spark, 0):
+        dist = sorted(tuple(r) for r in kcore(edges, k=3).collect())
     assert loc == dist
     assert loc == [(i, 7) for i in range(8)]  # the clique, chain peeled
     # the chain cascades one node per round: a tight max_rounds would

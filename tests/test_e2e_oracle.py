@@ -1,89 +1,45 @@
 """Full-frame e2e parity: the Spark pipeline output must equal an
 independent pandas implementation of the reference semantics
-(reference etl/orders_etl.py:70-116) row for row, value for value."""
+(reference etl/orders_etl.py:70-116) row for row, value for value.
 
-import html
-import re
+The pandas implementation is the benchmark's ``perfbench/oracle.py::
+etl_oracle``; it is checked against the reference input files and
+against ``perfbench/gen.py`` data written at fixed seeds, so the parity
+check runs on a host without the reference files too."""
 
 import pandas as pd
 import pytest
 
+from perfbench.gen import write_dataset
+from perfbench.oracle import etl_oracle
+
 ORDERS_CSV = "/root/reference/input_data/orders_s.csv"
 PRODUCTS_CSV = "/root/reference/input_data/products_s.csv"
 
-ORDERS_COLS = [
-    "order_source_id",
-    "order_created_datetime",
-    "customer_id",
-    "status",
-    "sum",
-    "quantity",
-    "name",
-    "surname",
-    "patronymic",
-    "product_id",
-]
 
-
-def _pandas_oracle() -> pd.DataFrame:
-    """Independent reimplementation (modern pandas, no reference code):
-    read -> repair/cast -> first-occurrence dedup -> clean names ->
-    left join."""
-    orders = pd.read_csv(ORDERS_CSV, usecols=ORDERS_COLS, dtype=str)
-    products = pd.read_csv(
-        PRODUCTS_CSV,
-        usecols=["product_id", "price", "goods_group", "manufacturer"],
-        dtype=str,
-    )
-
-    orders["sum"] = orders["sum"].str.replace(",", ".", regex=False).astype(float)
-    orders["product_id"] = (
-        orders["product_id"].str.replace(r"\D", "", regex=True).astype("int64")
-    )
-    orders["order_source_id"] = orders["order_source_id"].astype("int64")
-    orders["customer_id"] = orders["customer_id"].astype("int64")
-    orders["quantity"] = orders["quantity"].astype("int64")
-    orders["order_created_datetime"] = pd.to_datetime(
-        orders["order_created_datetime"]
-    )
-    orders = orders.drop_duplicates(
-        subset=["order_source_id", "product_id"], keep="first"
-    )
-
-    pattern = (
-        r"\d|\s|^(-)$|(^\w{1}$)|(^[aoueiyаяєоуиіїе]{0,}$)"
-        r"|(^[^aoueiyаяєоуиіїе]{0,}$)"
-    )
-
-    def clean(v):
-        if pd.isna(v):
-            return v
-        v = html.unescape(v).lower()
-        v = re.sub(r"\d", "", v)
-        return re.sub(pattern, "", v)
-
-    for c in ["name", "surname", "patronymic"]:
-        orders[c] = orders[c].map(clean)
-
-    products["product_id"] = products["product_id"].astype("int64")
-    products["price"] = products["price"].astype(float)
-    products = products.drop_duplicates(subset="product_id", keep="first")
-
-    return orders.merge(products, how="left", on="product_id")
-
-
-def test_full_frame_parity(spark):
+def _assert_pipeline_parity(spark, orders_csv: str, products_csv: str):
     from etl_orders_to_bq_spark.pipeline import OrdersEtl
 
-    etl = OrdersEtl(spark, ORDERS_CSV, PRODUCTS_CSV)
-    got = etl.process().toPandas()
-    exp = _pandas_oracle()
+    got = OrdersEtl(spark, orders_csv, products_csv).process().toPandas()
+    exp = etl_oracle(orders_csv, products_csv)
 
     assert list(got.columns) == list(exp.columns)
     key = ["order_source_id", "product_id"]
     got = got.sort_values(key).reset_index(drop=True)
     exp = exp.sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+    return got
+
+
+def test_full_frame_parity(spark):
+    _assert_pipeline_parity(spark, ORDERS_CSV, PRODUCTS_CSV)
+
+
+@pytest.mark.parametrize("seed", [3, 17])
+def test_generated_frame_parity(spark, tmp_path, seed):
+    ds = write_dataset(tmp_path, seed, n_orders=2000, n_products=500)
+    got = _assert_pipeline_parity(spark, ds.orders_csv, ds.products_csv)
+    assert len(got) == ds.truth["output_rows"]
 
 
 def test_asof_join_matches_pandas_merge_asof(spark):

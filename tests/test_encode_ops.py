@@ -330,13 +330,14 @@ def test_unigram_lm_single_char_coverage_floor(spark):
 
 
 def test_unigram_census_fit_matches_distributed(spark):
-    """The driver-local census EM (default local_threshold) must equal
-    the distributed staged loop (local_threshold=None) BIT-FOR-BIT —
+    """The driver-local census EM (default local-fold limit) must equal
+    the distributed staged loop (limit 0) BIT-FOR-BIT —
     same vocab, same counts, same rounded probabilities — on a corpus
     with score ties (repeated bigrams), multi-round pruning pressure,
     and chars that only survive via the coverage floor. Same pin
     discipline as test_gmm_census_fit_matches_distributed."""
     from etl_orders_to_bq_spark.operators.lm import unigram_lm_train
+    from etl_orders_to_bq_spark.operators.staging import local_fold_max_rows
 
     docs = [
         ("abab abab ab banana bandana",),
@@ -351,9 +352,8 @@ def test_unigram_census_fit_matches_distributed(spark):
         dict(seed_size=6, vocab_size=2, rounds=1, max_piece=2),
     ):
         a = unigram_lm_train(df, "text", max_word=16, **kw).collect()
-        b = unigram_lm_train(
-            df, "text", max_word=16, local_threshold=None, **kw
-        ).collect()
+        with local_fold_max_rows(spark, 0):
+            b = unigram_lm_train(df, "text", max_word=16, **kw).collect()
         assert a == b, kw
 
 
@@ -362,6 +362,7 @@ def test_unigram_encode_census_matches_distributed(spark):
     Viterbi segmentation must equal the distributed DP fold exactly
     (words, counts, piece splits, piece order)."""
     from etl_orders_to_bq_spark.operators.lm import unigram_encode
+    from etl_orders_to_bq_spark.operators.staging import local_fold_max_rows
 
     docs = [
         ("abab abab ab banana bandana",),
@@ -373,15 +374,16 @@ def test_unigram_encode_census_matches_distributed(spark):
         df, "text", seed_size=40, vocab_size=16, rounds=3,
         max_piece=4, max_word=16,
     ).collect()
-    b = unigram_encode(
-        df, "text", seed_size=40, vocab_size=16, rounds=3,
-        max_piece=4, max_word=16, local_threshold=None,
-    ).collect()
+    with local_fold_max_rows(spark, 0):
+        b = unigram_encode(
+            df, "text", seed_size=40, vocab_size=16, rounds=3,
+            max_piece=4, max_word=16,
+        ).collect()
     assert a == b
 
 
 def test_unigram_fallback_scans_corpus_once(spark):
-    """When the census exceeds local_threshold, the bounded-collect
+    """When the census exceeds the local-fold limit, the bounded-collect
     probe and the distributed fit read ONE staged census: building
     either frame scans the corpus once, not once per consumer."""
     from pyspark.sql import functions as F
@@ -390,6 +392,7 @@ def test_unigram_fallback_scans_corpus_once(spark):
         unigram_encode,
         unigram_lm_train,
     )
+    from etl_orders_to_bq_spark.operators.staging import local_fold_max_rows
 
     docs = [
         ("abab abab ab banana bandana",),
@@ -406,9 +409,10 @@ def test_unigram_fallback_scans_corpus_once(spark):
         df = spark.createDataFrame(docs, ["text"]).select(
             F.udf(tally, "string")("text").alias("text")
         )
-        build(
-            df, "text", seed_size=12, vocab_size=8, rounds=2,
-            max_piece=3, local_threshold=2,
-        )
+        with local_fold_max_rows(spark, 2):
+            build(
+                df, "text", seed_size=12, vocab_size=8, rounds=2,
+                max_piece=3,
+            )
         assert scanned.value == len(docs), build.__name__
 

@@ -746,6 +746,9 @@ class TestPersonalizedPagerank:
         from etl_orders_to_bq_spark.operators.graph import (
             personalized_pagerank,
         )
+        from etl_orders_to_bq_spark.operators.staging import (
+            local_fold_max_rows,
+        )
 
         pairs = [(i, (i * 3 + 1) % 11) for i in range(11)] + [
             (i, (i + 5) % 11) for i in range(11)
@@ -757,12 +760,11 @@ class TestPersonalizedPagerank:
             r["id"]: r["rank"]
             for r in personalized_pagerank(edges, seeds).collect()
         }
-        dist = {
-            r["id"]: r["rank"]
-            for r in personalized_pagerank(
-                edges, seeds, local_threshold=None
-            ).collect()
-        }
+        with local_fold_max_rows(spark, 0):
+            dist = {
+                r["id"]: r["rank"]
+                for r in personalized_pagerank(edges, seeds).collect()
+            }
         assert set(loc) == set(dist)
         for v in loc:
             assert round(loc[v], 6) == round(dist[v], 6)
@@ -1419,10 +1421,13 @@ class TestLogisticIrls:
         from etl_orders_to_bq_spark.operators.classifier import (
             logistic_irls,
         )
+        from etl_orders_to_bq_spark.operators.staging import (
+            local_fold_max_rows,
+        )
 
         # low-cardinality features with repeats (plus nulls dropped by
         # the filter) so the census path engages: default -> driver
-        # local fit; local_threshold=None -> census-weighted
+        # local fit; local-fold limit 0 -> census-weighted
         # distributed loop; census_compress=False -> the original
         # full-row loop. All three must agree bit-for-bit.
         rows = [
@@ -1430,9 +1435,8 @@ class TestLogisticIrls:
         ] + [(None, 1.0, 1.0), (1, None, 2.0)]
         df = spark.createDataFrame(rows, "y int, x1 double, x2 double")
         a = logistic_irls(df, "x1", "x2", "y", iterations=6).collect()
-        b = logistic_irls(
-            df, "x1", "x2", "y", iterations=6, local_threshold=None
-        ).collect()
+        with local_fold_max_rows(spark, 0):
+            b = logistic_irls(df, "x1", "x2", "y", iterations=6).collect()
         c = logistic_irls(
             df, "x1", "x2", "y", iterations=6, census_compress=False
         ).collect()

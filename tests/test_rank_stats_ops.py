@@ -290,6 +290,7 @@ def test_k_truss_local_matches_distributed(spark):
     from pyspark.sql import functions as F
 
     from etl_orders_to_bq_spark.operators.graph import k_truss
+    from etl_orders_to_bq_spark.operators.staging import local_fold_max_rows
 
     li = spark.read.parquet(
         "/root/testdata/sf0.001/lineitem.parquet"
@@ -298,10 +299,8 @@ def test_k_truss_local_matches_distributed(spark):
         (F.col("l_partkey") % 200).alias("dst"),
     )
     loc = sorted(tuple(r) for r in k_truss(li, k=6).collect())
-    dist = sorted(
-        tuple(r)
-        for r in k_truss(li, k=6, local_threshold=None).collect()
-    )
+    with local_fold_max_rows(spark, 0):
+        dist = sorted(tuple(r) for r in k_truss(li, k=6).collect())
     assert loc == dist and len(loc) > 100
 
 
@@ -338,11 +337,12 @@ def test_k_truss_dense_matmul_matches_wedge_census(spark):
 def test_k_truss_dense_probe_past_edge_threshold(spark):
     """Graphs OVER the pulled-edge threshold but on a small node
     domain take the r13 dense-domain probe into the matmul path — a
-    tiny local_threshold forces the probe branch, and the result must
+    tiny local-fold limit forces the probe branch, and the result must
     match the distributed peel edge-for-edge."""
     from pyspark.sql import functions as F
 
     from etl_orders_to_bq_spark.operators.graph import k_truss
+    from etl_orders_to_bq_spark.operators.staging import local_fold_max_rows
 
     li = spark.read.parquet(
         "/root/testdata/sf0.001/lineitem.parquet"
@@ -350,13 +350,10 @@ def test_k_truss_dense_probe_past_edge_threshold(spark):
         (F.col("l_orderkey") % 300).alias("src"),
         (F.col("l_partkey") % 300).alias("dst"),
     )
-    probed = sorted(
-        tuple(r) for r in k_truss(li, k=4, local_threshold=100).collect()
-    )
-    dist = sorted(
-        tuple(r)
-        for r in k_truss(li, k=4, local_threshold=None).collect()
-    )
+    with local_fold_max_rows(spark, 100):
+        probed = sorted(tuple(r) for r in k_truss(li, k=4).collect())
+    with local_fold_max_rows(spark, 0):
+        dist = sorted(tuple(r) for r in k_truss(li, k=4).collect())
     assert probed == dist and len(probed) > 100
 
 
@@ -1218,17 +1215,16 @@ def test_k_truss_incremental_multi_round_cascade(spark):
     import pytest as _pytest
 
     from etl_orders_to_bq_spark.operators.graph import k_truss
+    from etl_orders_to_bq_spark.operators.staging import local_fold_max_rows
 
     n = 13  # 7 peel rounds (validated by the pure-python oracle)
     df = spark.createDataFrame(_truss_cascade_chain(n), ["src", "dst"])
-    with _pytest.raises(RuntimeError):
-        k_truss(df, k=4, local_threshold=None, max_rounds=3).count()
-    dist = sorted(
-        tuple(r)
-        for r in k_truss(
-            df, k=4, local_threshold=None, max_rounds=20
-        ).collect()
-    )
+    with local_fold_max_rows(spark, 0):
+        with _pytest.raises(RuntimeError):
+            k_truss(df, k=4, max_rounds=3).count()
+        dist = sorted(
+            tuple(r) for r in k_truss(df, k=4, max_rounds=20).collect()
+        )
     loc = sorted(tuple(r) for r in k_truss(df, k=4).collect())
     assert dist == loc and len(dist) > 0
     surv = {(a, b) for a, b, _ in dist}

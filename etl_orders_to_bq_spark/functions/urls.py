@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .exact import exact
+
 # tracking parameters dropped by canonicalization (the public
 # adtech-referrer set every pipeline starts from)
 TRACKING_PARAM_RE = r"^(utm_[^=]*|fbclid|gclid|msclkid|ref)(=|$)"
@@ -280,13 +282,11 @@ def domain_census(
             F.floor(
                 (
                     2
-                    * (
-                        F.count("*") - F.countDistinct("__fp")
-                    ).cast("decimal(38,0)")
+                    * exact(F.count("*") - F.countDistinct("__fp"))
                     * F.lit(int(10 ** ndigits))
-                    + F.count("*").cast("decimal(38,0)")
+                    + exact(F.count("*"))
                 )
-                / (2 * F.count("*").cast("decimal(38,0)"))
+                / (2 * exact(F.count("*")))
             )
             / F.lit(float(10 ** ndigits))
         ).alias("dup_rate"),

@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact, exact_type
 from ..functions.vectors import (
     cosine_similarity,
     dot,
@@ -990,11 +991,11 @@ def simplified_silhouette(
     )
     agg = scored.groupBy("cluster").agg(
         F.count("*").cast("long").alias("n"),
-        F.sum("__sm").cast("decimal(38,0)").alias("__ssum"),
+        exact(F.sum("__sm")).alias("__ssum"),
     )
     mag = F.expr(
         "cast((2 * abs(__ssum) * 1 + n) div (2 * cast(n as "
-        "decimal(38,0))) as long)"
+        f"{exact_type()})) as long)"
     )
     return agg.select(
         "cluster",

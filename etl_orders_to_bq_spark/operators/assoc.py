@@ -42,14 +42,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact, exact_sum
+
 
 def _micro(col: str) -> Column:
     """The shared exact quantization grid: 1e-6 micro-longs."""
     return F.round(F.col(col).cast("double") * 1e6, 0).cast("long")
 
 
-def _d38(c: Column) -> Column:
-    return c.cast("decimal(38,0)")
 
 
 def partial_correlation(
@@ -85,17 +85,17 @@ def partial_correlation(
     )
     agg = filt.agg(
         F.count("*").cast("long").alias("n"),
-        F.sum(_d38(F.col("__x"))).alias("__sx"),
-        F.sum(_d38(F.col("__y"))).alias("__sy"),
-        F.sum(_d38(F.col("__z"))).alias("__sz"),
-        F.sum(_d38(F.col("__x")) * _d38(F.col("__x"))).alias("__sxx"),
-        F.sum(_d38(F.col("__y")) * _d38(F.col("__y"))).alias("__syy"),
-        F.sum(_d38(F.col("__z")) * _d38(F.col("__z"))).alias("__szz"),
-        F.sum(_d38(F.col("__x")) * _d38(F.col("__y"))).alias("__sxy"),
-        F.sum(_d38(F.col("__x")) * _d38(F.col("__z"))).alias("__sxz"),
-        F.sum(_d38(F.col("__y")) * _d38(F.col("__z"))).alias("__syz"),
+        exact_sum("__x").alias("__sx"),
+        exact_sum("__y").alias("__sy"),
+        exact_sum("__z").alias("__sz"),
+        exact_sum("__x", "__x").alias("__sxx"),
+        exact_sum("__y", "__y").alias("__syy"),
+        exact_sum("__z", "__z").alias("__szz"),
+        exact_sum("__x", "__y").alias("__sxy"),
+        exact_sum("__x", "__z").alias("__sxz"),
+        exact_sum("__y", "__z").alias("__syz"),
     )
-    nd = _d38(F.col("n"))
+    nd = exact("n")
 
     def _r(spq: str, sp: str, sq: str, vpp: str, vqq: str) -> Column:
         num = (nd * F.col(spq) - F.col(sp) * F.col(sq)).cast("double")
@@ -165,15 +165,15 @@ def lins_ccc(
     ).select(_micro(x_col).alias("__x"), _micro(y_col).alias("__y"))
     agg = filt.agg(
         F.count("*").cast("long").alias("n"),
-        F.sum(_d38(F.col("__x"))).alias("__sx"),
-        F.sum(_d38(F.col("__y"))).alias("__sy"),
-        F.sum(_d38(F.col("__x")) * _d38(F.col("__x"))).alias("__sxx"),
-        F.sum(_d38(F.col("__y")) * _d38(F.col("__y"))).alias("__syy"),
-        F.sum(_d38(F.col("__x")) * _d38(F.col("__y"))).alias("__sxy"),
+        exact_sum("__x").alias("__sx"),
+        exact_sum("__y").alias("__sy"),
+        exact_sum("__x", "__x").alias("__sxx"),
+        exact_sum("__y", "__y").alias("__syy"),
+        exact_sum("__x", "__y").alias("__sxy"),
     )
-    nd = _d38(F.col("n"))
+    nd = exact("n")
     cov2 = (
-        F.lit(2).cast("decimal(38,0)")
+        exact(F.lit(2))
         * (nd * F.col("__sxy") - F.col("__sx") * F.col("__sy"))
     ).cast("double")
     vx = (nd * F.col("__sxx") - F.col("__sx") * F.col("__sx")).cast(
@@ -228,10 +228,8 @@ def icc_oneway(
         .groupBy(F.col(group_col).alias("__g"))
         .agg(
             F.count("*").cast("long").alias("__ni"),
-            F.sum(_d38(_micro(value_col))).alias("__si"),
-            F.sum(
-                _d38(_micro(value_col)) * _d38(_micro(value_col))
-            ).alias("__ssi"),
+            exact_sum(_micro(value_col)).alias("__si"),
+            exact_sum(_micro(value_col), _micro(value_col)).alias("__ssi"),
         )
     )
     # per-group rational term s_i^2 / n_i -> double once -> micro^2
@@ -241,12 +239,12 @@ def icc_oneway(
         / F.col("__ni").cast("double")
     )
     staged = per.withColumn(
-        "__ti", F.round(term, 0).cast("decimal(38,0)")
+        "__ti", exact(F.round(term, 0))
     )
     agg = staged.agg(
         F.count("*").cast("long").alias("k"),
         F.sum("__ni").cast("long").alias("n"),
-        F.sum(_d38(F.col("__ni")) * _d38(F.col("__ni"))).alias("__sn2"),
+        exact_sum("__ni", "__ni").alias("__sn2"),
         F.sum(F.col("__si")).alias("__s"),
         F.sum(F.col("__ssi")).alias("__ss"),
         F.sum(F.col("__ti")).alias("__bsum"),
@@ -317,31 +315,31 @@ def effect_sizes(
         F.col(group_col).alias("__g"), _micro(value_col).alias("__v")
     )
     isa = F.col("__g") == group_a
-    z38 = F.lit(0).cast("decimal(38,0)")
+    z38 = exact(F.lit(0))
     agg = filt.agg(
         F.sum(F.when(isa, 1).otherwise(0)).cast("long").alias("n_a"),
         F.sum(F.when(~isa, 1).otherwise(0)).cast("long").alias("n_b"),
         F.coalesce(
-            F.sum(F.when(isa, _d38(F.col("__v")))), z38
+            F.sum(F.when(isa, exact("__v"))), z38
         ).alias("__sa"),
         F.coalesce(
-            F.sum(F.when(~isa, _d38(F.col("__v")))), z38
+            F.sum(F.when(~isa, exact("__v"))), z38
         ).alias("__sb"),
         F.coalesce(
-            F.sum(F.when(isa, _d38(F.col("__v")) * _d38(F.col("__v")))),
+            F.sum(F.when(isa, exact("__v") * exact("__v"))),
             z38,
         ).alias("__ssa"),
         F.coalesce(
             F.sum(
-                F.when(~isa, _d38(F.col("__v")) * _d38(F.col("__v")))
+                F.when(~isa, exact("__v") * exact("__v"))
             ),
             z38,
         ).alias("__ssb"),
     )
     na = F.col("n_a").cast("double")
     nb = F.col("n_b").cast("double")
-    nad = _d38(F.col("n_a"))
-    nbd = _d38(F.col("n_b"))
+    nad = exact("n_a")
+    nbd = exact("n_b")
     va = (nad * F.col("__ssa") - F.col("__sa") * F.col("__sa")).cast(
         "double"
     ) / (na * (na - 1.0))
@@ -422,21 +420,15 @@ def brier_decomposition(
         "__p",
         "__y",
     )
-    z38 = F.lit(0).cast("decimal(38,0)")
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
+    z38 = exact(F.lit(0))
+    err = F.col("__p") - F.col("__y") * 1_000_000
     per = binned.groupBy("__k").agg(
         F.count("*").cast("long").alias("__nk"),
-        F.coalesce(F.sum(d38(F.col("__p"))), z38).alias("__sp"),
+        F.coalesce(exact_sum("__p"), z38).alias("__sp"),
         F.coalesce(F.sum(F.col("__y")), F.lit(0)).cast("long").alias(
             "__sy"
         ),
-        F.coalesce(
-            F.sum(
-                d38(F.col("__p") - F.col("__y") * 1_000_000)
-                * d38(F.col("__p") - F.col("__y") * 1_000_000)
-            ),
-            z38,
-        ).alias("__sq"),
+        F.coalesce(exact_sum(err, err), z38).alias("__sq"),
     )
     tot = per.agg(
         F.coalesce(F.sum("__nk"), F.lit(0)).cast("long").alias("__n"),
@@ -453,10 +445,10 @@ def brier_decomposition(
         "__n",
         "__ty",
         "__sq",
-        F.round(rel_t * F.lit(1e12), 0).cast("decimal(38,0)").alias(
+        exact(F.round(rel_t * F.lit(1e12), 0)).alias(
             "__relq"
         ),
-        F.round(res_t * F.lit(1e12), 0).cast("decimal(38,0)").alias(
+        exact(F.round(res_t * F.lit(1e12), 0)).alias(
             "__resq"
         ),
     )

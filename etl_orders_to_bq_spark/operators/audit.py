@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact, exact_sum
+
 
 def fd_violations(
     df: DataFrame,
@@ -162,19 +164,10 @@ def join_cardinality(
     shared = ka.join(kb, "__k")
     stats = shared.agg(
         F.coalesce(F.count("*"), F.lit(0)).cast("long").alias("n_keys_shared"),
-        F.coalesce(
-            F.sum(
-                F.col("__ca").cast("decimal(38,0)")
-                * F.col("__cb").cast("decimal(38,0)")
-            ),
-            F.lit(0),
-        )
-        .cast("decimal(38,0)")
-        .alias("predicted_rows"),
-        F.max(
-            F.col("__ca").cast("decimal(38,0)")
-            * F.col("__cb").cast("decimal(38,0)")
-        ).alias("max_key_rows"),
+        F.coalesce(exact_sum("__ca", "__cb"), F.lit(0)).alias(
+            "predicted_rows"
+        ),
+        F.max(exact("__ca") * exact("__cb")).alias("max_key_rows"),
     )
     na = ka.agg(F.count("*").cast("long").alias("n_keys_left"))
     nb = kb.agg(F.count("*").cast("long").alias("n_keys_right"))

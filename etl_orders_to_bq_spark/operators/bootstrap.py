@@ -32,6 +32,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact
+
 
 def _poisson1_cdf_literals(max_k: int = 8) -> list[float]:
     """Cumulative P(X <= k) for Poisson(1), k = 0..max_k-1 — repr'd
@@ -233,26 +235,20 @@ def jackknife_ratio(
     ).select(
         F.col(group_col).cast("string").alias("__g"),
         # money-exact cents as integers: every later term is exact
-        (F.col(num_col).cast("decimal(18,2)") * 100)
-        .cast("decimal(38,0)")
+        exact(F.col(num_col).cast("decimal(18,2)") * 100)
         .alias("__y"),
-        (F.col(den_col).cast("decimal(18,2)") * 100)
-        .cast("decimal(38,0)")
+        exact(F.col(den_col).cast("decimal(18,2)") * 100)
         .alias("__x"),
     )
     sums = base.groupBy("__g").agg(
         F.count("*").cast("long").alias("__n"),
-        F.sum("__y").cast("decimal(38,0)").alias("__sy"),
-        F.sum("__x").cast("decimal(38,0)").alias("__sx"),
+        exact(F.sum("__y")).alias("__sy"),
+        exact(F.sum("__x")).alias("__sx"),
     )
     j = base.join(F.broadcast(sums), "__g").withColumns(
         {
-            "__lnum": (F.col("__sy") - F.col("__y")).cast(
-                "decimal(38,0)"
-            ),
-            "__lden": (F.col("__sx") - F.col("__x")).cast(
-                "decimal(38,0)"
-            ),
+            "__lnum": exact(F.col("__sy") - F.col("__y")),
+            "__lden": exact(F.col("__sx") - F.col("__x")),
         }
     )
     # half-away micro pseudo-value via exact integral decimal div;
@@ -276,9 +272,8 @@ def jackknife_ratio(
         F.sum(F.when(F.col("__r").isNotNull(), 1).otherwise(0))
         .cast("long")
         .alias("n_defined"),
-        F.sum("__r").cast("decimal(38,0)").alias("__sr"),
-        F.sum(F.col("__r").cast("decimal(38,0)") * F.col("__r"))
-        .cast("decimal(38,0)")
+        exact(F.sum("__r")).alias("__sr"),
+        exact(F.sum(exact("__r") * F.col("__r")))
         .alias("__srr"),
         F.max("__sy").alias("__sy"),
         F.max("__sx").alias("__sx"),

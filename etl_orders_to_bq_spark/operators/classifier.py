@@ -33,6 +33,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact, exact_sum, exact_type
 from ..functions.text import normalize_text, tokenize
 from .staging import LOCAL_FOLD_ROWS, local_fold_limit
 
@@ -421,11 +422,10 @@ def calibration_bins(
     ).cast("long")
     # brier mean = ssq / (n * 1e12) -> micro = ssq / (n * 1e6);
     # exact integral decimal division (the quotient fits long)
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     staged = agged.withColumns(
         {
-            "__bn": 2 * dec(F.col("__ssq")) + dec(n) * m1,
-            "__bd": 2 * dec(n) * m1,
+            "__bn": 2 * exact("__ssq") + exact(n) * m1,
+            "__bd": 2 * exact(n) * m1,
         }
     ).withColumn("__brier_mi", F.expr("__bn div __bd"))
     brier_mi = F.col("__brier_mi")
@@ -638,7 +638,7 @@ def adaboost_stumps(
             F.when(
                 correct,
                 F.expr(
-                    f"(cast(__w as decimal(38,0)) * {err_num})"
+                    f"(cast(__w as {exact_type()}) * {err_num})"
                     f" div {err_den}"
                 ),
             ).otherwise(F.col("__w")),
@@ -800,7 +800,6 @@ def cohens_kappa(
     cells = base.groupBy("__a", "__b").agg(F.count("*").alias("__c"))
     rows = cells.groupBy("__a").agg(F.sum("__c").alias("__r"))
     cols = cells.groupBy("__b").agg(F.sum("__c").alias("__k"))
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     marg = (
         rows.join(cols, rows.__a == cols.__b, "full")
         .select(
@@ -810,7 +809,7 @@ def cohens_kappa(
         )
         .agg(
             F.count("*").cast("long").alias("n_categories"),
-            dec(F.sum(dec(F.col("__r")) * dec(F.col("__k")))).alias(
+            exact_sum("__r", "__k").alias(
                 "__rc"
             ),
         )
@@ -822,8 +821,8 @@ def cohens_kappa(
         .alias("__agree"),
     )
     j = diag.crossJoin(F.broadcast(marg))
-    nn = dec(F.col("n"))
-    num = nn * dec(F.col("__agree")) - F.col("__rc")
+    nn = exact("n")
+    num = nn * exact("__agree") - F.col("__rc")
     den = nn * nn - F.col("__rc")
     return j.select(
         "n",
@@ -967,21 +966,20 @@ def fleiss_kappa(
     margins = cells.groupBy("__c").agg(
         F.sum("__n").cast("long").alias("__cc")
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     ia = per_item.agg(
         F.count("*").cast("long").alias("n_items"),
-        dec(F.sum(F.col("__s"))).alias("__ssum"),
+        exact(F.sum(F.col("__s"))).alias("__ssum"),
     )
     mb = margins.agg(
-        dec(F.sum(dec(F.col("__cc")) * dec(F.col("__cc")))).alias(
+        exact_sum("__cc", "__cc").alias(
             "__b"
         )
     )
     out = ia.crossJoin(F.broadcast(mb)).withColumns(
         {
-            "__nn": dec(F.col("n_items")) * F.lit(n_raters),
+            "__nn": exact("n_items") * F.lit(n_raters),
             "__a": F.col("__ssum")
-            - dec(F.col("n_items")) * F.lit(n_raters),
+            - exact("n_items") * F.lit(n_raters),
         }
     )
     out = out.withColumns(
@@ -1065,15 +1063,10 @@ def krippendorff_alpha(
         .groupBy("__c")
         .agg(F.sum("__n").cast("long").alias("__cc"))
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     # per-rater-count census: units with the same m share the
     # denominator (m - 1), so O_d folds the SORTED per-m doubles
     bym = per_item.groupBy("__m").agg(
-        dec(
-            F.sum(
-                dec(F.col("__m")) * dec(F.col("__m")) - dec(F.col("__s"))
-            )
-        ).alias("__anum")
+        F.sum(exact("__m") * exact("__m") - exact("__s")).alias("__anum")
     )
     od = bym.agg(
         F.aggregate(
@@ -1092,14 +1085,14 @@ def krippendorff_alpha(
         F.sum("__m").cast("long").alias("n_pairable"),
     )
     mb = margins.agg(
-        dec(F.sum(dec(F.col("__cc")) * dec(F.col("__cc")))).alias(
+        exact_sum("__cc", "__cc").alias(
             "__b"
         )
     )
     out = tots.crossJoin(F.broadcast(od)).crossJoin(F.broadcast(mb))
     nn = F.col("n_pairable").cast("double")
     de = (
-        dec(F.col("n_pairable")) * dec(F.col("n_pairable"))
+        exact("n_pairable") * exact("n_pairable")
         - F.col("__b")
     ).cast("double")
     return out.select(

@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact
 from ..functions.text import normalize_text, tokenize, word_ngrams
 from .staging import stage
 
@@ -966,10 +967,9 @@ def corpus_manifest(
     rows = df.select(
         F.col(group_col).alias("grp"),
         F.col(text_col).isNull().cast("long").alias("__isnull"),
-        F.when(F.col(text_col).isNotNull(), val)
-        .otherwise(F.lit(0))
-        .cast("decimal(38,0)")
-        .alias("__v"),
+        exact(
+            F.when(F.col(text_col).isNotNull(), val).otherwise(F.lit(0))
+        ).alias("__v"),
     )
     agg = rows.groupBy("grp").agg(
         F.count("*").cast("long").alias("n_docs"),

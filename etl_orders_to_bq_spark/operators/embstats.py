@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact_sum
+
 
 def embedding_drift(
     embeddings: DataFrame,
@@ -169,7 +171,7 @@ def _pc1_fit(
         base.select(F.explode(tri).alias("e"))
         .groupBy(F.col("e.i").alias("i"), F.col("e.j").alias("j"))
         .agg(
-            F.sum(F.col("e.p").cast("decimal(38,0)")).alias("p"),
+            exact_sum("e.p").alias("p"),
             F.count("*").alias("c"),
         )
     )

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact, exact_type
+
 
 def cuped_adjust(
     df: DataFrame,
@@ -720,11 +722,9 @@ def ipw_ate(
         .agg(
             F.count("*").cast("long").alias("__n"),
             F.sum(t).cast("long").alias("__t"),
-            F.sum(F.when(t == 1, y).otherwise(F.lit(0)))
-            .cast("decimal(38,2)")
+            exact(F.sum(F.when(t == 1, y).otherwise(F.lit(0))), 2)
             .alias("__y1"),
-            F.sum(F.when(t == 0, y).otherwise(F.lit(0)))
-            .cast("decimal(38,2)")
+            exact(F.sum(F.when(t == 0, y).otherwise(F.lit(0))), 2)
             .alias("__y0"),
         )
     )
@@ -846,8 +846,8 @@ def james_stein_means(
         .groupBy(F.col(group_col).cast("string").alias("__g"))
         .agg(
             F.count("*").cast("long").alias("__n"),
-            F.sum(y).cast("decimal(38,2)").alias("__s"),
-            F.sum(y * y).cast("decimal(38,4)").alias("__q"),
+            exact(F.sum(y), 2).alias("__s"),
+            exact(F.sum(y * y), 4).alias("__q"),
         )
         .withColumn(
             "__mean_micro",
@@ -870,7 +870,7 @@ def james_stein_means(
                 F.col("__n") > 1,
                 # s2/n = (n*Q - S^2) / (n^2 * (n-1)), exact numerator
                 (
-                    F.col("__n").cast("decimal(38,0)") * F.col("__q")
+                    exact("__n") * F.col("__q")
                     - F.col("__s") * F.col("__s")
                 ).cast("double")
                 / (
@@ -888,8 +888,7 @@ def james_stein_means(
         F.sum(F.when(F.col("__n") > 1, 1).otherwise(0))
         .cast("long")
         .alias("__k2"),
-        F.sum(F.when(F.col("__n") > 1, F.col("__mean_micro")))
-        .cast("decimal(38,0)")
+        exact(F.sum(F.when(F.col("__n") > 1, F.col("__mean_micro"))))
         .alias("__sm2"),
         F.sort_array(
             F.collect_list(F.struct("__g", "__mean_micro", "__se2"))
@@ -905,12 +904,12 @@ def james_stein_means(
             F.col("__sm2") >= 0,
             F.expr(
                 "cast((2 * abs(__sm2) + __k2) div (2 * "
-                "cast(greatest(__k2, 1) as decimal(38,0))) as long)"
+                f"cast(greatest(__k2, 1) as {exact_type()})) as long)"
             ),
         ).otherwise(
             -F.expr(
                 "cast((2 * abs(__sm2) + __k2) div (2 * "
-                "cast(greatest(__k2, 1) as decimal(38,0))) as long)"
+                f"cast(greatest(__k2, 1) as {exact_type()})) as long)"
             )
         ),
     )
@@ -1011,19 +1010,16 @@ def rdd_estimate(
         y.alias("__y"),
         (F.col(x_col).cast("decimal(18,2)") >= c).alias("__r"),
     )
-    dec = lambda col: col.cast("decimal(38,4)")  # noqa: E731
 
     def side(flag: bool, name: str):
         m = F.col("__r") == F.lit(flag)
         return [
             F.sum(F.when(m, 1).otherwise(0)).cast("long").alias(f"__n{name}"),
-            F.sum(F.when(m, F.col("__x"))).cast("decimal(38,2)").alias(f"__sx{name}"),
-            F.sum(F.when(m, F.col("__y"))).cast("decimal(38,2)").alias(f"__sy{name}"),
-            F.sum(F.when(m, dec(F.col("__x")) * F.col("__x")))
-            .cast("decimal(38,4)")
+            exact(F.sum(F.when(m, F.col("__x"))), 2).alias(f"__sx{name}"),
+            exact(F.sum(F.when(m, F.col("__y"))), 2).alias(f"__sy{name}"),
+            exact(F.sum(F.when(m, exact("__x", 4) * F.col("__x"))), 4)
             .alias(f"__sxx{name}"),
-            F.sum(F.when(m, dec(F.col("__x")) * F.col("__y")))
-            .cast("decimal(38,4)")
+            exact(F.sum(F.when(m, exact("__x", 4) * F.col("__y"))), 4)
             .alias(f"__sxy{name}"),
         ]
 

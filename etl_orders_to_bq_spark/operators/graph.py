@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact_sum
 from .staging import LOCAL_FOLD_ROWS, LOCAL_PEEL_ROWS, local_fold_limit
 from .staging import local_rows, stage, staging_dir
 
@@ -1035,18 +1036,17 @@ def degree_assortativity(
         F.col("a").alias("b"), F.col("deg").alias("dy")
     )
     pairs = sym.join(da, "a").join(db, "b")
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     x, y = F.col("dx"), F.col("dy")
     m = pairs.agg(
         F.count("*").alias("m"),
         # every node with deg >= 1 appears as endpoint a of some
         # half-edge, so this IS |V| — no second job over the graph
         F.count_distinct(F.col("a")).alias("n_nodes"),
-        F.sum(dec(x)).alias("sx"),
-        F.sum(dec(y)).alias("sy"),
-        F.sum(dec(x * y)).alias("sxy"),
-        F.sum(dec(x * x)).alias("sxx"),
-        F.sum(dec(y * y)).alias("syy"),
+        exact_sum(x).alias("sx"),
+        exact_sum(y).alias("sy"),
+        exact_sum(x * y).alias("sxy"),
+        exact_sum(x * x).alias("sxx"),
+        exact_sum(y * y).alias("syy"),
     )
     mm = F.col("m").cast("double")
     sx = F.col("sx").cast("double")

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact
+
 _M = 1_000_000
 
 
@@ -59,7 +61,7 @@ def theil_decomposition(
     )
     totals = base.groupBy("__g").agg(
         F.count("*").cast("long").alias("__ng"),
-        F.sum("__x").cast("decimal(38,2)").alias("__xg"),
+        exact(F.sum("__x"), 2).alias("__xg"),
     )
     j = base.join(F.broadcast(totals), "__g")
     term = (
@@ -75,13 +77,13 @@ def theil_decomposition(
     per_g = (
         j.select("__g", tm.alias("__t"))
         .groupBy("__g")
-        .agg(F.sum("__t").cast("decimal(38,0)").alias("__tsum"))
+        .agg(exact(F.sum("__t")).alias("__tsum"))
         .join(totals, "__g")
     )
     grand = F.broadcast(
         totals.agg(
             F.sum("__ng").cast("long").alias("__n"),
-            F.sum("__xg").cast("decimal(38,2)").alias("__xx"),
+            exact(F.sum("__xg"), 2).alias("__xx"),
         )
     )
     g_rows = per_g.crossJoin(grand).select(

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact, exact_sum
 from ..functions.text import normalize_text, tokenize
 from .ranking import scalable_ntile
 
@@ -393,15 +394,13 @@ def zipf_slope(
     )
     w = Window.orderBy(F.desc("__c"), F.asc("w"))
     pts = counts.withColumn("__r", F.row_number().over(w)).select(
-        F.round(F.log10(F.col("__r").cast("double")) * 1e6, 0)
-        .cast("decimal(38,0)")
+        exact(F.round(F.log10(F.col("__r").cast("double")) * 1e6, 0))
         .alias("__x"),
-        F.round(F.log10(F.col("__c").cast("double")) * 1e6, 0)
-        .cast("decimal(38,0)")
+        exact(F.round(F.log10(F.col("__c").cast("double")) * 1e6, 0))
         .alias("__y"),
     )
     agg = pts.agg(
-        F.count("*").cast("decimal(38,0)").alias("__n"),
+        exact(F.count("*")).alias("__n"),
         F.sum("__x").alias("__sx"),
         F.sum("__y").alias("__sy"),
         F.sum(F.col("__x") * F.col("__y")).alias("__sxy"),
@@ -1371,8 +1370,8 @@ def vocab_coverage(
     # rational's distance from any integer is >= 1/(2*tot), far above
     # the decimal division's rounding granularity, so the floor is
     # still exact
-    covd = cov.cast("decimal(38,0)")
-    totd = tot.cast("decimal(38,0)")
+    covd = exact(cov)
+    totd = exact(tot)
     micro = F.floor(
         (2 * covd * F.lit(scale) + totd) / (2 * totd)
     )
@@ -1998,10 +1997,7 @@ def hill_diversity(
     agg = vocab.agg(
         F.sum("__c").cast("long").alias("n_units"),
         F.count("*").cast("long").alias("q0_richness"),
-        F.sum(
-            F.col("__c").cast("decimal(38,0)")
-            * F.col("__c").cast("decimal(38,0)")
-        ).cast("decimal(38,0)").alias("__sc2"),
+        exact_sum("__c", "__c").alias("__sc2"),
         F.sort_array(F.collect_list("__c")).alias("__cs"),
     )
     nn = F.col("n_units").cast("double")

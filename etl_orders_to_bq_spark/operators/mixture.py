@@ -34,6 +34,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact, exact_sum
 from .staging import LOCAL_FOLD_ROWS, local_fold_limit
 
 
@@ -178,8 +179,7 @@ def gmm_em_1d(
         .cast("long")
         .alias("__v")
     )
-    dec38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    z38 = F.lit(0).cast("decimal(38,0)")
+    z38 = exact(F.lit(0))
     census_rows = None
     limit = local_fold_limit(spark0, LOCAL_FOLD_ROWS)
     if census_compress and limit > 0:
@@ -224,9 +224,9 @@ def gmm_em_1d(
     base = proj.persist()  # every EM round rescans; one long col cached
     mom = base.agg(
         F.count("*").cast("long").alias("n"),
-        F.coalesce(F.sum(dec38(F.col("__v"))), z38).alias("s"),
+        F.coalesce(exact_sum("__v"), z38).alias("s"),
         F.coalesce(
-            F.sum(dec38(F.col("__v")) * dec38(F.col("__v"))), z38
+            exact_sum("__v", "__v"), z38
         ).alias("ss"),
     ).first()
     n = int(mom["n"])
@@ -277,21 +277,17 @@ def gmm_em_1d(
 
         cur = cur.withColumn("__r", micro_half_away(r1))
         row = cur.agg(
-            F.coalesce(F.sum(dec38(F.col("__r"))), z38).alias("r1s"),
+            F.coalesce(exact_sum("__r"), z38).alias("r1s"),
             F.coalesce(
-                F.sum(dec38(F.col("__r")) * dec38(F.col("__v"))), z38
+                exact_sum("__r", "__v"), z38
             ).alias("rv1"),
             F.coalesce(
-                F.sum(
-                    dec38(F.col("__r"))
-                    * dec38(F.col("__v"))
-                    * dec38(F.col("__v"))
-                ),
+                exact_sum("__r", "__v", "__v"),
                 z38,
             ).alias("rvv1"),
-            F.coalesce(F.sum(dec38(F.col("__v"))), z38).alias("sv"),
+            F.coalesce(exact_sum("__v"), z38).alias("sv"),
             F.coalesce(
-                F.sum(dec38(F.col("__v")) * dec38(F.col("__v"))), z38
+                exact_sum("__v", "__v"), z38
             ).alias("svv"),
         ).first()
         r1s, rv1, rvv1 = int(row["r1s"]), int(row["rv1"]), int(row["rvv1"])

@@ -39,6 +39,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact, exact_sum, exact_type
+
 # Taylor reciprocal factorials, repr'd so both engines parse the
 # identical doubles
 _EXP_COEFFS = [repr(1.0 / math.factorial(k)) for k in range(13)]
@@ -335,25 +337,14 @@ def mann_whitney_u(
         vc, ["__v"], "__nt", num_partitions=num_partitions,
         out_col="__below",
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     agg = cum.agg(
-        dec(
-            F.sum(
-                F.col("__na").cast("decimal(38,0)")
-                * (
-                    F.lit(2) * F.col("__below") + F.col("__nt") + F.lit(1)
-                ).cast("decimal(38,0)")
-            )
+        exact_sum(
+            "__na", F.lit(2) * F.col("__below") + F.col("__nt") + F.lit(1)
         ).alias("two_ra"),
         F.sum("__na").cast("long").alias("n_a"),
         F.sum("__nb").cast("long").alias("n_b"),
-        dec(
-            F.sum(
-                F.col("__nt").cast("decimal(38,0)")
-                * F.col("__nt").cast("decimal(38,0)")
-                * F.col("__nt").cast("decimal(38,0)")
-                - F.col("__nt").cast("decimal(38,0)")
-            )
+        F.sum(
+            exact("__nt") * exact("__nt") * exact("__nt") - exact("__nt")
         ).alias("ties"),
     )
     na = F.col("n_a").cast("double")
@@ -532,7 +523,6 @@ def permutation_test(
         F.col(value_col).cast("long").alias("__y"),
         (F.col(group_col) == group_a).alias("__isa"),
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     obs = base.agg(
         F.sum(F.when(F.col("__isa"), 1).otherwise(0)).alias("na"),
         F.sum(F.when(~F.col("__isa"), 1).otherwise(0)).alias("nb"),
@@ -541,10 +531,10 @@ def permutation_test(
     ).select(
         "na", "nb", "sa", "sb",
         F.abs(
-            dec(F.col("sa")) * dec(F.col("nb"))
-            - dec(F.col("sb")) * dec(F.col("na"))
+            exact("sa") * exact("nb")
+            - exact("sb") * exact("na")
         ).alias("num_o"),
-        (dec(F.col("na")) * dec(F.col("nb"))).alias("den_o"),
+        (exact("na") * exact("nb")).alias("den_o"),
     )
     spark = df.sparkSession
     perms = spark.range(int(n_perms)).select(
@@ -580,13 +570,13 @@ def permutation_test(
         F.when(
             (F.col("__na") > 0) & (F.col("__nb") > 0),
             F.abs(
-                dec(F.col("__sa")) * dec(F.col("__nb"))
-                - dec(F.col("__sb")) * dec(F.col("__na"))
+                exact("__sa") * exact("__nb")
+                - exact("__sb") * exact("__na")
             )
             * F.col("den_o")
             >= F.col("num_o")
-            * dec(F.col("__na"))
-            * dec(F.col("__nb")),
+            * exact("__na")
+            * exact("__nb"),
         ).otherwise(F.lit(False)).alias("__ge")
     )
     ge = scored.agg(
@@ -683,7 +673,6 @@ def kruskal_wallis(
     filt = df.filter(
         F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     vc = filt.groupBy(
         F.col(value_col).alias("__v"),
         F.col(group_col).cast("string").alias("__g"),
@@ -697,25 +686,15 @@ def kruskal_wallis(
         vc.join(cum, "__v")
         .groupBy("__g")
         .agg(
-            dec(
-                F.sum(
-                    dec(F.col("__ngv"))
-                    * dec(
-                        F.lit(2) * F.col("__below")
-                        + F.col("__nt")
-                        + F.lit(1)
-                    )
-                )
+            exact_sum(
+                "__ngv", F.lit(2) * F.col("__below") + F.col("__nt") + F.lit(1)
             ).alias("__two_rg"),
             F.sum("__ngv").cast("long").alias("__ng"),
         )
     )
     ties = cum.agg(
-        dec(
-            F.sum(
-                dec(F.col("__nt")) * dec(F.col("__nt")) * dec(F.col("__nt"))
-                - dec(F.col("__nt"))
-            )
+        F.sum(
+            exact("__nt") * exact("__nt") * exact("__nt") - exact("__nt")
         ).alias("__ties"),
         F.sum("__nt").cast("long").alias("n"),
     )
@@ -793,15 +772,15 @@ def anova_oneway(
         .groupBy(F.col(group_col).cast("string").alias("__g"))
         .agg(
             F.count("*").cast("long").alias("__ng"),
-            F.sum(y).cast("decimal(38,2)").alias("__sg"),
-            F.sum(y * y).cast("decimal(38,4)").alias("__qg"),
+            exact(F.sum(y), 2).alias("__sg"),
+            exact(F.sum(y * y), 4).alias("__qg"),
         )
     )
     folded = per_g.agg(
         F.count("*").cast("long").alias("k_groups"),
         F.sum("__ng").cast("long").alias("n"),
-        F.sum("__sg").cast("decimal(38,2)").alias("__s"),
-        F.sum("__qg").cast("decimal(38,4)").alias("__q"),
+        exact(F.sum("__sg"), 2).alias("__s"),
+        exact(F.sum("__qg"), 4).alias("__q"),
         F.sort_array(
             F.collect_list(F.struct("__g", "__sg", "__ng"))
         ).alias("__gs"),
@@ -898,7 +877,7 @@ def hodges_lehmann(
         "__g",
         "__i",
         "__j",
-        (F.col("__y") + F.col("__y2")).cast("decimal(38,2)").alias("__w"),
+        exact(F.col("__y") + F.col("__y2"), 2).alias("__w"),
     )
     w = Window.partitionBy("__g").orderBy("__w", "__i", "__j")
     ranked = walsh.withColumn("__rn", F.row_number().over(w))
@@ -913,12 +892,15 @@ def hodges_lehmann(
             F.max("__m").cast("long").alias("n_pairs"),
             # odd m: the single middle IS both order statistics —
             # count it twice so the /4 collapse is uniform
-            F.sum(
-                F.when(
-                    (F.col("__rn") == lo) & (F.col("__rn") == hi),
-                    F.col("__w") + F.col("__w"),
-                ).otherwise(F.col("__w"))
-            ).cast("decimal(38,2)").alias("__wmid"),
+            exact(
+                F.sum(
+                    F.when(
+                        (F.col("__rn") == lo) & (F.col("__rn") == hi),
+                        F.col("__w") + F.col("__w"),
+                    ).otherwise(F.col("__w"))
+                ),
+                2,
+            ).alias("__wmid"),
         )
     )
     ns = base.groupBy(F.col("__g").alias("group")).agg(
@@ -1012,13 +994,12 @@ def friedman_test(
             ).cast("long").alias("__2r")
         )
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     per_j = ranked.groupBy("__j").agg(
-        dec(F.sum("__2r")).alias("__2R"),
+        exact(F.sum("__2r")).alias("__2R"),
         F.count("*").cast("long").alias("__n"),
     )
     sq = ranked.agg(
-        dec(F.sum(dec(F.col("__2r")) * dec(F.col("__2r")))).alias("__ssq")
+        exact_sum("__2r", "__2r").alias("__ssq")
     )
     agg = (
         per_j.crossJoin(F.broadcast(k_row))
@@ -1027,19 +1008,19 @@ def friedman_test(
             "__n",
             (
                 F.col("__2R")
-                - dec(F.col("__n") * (F.col("k_treatments") + 1))
+                - exact(F.col("__n") * (F.col("k_treatments") + 1))
             ).alias("__dev"),
         )
         .agg(
             F.max("k_treatments").alias("k_treatments"),
             F.max("__n").cast("long").alias("n_blocks_used"),
-            dec(F.sum(F.col("__dev") * F.col("__dev"))).alias("__sdev"),
+            exact(F.sum(F.col("__dev") * F.col("__dev"))).alias("__sdev"),
         )
         .crossJoin(F.broadcast(sq))
     )
     kk = F.col("k_treatments")
     nn = F.col("n_blocks_used")
-    den = F.col("__ssq") - dec(nn * kk * (kk + 1) * (kk + 1))
+    den = F.col("__ssq") - exact(nn * kk * (kk + 1) * (kk + 1))
     q = F.when(
         den.cast("double") > 0,
         F.round(
@@ -1121,25 +1102,24 @@ def cochran_q(
         (F.col("__nb") == F.col("k_treatments"))
         & (F.col("__nj") == F.col("k_treatments"))
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     rows_agg = complete.agg(
         F.count("*").cast("long").alias("n_blocks_used"),
-        dec(F.sum("__r")).alias("__n_tot"),
-        dec(F.sum(dec(F.col("__r")) * dec(F.col("__r")))).alias("__sr2"),
+        exact(F.sum("__r")).alias("__n_tot"),
+        exact_sum("__r", "__r").alias("__sr2"),
     )
     kept = base.join(complete.select("__b"), "__b")
     cols_agg = kept.groupBy("__j").agg(F.sum("__x").alias("__c")).agg(
-        dec(F.sum(dec(F.col("__c")) * dec(F.col("__c")))).alias("__sc2")
+        exact_sum("__c", "__c").alias("__sc2")
     )
     j = (
         rows_agg.crossJoin(F.broadcast(cols_agg))
         .crossJoin(F.broadcast(k_row))
     )
     kk = F.col("k_treatments")
-    num = (kk - 1).cast("decimal(38,0)") * (
-        dec(kk) * F.col("__sc2") - F.col("__n_tot") * F.col("__n_tot")
+    num = exact(kk - 1) * (
+        exact(kk) * F.col("__sc2") - F.col("__n_tot") * F.col("__n_tot")
     )
-    den = dec(kk) * F.col("__n_tot") - F.col("__sr2")
+    den = exact(kk) * F.col("__n_tot") - F.col("__sr2")
     res = j.select(
         "k_treatments",
         F.lit(int(n_blocks)).cast("long").alias("n_blocks"),
@@ -1202,7 +1182,6 @@ def dunn_posthoc(
     filt = df.filter(
         F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     vc = filt.groupBy(
         F.col(value_col).alias("__v"),
         F.col(group_col).cast("string").alias("__g"),
@@ -1216,25 +1195,15 @@ def dunn_posthoc(
         vc.join(cum, "__v")
         .groupBy("__g")
         .agg(
-            dec(
-                F.sum(
-                    dec(F.col("__ngv"))
-                    * dec(
-                        F.lit(2) * F.col("__below")
-                        + F.col("__nt")
-                        + F.lit(1)
-                    )
-                )
+            exact_sum(
+                "__ngv", F.lit(2) * F.col("__below") + F.col("__nt") + F.lit(1)
             ).alias("__two_rg"),
             F.sum("__ngv").cast("long").alias("__ng"),
         )
     )
     ties = cum.agg(
-        dec(
-            F.sum(
-                dec(F.col("__nt")) * dec(F.col("__nt")) * dec(F.col("__nt"))
-                - dec(F.col("__nt"))
-            )
+        F.sum(
+            exact("__nt") * exact("__nt") * exact("__nt") - exact("__nt")
         ).alias("__ties"),
         F.sum("__nt").cast("long").alias("__n"),
     )
@@ -1346,7 +1315,6 @@ def wasserstein_1d(
     nxt = rn.select(
         (F.col("__rn") - 1).alias("__rn"), F.col("__v").alias("__vn")
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     tot = F.broadcast(
         vc.agg(
             F.sum("__na").cast("long").alias("n_a"),
@@ -1355,8 +1323,8 @@ def wasserstein_1d(
     )
     seg = rn.join(nxt, "__rn").crossJoin(tot)
     d_i = F.abs(
-        dec(F.col("__ba") + F.col("__na")) * dec(F.col("n_b"))
-        - dec(F.col("__bb") + F.col("__nb")) * dec(F.col("n_a"))
+        exact(F.col("__ba") + F.col("__na")) * exact("n_b")
+        - exact(F.col("__bb") + F.col("__nb")) * exact("n_a")
     )
     gap = (F.col("__vn") - F.col("__v")).cast("decimal(18,2)")
     # counts come from the broadcast totals, NOT from the segment
@@ -1366,7 +1334,7 @@ def wasserstein_1d(
     # the true answer there is the real counts and W1 = 0.0 (identical
     # point masses). sum() over the empty seg yields NULL; coalesce to
     # 0 once the arms are known non-empty.
-    num = seg.agg(F.sum(d_i * gap).cast("decimal(38,2)").alias("__num"))
+    num = seg.agg(exact(F.sum(d_i * gap), 2).alias("__num"))
     return tot.crossJoin(num).select(
         F.coalesce(F.col("n_a"), F.lit(0)).alias("n_a"),
         F.coalesce(F.col("n_b"), F.lit(0)).alias("n_b"),
@@ -1374,7 +1342,7 @@ def wasserstein_1d(
             (F.col("n_a") > 0) & (F.col("n_b") > 0),
             F.round(
                 F.coalesce(
-                    F.col("__num"), F.lit(0).cast("decimal(38,2)")
+                    F.col("__num"), exact(F.lit(0), 2)
                 ).cast("double")
                 / (
                     F.col("n_a").cast("double")
@@ -1443,19 +1411,13 @@ def cliffs_delta(
             F.sum("__nb").cast("long").alias("n_b"),
         )
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     j = cum.crossJoin(tot)
     agg = j.agg(
         F.max("n_a").alias("n_a"),
         F.max("n_b").alias("n_b"),
-        dec(F.sum(dec(F.col("__na")) * dec(F.col("__bb")))).alias(
-            "n_greater"
-        ),
-        dec(
-            F.sum(
-                dec(F.col("__na"))
-                * dec(F.col("n_b") - F.col("__bb") - F.col("__nb"))
-            )
+        exact_sum("__na", "__bb").alias("n_greater"),
+        exact_sum(
+            "__na", F.col("n_b") - F.col("__bb") - F.col("__nb")
         ).alias("n_less"),
     )
     delta = F.round(
@@ -1535,8 +1497,8 @@ def two_proportion_test(
 
     def micro(num, den):
         return F.expr(
-            f"cast((2 * cast({num} as decimal(38,0)) * {m} + {den}) "
-            f"div (2 * cast({den} as decimal(38,0))) as long)"
+            f"cast((2 * cast({num} as {exact_type()}) * {m} + {den}) "
+            f"div (2 * cast({den} as {exact_type()})) as long)"
         )
 
     staged = agg.withColumns(
@@ -1618,7 +1580,6 @@ def chi2_independence(
     category domain, never the data. No counterpart in the reference
     engine (SURVEY.md §2.2).
     """
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     base = df.filter(
         F.col(col_a).isNotNull() & F.col(col_b).isNotNull()
     ).select(
@@ -1649,13 +1610,13 @@ def chi2_independence(
             F.collect_list(F.struct("__a", "__b", "__n", "__r", "__c"))
         ).alias("__cells"),
     )
-    nn = F.col("n").cast("decimal(38,0)")
+    nn = exact("n")
     term = lambda s_: (  # noqa: E731
         (
-            (nn * dec(s_["__n"]) - dec(s_["__r"]) * dec(s_["__c"]))
-            * (nn * dec(s_["__n"]) - dec(s_["__r"]) * dec(s_["__c"]))
+            (nn * exact(s_["__n"]) - exact(s_["__r"]) * exact(s_["__c"]))
+            * (nn * exact(s_["__n"]) - exact(s_["__r"]) * exact(s_["__c"]))
         ).cast("double")
-        / (nn * dec(s_["__r"]) * dec(s_["__c"])).cast("double")
+        / (nn * exact(s_["__r"]) * exact(s_["__c"])).cast("double")
     )
     chi2 = F.aggregate(
         F.col("__cells"), F.lit(0.0), lambda acc, s_: acc + term(s_)
@@ -1724,7 +1685,6 @@ def mood_median_test(
     """
     from .ranking import global_cumsum_before
 
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     filt = df.filter(
         F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
     ).select(
@@ -1771,15 +1731,15 @@ def mood_median_test(
             F.collect_list(F.struct("__g", "__ab", "__le"))
         ).alias("__rows"),
     )
-    nn = F.col("n").cast("decimal(38,0)")
-    ca = F.col("n_above").cast("decimal(38,0)")
-    cl = (F.col("n") - F.col("n_above")).cast("decimal(38,0)")
+    nn = exact("n")
+    ca = exact("n_above")
+    cl = exact(F.col("n") - F.col("n_above"))
     cell = lambda obs, rtot, ctot: (  # noqa: E731
         (
-            (nn * dec(obs) - dec(rtot) * ctot)
-            * (nn * dec(obs) - dec(rtot) * ctot)
+            (nn * exact(obs) - exact(rtot) * ctot)
+            * (nn * exact(obs) - exact(rtot) * ctot)
         ).cast("double")
-        / (nn * dec(rtot) * ctot).cast("double")
+        / (nn * exact(rtot) * ctot).cast("double")
     )
     chi2 = F.aggregate(
         F.col("__rows"),
@@ -2005,7 +1965,6 @@ def brunner_munzel(
         num_partitions=num_partitions,
         out_col=["__bt", "__ba", "__bb"],
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     two_r = F.lit(2) * F.col("__bt") + F.col("__nt") + F.lit(1)
     two_ra = F.lit(2) * F.col("__ba") + F.col("__na") + F.lit(1)
     two_rb = F.lit(2) * F.col("__bb") + F.col("__nb") + F.lit(1)
@@ -2013,24 +1972,24 @@ def brunner_munzel(
         cum.agg(
             F.sum("__na").cast("long").alias("n_a"),
             F.sum("__nb").cast("long").alias("n_b"),
-            dec(F.sum(dec(F.col("__na")) * dec(two_r))).alias("__t_a"),
-            dec(F.sum(dec(F.col("__nb")) * dec(two_r))).alias("__t_b"),
+            exact_sum("__na", two_r).alias("__t_a"),
+            exact_sum("__nb", two_r).alias("__t_b"),
         )
     )
     seg = cum.crossJoin(tot)
     a_dev = (
-        dec(F.col("n_a")) * dec(two_r - two_ra)
+        exact("n_a") * exact(two_r - two_ra)
         - F.col("__t_a")
-        + dec(F.col("n_a")) * dec(F.col("n_a") + F.lit(1))
+        + exact("n_a") * exact(F.col("n_a") + F.lit(1))
     )
     b_dev = (
-        dec(F.col("n_b")) * dec(two_r - two_rb)
+        exact("n_b") * exact(two_r - two_rb)
         - F.col("__t_b")
-        + dec(F.col("n_b")) * dec(F.col("n_b") + F.lit(1))
+        + exact("n_b") * exact(F.col("n_b") + F.lit(1))
     )
     ss = seg.groupBy().agg(
-        dec(F.sum(dec(F.col("__na")) * a_dev * a_dev)).alias("__ss_a"),
-        dec(F.sum(dec(F.col("__nb")) * b_dev * b_dev)).alias("__ss_b"),
+        exact(F.sum(exact("__na") * a_dev * a_dev)).alias("__ss_a"),
+        exact(F.sum(exact("__nb") * b_dev * b_dev)).alias("__ss_b"),
     )
     out = tot.crossJoin(F.broadcast(ss))
     na = F.col("n_a").cast("double")
@@ -2178,7 +2137,6 @@ def jonckheere_terpstra(
         num_partitions=num_partitions,
         out_col=[f"__b{i}" for i in range(k)],
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     # per-value doubled-JT contribution: for each later group j, its
     # n_j(v) obs sit above 2*below_i(v) + ... of every earlier group i
     contrib = None
@@ -2187,31 +2145,31 @@ def jonckheere_terpstra(
         for i in range(j):
             term = F.lit(2) * F.col(f"__b{i}") + F.col(f"__n{i}")
             inner = term if inner is None else inner + term
-        t = dec(F.col(f"__n{j}")) * dec(inner)
+        t = exact(F.col(f"__n{j}")) * exact(inner)
         contrib = t if contrib is None else contrib + t
     nt = None
     for i in range(k):
         nt = F.col(f"__n{i}") if nt is None else nt + F.col(f"__n{i}")
     agg = cum.agg(
-        dec(F.sum(contrib)).alias("jt2"),
+        exact(F.sum(contrib)).alias("jt2"),
         *[
             F.sum(f"__n{i}").cast("long").alias(f"__gn{i}")
             for i in range(k)
         ],
         F.sum(nt).cast("long").alias("n"),
-        dec(F.sum(dec(nt) * dec(nt - 1) * dec(2 * nt + 5))).alias(
+        exact_sum(nt, nt - 1, 2 * nt + 5).alias(
             "__t2"
         ),
-        dec(F.sum(dec(nt) * dec(nt - 1) * dec(nt - 2))).alias("__t3"),
-        dec(F.sum(dec(nt) * dec(nt - 1))).alias("__t1"),
+        exact_sum(nt, nt - 1, nt - 2).alias("__t3"),
+        exact_sum(nt, nt - 1).alias("__t1"),
     )
     g2 = g3 = g1 = sq = None
     for i in range(k):
         gn = F.col(f"__gn{i}")
-        a2 = dec(gn) * dec(gn - 1) * dec(2 * gn + 5)
-        a3 = dec(gn) * dec(gn - 1) * dec(gn - 2)
-        a1 = dec(gn) * dec(gn - 1)
-        s = dec(gn) * dec(gn)
+        a2 = exact(gn) * exact(gn - 1) * exact(2 * gn + 5)
+        a3 = exact(gn) * exact(gn - 1) * exact(gn - 2)
+        a1 = exact(gn) * exact(gn - 1)
+        s = exact(gn) * exact(gn)
         g2 = a2 if g2 is None else g2 + a2
         g3 = a3 if g3 is None else g3 + a3
         g1 = a1 if g1 is None else g1 + a1
@@ -2228,13 +2186,13 @@ def jonckheere_terpstra(
     staged = staged.withColumns(
         {
             "__e2": (
-                dec(F.col("n")) * dec(F.col("n")) - F.col("__sumsq")
+                exact("n") * exact("n") - F.col("__sumsq")
             ).cast("double")
             / F.lit(2.0),
             "__var": (
-                dec(F.col("n"))
-                * dec(F.col("n") - 1)
-                * dec(2 * F.col("n") + 5)
+                exact("n")
+                * exact(F.col("n") - 1)
+                * exact(2 * F.col("n") + 5)
                 - F.col("__g2")
                 - F.col("__t2")
             ).cast("double")
@@ -2314,30 +2272,27 @@ def cochran_armitage(
         F.count("*").cast("long").alias("__n"),
         F.sum("__y").cast("long").alias("__r"),
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     agg = cen.agg(
         F.sum("__n").cast("long").alias("n"),
         F.sum("__r").cast("long").alias("n_success"),
-        dec(F.sum(dec(F.col("__w")) * dec(F.col("__n")))).alias(
+        exact_sum("__w", "__n").alias(
             "__swn"
         ),
-        dec(
-            F.sum(dec(F.col("__w")) * dec(F.col("__w")) * dec(F.col("__n")))
-        ).alias("__sw2n"),
-        dec(F.sum(dec(F.col("__w")) * dec(F.col("__r")))).alias(
+        exact_sum("__w", "__w", "__n").alias("__sw2n"),
+        exact_sum("__w", "__r").alias(
             "__swr"
         ),
     )
     staged = agg.withColumns(
         {
             # T*N = sum w_i r_i * N - sum w_i n_i * R
-            "__tn": dec(F.col("__swr")) * dec(F.col("n"))
-            - dec(F.col("__swn")) * dec(F.col("n_success")),
+            "__tn": exact("__swr") * exact("n")
+            - exact("__swn") * exact("n_success"),
             # Var*N^3 = R(N-R)(N*sum w^2 n - (sum w n)^2)
-            "__vn3": dec(F.col("n_success"))
-            * dec(F.col("n") - F.col("n_success"))
+            "__vn3": exact("n_success")
+            * exact(F.col("n") - F.col("n_success"))
             * (
-                dec(F.col("n")) * F.col("__sw2n")
+                exact("n") * F.col("__sw2n")
                 - F.col("__swn") * F.col("__swn")
             ),
         }
@@ -2455,9 +2410,8 @@ def page_trend(
             ).cast("long").alias("__2r")
         )
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     agg = ranked.agg(
-        dec(F.sum(dec(ordmap[F.col("__j")]) * dec(F.col("__2r")))).alias(
+        exact_sum(ordmap[F.col("__j")], "__2r").alias(
             "l2"
         ),
         (F.count("*") / F.lit(k)).cast("long").alias("n_complete"),
@@ -2573,10 +2527,8 @@ def brown_forsythe_levene(
     )
     per_g = z.groupBy("__g").agg(
         F.count("*").cast("long").alias("__n"),
-        F.sum("__z").cast("decimal(38,3)").alias("__s"),
-        F.sum(
-            F.col("__z").cast("decimal(38,6)") * F.col("__z")
-        ).cast("decimal(38,6)").alias("__q"),
+        exact(F.sum("__z"), 3).alias("__s"),
+        exact(F.sum(exact("__z", 6) * F.col("__z")), 6).alias("__q"),
     )
     # sorted fold over the bounded group domain (anova discipline):
     # sum_g S_g^2/n_g mixes decimal into double per group, so pin the
@@ -2584,8 +2536,8 @@ def brown_forsythe_levene(
     folded = per_g.agg(
         F.count("*").cast("long").alias("k_groups"),
         F.sum("__n").cast("long").alias("n"),
-        F.sum("__s").cast("decimal(38,3)").alias("__stot"),
-        F.sum("__q").cast("decimal(38,6)").alias("__qtot"),
+        exact(F.sum("__s"), 3).alias("__stot"),
+        exact(F.sum("__q"), 6).alias("__qtot"),
         F.aggregate(
             F.array_sort(F.collect_list(F.struct("__g", "__s", "__n"))),
             F.lit(0.0),
@@ -2660,10 +2612,8 @@ def bartlett_test(
     ).select(F.col(group_col).cast("string").alias("__g"), y.alias("__v"))
     per_g = base.groupBy("__g").agg(
         F.count("*").cast("long").alias("__n"),
-        F.sum("__v").cast("decimal(38,2)").alias("__s"),
-        F.sum(
-            F.col("__v").cast("decimal(38,4)") * F.col("__v")
-        ).cast("decimal(38,4)").alias("__q"),
+        exact(F.sum("__v"), 2).alias("__s"),
+        exact(F.sum(exact("__v", 4) * F.col("__v")), 4).alias("__q"),
     )
     s2 = (
         F.col("__q").cast("double")
@@ -2759,10 +2709,8 @@ def welch_anova(
     ).select(F.col(group_col).cast("string").alias("__g"), y.alias("__v"))
     per_g = base.groupBy("__g").agg(
         F.count("*").cast("long").alias("__n"),
-        F.sum("__v").cast("decimal(38,2)").alias("__s"),
-        F.sum(
-            F.col("__v").cast("decimal(38,4)") * F.col("__v")
-        ).cast("decimal(38,4)").alias("__q"),
+        exact(F.sum("__v"), 2).alias("__s"),
+        exact(F.sum(exact("__v", 4) * F.col("__v")), 4).alias("__q"),
     )
     nn_g = F.col("__n").cast("double")
     mean = F.col("__s").cast("double") / nn_g
@@ -2948,31 +2896,28 @@ def quade_test(
             F.lit(2) * F.col("__dbelow") + F.col("__dc") + F.lit(1)
         ).cast("long").alias("__2q"),
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     scored = ranked.join(qrank, "__b").crossJoin(F.broadcast(k_row))
-    s4 = dec(F.col("__2q")) * dec(
-        F.col("__2r") - (F.col("k_treatments") + 1)
-    )
+    s4 = exact("__2q") * exact(F.col("__2r") - (F.col("k_treatments") + 1))
     per_j = scored.groupBy("__j").agg(
-        dec(F.sum(s4)).alias("__s4j"),
+        exact(F.sum(s4)).alias("__s4j"),
         F.count("*").cast("long").alias("__bj"),
     )
     a16 = scored.agg(
-        dec(F.sum(s4 * s4)).alias("__a16"),
+        exact(F.sum(s4 * s4)).alias("__a16"),
         (F.count("*") / F.max("k_treatments")).cast("long").alias(
             "n_complete"
         ),
         F.max("k_treatments").cast("long").alias("k_treatments"),
     )
     b16b = per_j.agg(
-        dec(F.sum(F.col("__s4j") * F.col("__s4j"))).alias("__b16b")
+        exact(F.sum(F.col("__s4j") * F.col("__s4j"))).alias("__b16b")
     )
     out = a16.crossJoin(F.broadcast(b16b))
     bb = F.col("n_complete")
     # F = (b-1) * B / (A - B) with A16 = 16A, B16b = 16*B*b:
     #   = (b-1) * B16b / (A16*b - B16b)
-    num = dec(bb - 1) * F.col("__b16b")
-    den = dec(bb) * F.col("__a16") - F.col("__b16b")
+    num = exact(bb - 1) * F.col("__b16b")
+    den = exact(bb) * F.col("__a16") - F.col("__b16b")
     return out.select(
         "k_treatments",
         F.lit(n_blocks).cast("long").alias("n_blocks"),
@@ -3218,10 +3163,10 @@ def jarque_bera(
     """
     c = (F.col(value_col).cast("decimal(18,2)") * 100).cast("long")
     c2 = (c * c).cast("long")
-    d2 = c2.cast("decimal(38,0)")
+    d2 = exact(c2)
     agg = df.filter(F.col(value_col).isNotNull()).agg(
         F.count("*").cast("long").alias("n"),
-        F.sum(c).cast("decimal(38,0)").alias("__s1"),
+        exact(F.sum(c)).alias("__s1"),
         F.sum(d2).alias("__s2"),
         F.sum(d2 * c.cast("decimal(19,0)")).alias("__s3"),
         F.sum(d2 * d2).alias("__s4"),
@@ -3343,7 +3288,7 @@ def chatterjee_xi(
     )
     den = ranks.agg(
         F.sum(
-            F.col("__cnt").cast("decimal(38,0)")
+            exact("__cnt")
             * (F.col("__l") * (F.col("__n") - F.col("__l"))).cast(
                 "decimal(19,0)"
             )
@@ -3364,9 +3309,7 @@ def chatterjee_xi(
     adj = seq.join(nxt, "__rn", "inner")
     num = adj.agg(
         F.max("__n").alias("n"),
-        F.sum(
-            F.abs(F.col("__r2") - F.col("__r")).cast("decimal(38,0)")
-        ).alias("__s"),
+        exact_sum(F.abs(F.col("__r2") - F.col("__r"))).alias("__s"),
     )
     out = num.crossJoin(F.broadcast(den))
     return out.select(
@@ -3451,16 +3394,14 @@ def cramer_von_mises(
     # midrank2 r2 = 2*bt + nt + 1; q_j = (r2 - 2*below_own) - 2j
     # 3 * sum q_j^2 = 3*c*A^2 - 6*A*c*(c+1) + 2*c*(c+1)*(2c+1)
     def block12(c, below_own):
-        a = (
-            2 * F.col("__bt") + F.col("__nt") + 1 - 2 * below_own
-        ).cast("decimal(38,0)")
-        cc = c.cast("decimal(38,0)")
-        c1 = (c + 1).cast("decimal(38,0)")
-        return (
+        a = exact(2 * F.col("__bt") + F.col("__nt") + 1 - 2 * below_own)
+        cc = exact(c)
+        c1 = exact(c + 1)
+        return exact(
             3 * cc * a * a
             - 6 * a * cc * c1
-            + 2 * cc * c1 * (2 * c + 1).cast("decimal(38,0)")
-        ).cast("decimal(38,0)")
+            + 2 * cc * c1 * exact(2 * c + 1)
+        )
 
     agg = cum.agg(
         F.sum("__na").cast("long").alias("n_a"),
@@ -3759,7 +3700,7 @@ def fisher_exact(
         F.col("__lp").cast("double") / 1e9 < -64.0, F.lit(0).cast("long")
     ).otherwise(F.round(F.col("__ex") * 1e12).cast("long"))
     summed = kt.agg(
-        F.sum(term.cast("decimal(38,0)")).alias("__ps")
+        exact_sum(term).alias("__ps")
     )
     p = F.least(
         F.lit(1.0), F.col("__ps").cast("double") / 1e12
@@ -3838,32 +3779,20 @@ def wilcoxon_signed_rank(
         vc, ["__a"], "__nt", num_partitions=num_partitions,
         out_col="__below",
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     agg = cum.agg(
         F.coalesce(
-            dec(
-                F.sum(
-                    F.col("__npos").cast("decimal(38,0)")
-                    * (
-                        F.lit(2) * F.col("__below")
-                        + F.col("__nt")
-                        + F.lit(1)
-                    ).cast("decimal(38,0)")
-                )
+            exact_sum(
+                "__npos",
+                F.lit(2) * F.col("__below") + F.col("__nt") + F.lit(1),
             ),
-            F.lit(0).cast("decimal(38,0)"),
+            exact(F.lit(0)),
         ).alias("two_wp"),
         F.coalesce(F.sum("__nt"), F.lit(0)).cast("long").alias("n"),
         F.coalesce(
-            dec(
-                F.sum(
-                    F.col("__nt").cast("decimal(38,0)")
-                    * F.col("__nt").cast("decimal(38,0)")
-                    * F.col("__nt").cast("decimal(38,0)")
-                    - F.col("__nt").cast("decimal(38,0)")
-                )
+            F.sum(
+                exact("__nt") * exact("__nt") * exact("__nt") - exact("__nt")
             ),
-            F.lit(0).cast("decimal(38,0)"),
+            exact(F.lit(0)),
         ).alias("ties"),
     )
     nn = F.col("n").cast("double")
@@ -3984,7 +3913,7 @@ def sign_test(
         F.col("__lp").cast("double") / 1e9 < -64.0, F.lit(0).cast("long")
     ).otherwise(F.round(F.col("__ex") * 1e12).cast("long"))
     summed = kt.agg(
-        F.sum(term.cast("decimal(38,0)")).alias("__ps")
+        exact_sum(term).alias("__ps")
     )
     p = F.least(
         F.lit(1.0),
@@ -4082,16 +4011,12 @@ def anderson_darling_k(
         F.lit(2) * F.coalesce(F.sum("__lg").over(wg), F.lit(0))
         + F.col("__lg"),
     ).crossJoin(F.broadcast(tot))
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    x = dec(F.col("__N")) * dec(F.col("__2m")) - dec(
-        F.col("__ng")
-    ) * dec(F.col("__2b"))
-    lx2 = dec(F.col("__l")) * x * x
-    den4 = dec(F.col("__2b")) * (
-        F.lit(2).cast("decimal(38,0)") * dec(F.col("__N"))
-        - dec(F.col("__2b"))
-    ) - dec(F.col("__N")) * dec(F.col("__l"))
-    nden = dec(F.col("__N")) * den4
+    x = exact("__N") * exact("__2m") - exact("__ng") * exact("__2b")
+    lx2 = exact("__l") * x * x
+    den4 = exact("__2b") * (
+        exact(F.lit(2)) * exact("__N") - exact("__2b")
+    ) - exact("__N") * exact("__l")
+    nden = exact("__N") * den4
     term = (
         lx2.cast("double") / nden.cast("double")
     ) / F.col("__ng").cast("double")
@@ -4105,8 +4030,8 @@ def anderson_darling_k(
         F.max("__minn").alias("__mn"),
         F.countDistinct("__v").cast("long").alias("__nv"),
         F.coalesce(
-            F.sum(tq.cast("decimal(38,0)")),
-            F.lit(0).cast("decimal(38,0)"),
+            exact_sum(tq),
+            exact(F.lit(0)),
         ).alias("__ts"),
     )
     nn = F.col("n").cast("double")
@@ -4204,10 +4129,8 @@ def mantel_haenszel(
     bcn = b * c / n
     e_s = (a + b) * (a + c) / n
     v_s = (a + b) * (c + d) * (a + c) * (b + d) / (n * n * (n - 1.0))
-    q9 = lambda x: F.round(x * F.lit(1e9), 0).cast(  # noqa: E731
-        "decimal(38,0)"
-    )
-    z38 = F.lit(0).cast("decimal(38,0)")
+    q9 = lambda x: exact(F.round(x * F.lit(1e9), 0))  # noqa: E731
+    z38 = exact(F.lit(0))
     agg = cells.agg(
         F.sum(F.when(keep, 1).otherwise(0)).cast("long").alias(
             "n_strata"
@@ -4480,18 +4403,13 @@ def fligner_killeen(
         .cast("long")
         .alias("__a"),
     )
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     per_g = (
         gu.join(scored, "__u")
         .groupBy("__g")
         .agg(
             F.sum("__m").cast("long").alias("__ni"),
-            F.sum(d38(F.col("__m")) * d38(F.col("__a"))).alias("__si"),
-            F.sum(
-                d38(F.col("__m"))
-                * d38(F.col("__a"))
-                * d38(F.col("__a"))
-            ).alias("__ssi"),
+            exact_sum("__m", "__a").alias("__si"),
+            exact_sum("__m", "__a", "__a").alias("__ssi"),
         )
     )
     term = (
@@ -4499,9 +4417,9 @@ def fligner_killeen(
         / F.col("__ni").cast("double")
     )
     staged = per_g.withColumn(
-        "__ti", F.round(term, 0).cast("decimal(38,0)")
+        "__ti", exact(F.round(term, 0))
     )
-    z38 = F.lit(0).cast("decimal(38,0)")
+    z38 = exact(F.lit(0))
     agg = staged.agg(
         F.count("*").cast("long").alias("k"),
         F.coalesce(F.sum("__ni"), F.lit(0)).cast("long").alias("n"),

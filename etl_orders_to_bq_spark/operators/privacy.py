@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact
+
 
 def l_diversity(
     df: DataFrame,
@@ -186,7 +188,6 @@ def t_closeness(
         .orderBy("bin")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     cum = (
         dense.join(glob, "bin")
         .withColumn("cum_c", F.sum("c").over(w))
@@ -197,8 +198,8 @@ def t_closeness(
         .withColumn(
             "term",
             F.abs(
-                dec(F.col("cum_c")) * dec(F.col("gn"))
-                - dec(F.col("cum_gc")) * dec(F.col("n_rows"))
+                exact("cum_c") * exact("gn")
+                - exact("cum_gc") * exact("n_rows")
             ),
         )
     )

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact, exact_sum
+
 
 def profile(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """Long-form per-column metrics: (column, metric, value as string).
@@ -561,15 +563,14 @@ def mahalanobis_outliers_2d(
         F.col(x_col).cast("decimal(18,2)").alias("__x"),
         F.col(y_col).cast("decimal(18,2)").alias("__y"),
     )
-    dec = lambda c: c.cast("decimal(38,4)")  # noqa: E731
     mom = F.broadcast(
         base.agg(
             F.count("*").cast("long").alias("__n"),
             F.sum("__x").alias("__sx"),
             F.sum("__y").alias("__sy"),
-            F.sum(dec(F.col("__x")) * dec(F.col("__x"))).alias("__sxx"),
-            F.sum(dec(F.col("__y")) * dec(F.col("__y"))).alias("__syy"),
-            F.sum(dec(F.col("__x")) * dec(F.col("__y"))).alias("__sxy"),
+            exact_sum("__x", "__x", scale=4).alias("__sxx"),
+            exact_sum("__y", "__y", scale=4).alias("__syy"),
+            exact_sum("__x", "__y", scale=4).alias("__sxy"),
         )
     )
     j = base.crossJoin(mom).filter(F.col("__n") >= 3)
@@ -651,19 +652,16 @@ def grubbs_test(
     base = df.filter(F.col(value_col).isNotNull()).select(
         y.alias("__v")
     )
-    dec = lambda c: c.cast("decimal(38,4)")  # noqa: E731
     mom = F.broadcast(
         base.agg(
             F.count("*").cast("long").alias("__n"),
-            F.sum("__v").cast("decimal(38,2)").alias("__s"),
-            F.sum(dec(F.col("__v")) * F.col("__v")).cast(
-                "decimal(38,4)"
-            ).alias("__q"),
+            exact(F.sum("__v"), 2).alias("__s"),
+            exact(F.sum(exact("__v", 4) * F.col("__v")), 4).alias("__q"),
         )
     )
     j = base.crossJoin(mom)
     ndev = F.abs(
-        dec(F.col("__n")) * dec(F.col("__v")) - dec(F.col("__s"))
+        exact("__n", 4) * exact("__v", 4) - exact("__s", 4)
     )
     picked = j.agg(
         F.max(F.struct(ndev.alias("d"), F.col("__v").alias("v"))).alias(
@@ -815,7 +813,6 @@ def rosner_esd(
     over the census — k is a literal (2..5 in practice), so the whole
     chain is k tiny stages after a single pass over the data.
     """
-    dec = lambda c: c.cast("decimal(38,4)")  # noqa: E731
     y = F.col(value_col).cast("decimal(18,2)")
     base = df.filter(F.col(value_col).isNotNull()).select(y.alias("__v"))
     census = base.groupBy("__v").agg(
@@ -823,18 +820,16 @@ def rosner_esd(
     )
     mom = census.agg(
         F.sum("__c").cast("long").alias("__n"),
-        F.sum(dec(F.col("__v")) * F.col("__c"))
-        .cast("decimal(38,4)")
+        exact(F.sum(exact("__v", 4) * F.col("__c")), 4)
         .alias("__s"),
-        F.sum(dec(F.col("__v")) * F.col("__v") * F.col("__c"))
-        .cast("decimal(38,4)")
+        exact(F.sum(exact("__v", 4) * F.col("__v") * F.col("__c")), 4)
         .alias("__q"),
     )
     out_rows = []
     for it in range(1, int(k) + 1):
         j = census.crossJoin(F.broadcast(mom))
         ndev = F.abs(
-            dec(F.col("__n")) * dec(F.col("__v")) - dec(F.col("__s"))
+            exact("__n", 4) * exact("__v", 4) - exact("__s", 4)
         )
         picked = j.agg(
             F.max(
@@ -879,15 +874,10 @@ def rosner_esd(
         )
         mom = picked.select(
             (F.col("__n") - 1).cast("long").alias("__n"),
-            (F.col("__s") - dec(F.col("__top.v")))
-            .cast("decimal(38,4)")
-            .alias("__s"),
-            (
-                F.col("__q")
-                - dec(F.col("__top.v")) * F.col("__top.v")
-            )
-            .cast("decimal(38,4)")
-            .alias("__q"),
+            exact(F.col("__s") - exact("__top.v", 4), 4).alias("__s"),
+            exact(
+                F.col("__q") - exact("__top.v", 4) * F.col("__top.v"), 4
+            ).alias("__q"),
         )
         census = (
             census.crossJoin(

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact, exact_sum
+
 
 def _doubled_ranks(base: DataFrame, col: str, out: str) -> DataFrame:
     """Per (group, value) doubled average rank 2r = 2*below + t + 1
@@ -93,14 +95,13 @@ def spearman_rho(
     rx = _doubled_ranks(base, "__x", "__a")
     ry = _doubled_ranks(base, "__y", "__b")
     ranked = base.join(rx, ["__g", "__x"]).join(ry, ["__g", "__y"])
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     m = ranked.groupBy(F.col("__g").alias("group")).agg(
         F.count("*").cast("long").alias("n"),
-        dec(F.sum(dec(F.col("__a")))).alias("__sa"),
-        dec(F.sum(dec(F.col("__b")))).alias("__sb"),
-        dec(F.sum(dec(F.col("__a")) * dec(F.col("__b")))).alias("__sab"),
-        dec(F.sum(dec(F.col("__a")) * dec(F.col("__a")))).alias("__saa"),
-        dec(F.sum(dec(F.col("__b")) * dec(F.col("__b")))).alias("__sbb"),
+        exact_sum("__a").alias("__sa"),
+        exact_sum("__b").alias("__sb"),
+        exact_sum("__a", "__b").alias("__sab"),
+        exact_sum("__a", "__a").alias("__saa"),
+        exact_sum("__b", "__b").alias("__sbb"),
     )
     nn = F.col("n").cast("double")
     sa = F.col("__sa").cast("double")
@@ -257,30 +258,29 @@ def gamma_somers_d(
         F.col("__y").alias("__y2"),
         F.col("__c").alias("__c2"),
     )
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     pairs = cells.join(
         F.broadcast(rhs),
         (F.col("__x") < F.col("__x2"))
         | ((F.col("__x") == F.col("__x2")) & (F.col("__y") < F.col("__y2"))),
     )
-    w = d38(F.col("__c")) * d38(F.col("__c2"))
+    w = exact("__c") * exact("__c2")
     conc = F.when(
         (F.col("__x") < F.col("__x2")) & (F.col("__y") < F.col("__y2")),
         w,
-    ).otherwise(F.lit(0).cast("decimal(38,0)"))
+    ).otherwise(exact(F.lit(0)))
     disc = F.when(
         (F.col("__x") < F.col("__x2")) & (F.col("__y") > F.col("__y2")),
         w,
-    ).otherwise(F.lit(0).cast("decimal(38,0)"))
+    ).otherwise(exact(F.lit(0)))
     tx = F.when(
         (F.col("__x") == F.col("__x2")) & (F.col("__y") != F.col("__y2")),
         w,
-    ).otherwise(F.lit(0).cast("decimal(38,0)"))
+    ).otherwise(exact(F.lit(0)))
     ty = F.when(
         (F.col("__y") == F.col("__y2")) & (F.col("__x") != F.col("__x2")),
         w,
-    ).otherwise(F.lit(0).cast("decimal(38,0)"))
-    z38 = F.lit(0).cast("decimal(38,0)")
+    ).otherwise(exact(F.lit(0)))
+    z38 = exact(F.lit(0))
     off = pairs.agg(
         F.coalesce(F.sum(conc), z38).alias("__C"),
         F.coalesce(F.sum(disc), z38).alias("__D"),

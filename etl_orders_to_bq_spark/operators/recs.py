@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact
+
 
 def slope_one(
     ratings: DataFrame,
@@ -81,8 +83,7 @@ def slope_one(
         .groupBy("__u")
         .agg(
             F.count("*").cast("long").alias("n_items_used"),
-            F.sum(F.col("__sd") + F.col("__c") * F.col("__rc"))
-            .cast("decimal(38,0)")
+            exact(F.sum(F.col("__sd") + F.col("__c") * F.col("__rc")))
             .alias("__num"),
             F.sum("__c").cast("long").alias("__den"),
         )

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact
 from .staging import stage
 
 
@@ -413,7 +414,6 @@ def pps_systematic_sample(
 
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     base = df.filter(
         F.col(weight_col).isNotNull()
         & (F.col(weight_col).cast("decimal(18,2)") > 0)
@@ -435,11 +435,11 @@ def pps_systematic_sample(
     # case-insensitive resolver would collide __W with the weight
     # column __w) and the nonneg numerator makes decimal `div`
     # (truncation) == floor
-    t2 = dec(F.lit(2)) * dec(F.col("__T"))
-    numhi = dec(2 * nn) * dec(F.col("__below") + F.col("__w")) - dec(
-        F.col("__T")
+    t2 = exact(F.lit(2)) * exact("__T")
+    numhi = exact(2 * nn) * exact(F.col("__below") + F.col("__w")) - exact(
+        "__T"
     )
-    numlo = dec(2 * nn) * dec(F.col("__below")) - dec(F.col("__T"))
+    numlo = exact(2 * nn) * exact("__below") - exact("__T")
     scored = (
         cum.crossJoin(tot)
         .withColumn("__t2", t2)

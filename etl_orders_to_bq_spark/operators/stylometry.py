@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact, exact_sum, exact_type
 from ..functions.text import normalize_text, tokenize
 
 _MICRO = 1_000_000
@@ -73,19 +74,16 @@ def burrows_delta(
             # exact half-away micro frequency: decimal div (numerator
             # can pass 2^53 at corpus scale; quotient <= 1e6 fits)
             F.expr(
-                "cast((2 * cast(coalesce(__c, 0) as decimal(38,0)) "
-                "* 1000000 + __t) div (2 * cast(__t as decimal(38,0)))"
+                f"cast((2 * cast(coalesce(__c, 0) as {exact_type()}) "
+                f"* 1000000 + __t) div (2 * cast(__t as {exact_type()}))"
                 " as long)"
             ).alias("__f"),
         )
     )
     stats = dense.groupBy("__w").agg(
         F.count("*").cast("long").alias("__nsrc"),
-        F.sum("__f").cast("decimal(38,0)").alias("__sf"),
-        F.sum(
-            F.col("__f").cast("decimal(38,0)")
-            * F.col("__f").cast("decimal(38,0)")
-        ).cast("decimal(38,0)").alias("__sff"),
+        exact(F.sum("__f")).alias("__sf"),
+        exact_sum("__f", "__f").alias("__sff"),
     )
     z = (
         dense.join(F.broadcast(stats), "__w")
@@ -93,7 +91,7 @@ def burrows_delta(
         .withColumn(
             "__var",
             (
-                F.col("__nsrc").cast("decimal(38,0)") * F.col("__sff")
+                exact("__nsrc") * F.col("__sff")
                 - F.col("__sf") * F.col("__sf")
             ).cast("double")
             / (F.col("__nsrc").cast("double") * F.col("__nsrc").cast("double")),

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact
+
 _M = 1_000_000
 
 
@@ -108,11 +110,9 @@ def log_rank_test(
         ),
         F.sum("__ea").cast("long").alias("observed_a"),
         # nonnegative terms: plain floor(x*1e6 + 0.5) IS half-away
-        F.sum(F.floor(e_term * _M + F.lit(0.5)))
-        .cast("decimal(38,0)")
+        exact(F.sum(F.floor(e_term * _M + F.lit(0.5))))
         .alias("__em"),
-        F.sum(F.floor(v_term * _M + F.lit(0.5)))
-        .cast("decimal(38,0)")
+        exact(F.sum(F.floor(v_term * _M + F.lit(0.5))))
         .alias("__vm"),
     )
     e_d = F.col("__em").cast("double") / _M

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import exact, exact_sum
+
 
 def ewma_last(
     df: DataFrame,
@@ -949,9 +951,7 @@ def changepoint_level(
     series are entity/day grain, the two-pass global machinery is
     never needed; the shuffle carries (t, y-micro) pairs once.
     """
-    ymu = F.round(F.col(y_col).cast("double") * scale).cast(
-        "decimal(38,0)"
-    )
+    ymu = exact(F.round(F.col(y_col).cast("double") * scale))
     base = df.select(
         F.col(group_col).alias("__g"),
         F.col(t_col).alias("__t"),
@@ -970,8 +970,8 @@ def changepoint_level(
         .withColumn("__tot", F.sum("__y").over(wg))
     )
     d = F.abs(
-        F.col("__n").cast("decimal(38,0)") * F.col("__s")
-        - F.col("__k").cast("decimal(38,0)") * F.col("__tot")
+        exact("__n") * F.col("__s")
+        - exact("__k") * F.col("__tot")
     )
     # ONE aggregation recovers both the argmax and n_points: min()
     # skips the NULL structs of the k = n rows (and of n = 1 groups
@@ -1159,7 +1159,7 @@ def pacf_durbin(
     )
     tot = idx.agg(
         F.count("*").cast("long").alias("__n"),
-        F.sum("__v").cast("decimal(38,2)").alias("__s"),
+        exact(F.sum("__v"), 2).alias("__s"),
     )
     lags = F.explode(F.sequence(F.lit(0), F.lit(int(max_lag)))).alias(
         "lag"
@@ -1184,7 +1184,7 @@ def pacf_durbin(
     )
     cl = pairs.groupBy("lag").agg(
         F.count("*").cast("long").alias("n_pairs"),
-        F.sum(cx * cy).cast("decimal(38,4)").alias("__c"),
+        exact(F.sum(cx * cy), 4).alias("__c"),
     )
     rows = cl.orderBy("lag").collect()
     c = {r["lag"]: r["__c"] for r in rows}
@@ -1451,7 +1451,7 @@ def sax_symbolize(
     stats = base.groupBy("__s").agg(
         F.count("*").cast("long").alias("__n"),
         F.sum("__v").alias("__sum"),
-        F.sum(F.col("__v").cast("decimal(38,4)") * F.col("__v")).alias(
+        F.sum(exact("__v", 4) * F.col("__v")).alias(
             "__sumsq"
         ),
     )
@@ -1701,8 +1701,8 @@ def durbin_watson(
     )
     r = r.withColumn("__em", F.round(e * 1e6).cast("long"))
     r = r.withColumn("__ep", F.lag("__em").over(w))
-    d = (F.col("__em") - F.col("__ep")).cast("decimal(38,0)")
-    em = F.col("__em").cast("decimal(38,0)")
+    d = exact(F.col("__em") - F.col("__ep"))
+    em = exact("__em")
     out = r.agg(
         F.max("__n").alias("n_days"),
         F.max(F.round(F.col("__b"), ndigits)).alias("slope"),
@@ -1768,7 +1768,7 @@ def ljung_box(
         idx.agg(
             F.count("*").cast("long").alias("__n"),
             F.sum("__v").alias("__sv"),
-            F.sum(F.col("__v").cast("decimal(38,4)") * F.col("__v")).alias(
+            F.sum(exact("__v", 4) * F.col("__v")).alias(
                 "__svv"
             ),
         )
@@ -1785,7 +1785,7 @@ def ljung_box(
         F.count("*").cast("long").alias("__cnt"),
         F.sum("__x").alias("__sx"),
         F.sum("__y").alias("__sy"),
-        F.sum(F.col("__x").cast("decimal(38,4)") * F.col("__y")).alias(
+        F.sum(exact("__x", 4) * F.col("__y")).alias(
             "__sxy"
         ),
     )
@@ -2119,7 +2119,7 @@ def hurst_exponent(
     bstats = expanded.groupBy("__s", "__blk").agg(
         F.sum("__c").alias("__sc"),
         F.sum(
-            F.col("__c").cast("decimal(38,0)") * F.col("__c")
+            exact("__c") * F.col("__c")
         ).alias("__qc"),
     )
     joined = expanded.join(bstats, ["__s", "__blk"])
@@ -2266,7 +2266,7 @@ def lb_keogh_pairs(
     ).otherwise(F.lit(0).cast("long"))
     agg = j.groupBy("key_a", F.col("__kb").alias("key_b")).agg(
         F.count("*").cast("long").alias("n_days"),
-        F.sum(gap.cast("decimal(38,0)") * gap).alias("__s"),
+        F.sum(exact(gap) * gap).alias("__s"),
     )
     return agg.select(
         "key_a",
@@ -2335,25 +2335,24 @@ def adf_test(
         F.col("__y").alias("__x"),
         (F.col("__y1") - F.col("__y")).alias("__dy"),
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     agg = pairs.agg(
         F.count("*").cast("long").alias("n"),
-        F.coalesce(F.sum(dec(F.col("__x"))), F.lit(0).cast("decimal(38,0)")).alias("__sx"),
-        F.coalesce(F.sum(dec(F.col("__dy"))), F.lit(0).cast("decimal(38,0)")).alias("__sd"),
+        F.coalesce(exact_sum("__x"), exact(F.lit(0))).alias("__sx"),
+        F.coalesce(exact_sum("__dy"), exact(F.lit(0))).alias("__sd"),
         F.coalesce(
-            F.sum(dec(F.col("__x")) * dec(F.col("__x"))),
-            F.lit(0).cast("decimal(38,0)"),
+            exact_sum("__x", "__x"),
+            exact(F.lit(0)),
         ).alias("__sxx"),
         F.coalesce(
-            F.sum(dec(F.col("__dy")) * dec(F.col("__dy"))),
-            F.lit(0).cast("decimal(38,0)"),
+            exact_sum("__dy", "__dy"),
+            exact(F.lit(0)),
         ).alias("__sdd"),
         F.coalesce(
-            F.sum(dec(F.col("__x")) * dec(F.col("__dy"))),
-            F.lit(0).cast("decimal(38,0)"),
+            exact_sum("__x", "__dy"),
+            exact(F.lit(0)),
         ).alias("__sxd"),
     )
-    nd = F.col("n").cast("decimal(38,0)")
+    nd = exact("n")
     sxx_c = (nd * F.col("__sxx") - F.col("__sx") * F.col("__sx")).cast(
         "double"
     )
@@ -2436,7 +2435,6 @@ def kpss_test(
         scaled, ["__d"], "__e", num_partitions=num_partitions,
         out_col="__sb",
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     agg = cum.select(
         "__n",
         (F.col("__sb") + F.col("__e")).alias("__st"),
@@ -2444,12 +2442,12 @@ def kpss_test(
     ).agg(
         F.max("__n").cast("long").alias("n"),
         F.coalesce(
-            F.sum(dec(F.col("__st")) * dec(F.col("__st"))),
-            F.lit(0).cast("decimal(38,0)"),
+            exact_sum("__st", "__st"),
+            exact(F.lit(0)),
         ).alias("__ssq"),
         F.coalesce(
-            F.sum(dec(F.col("__e")) * dec(F.col("__e"))),
-            F.lit(0).cast("decimal(38,0)"),
+            exact_sum("__e", "__e"),
+            exact(F.lit(0)),
         ).alias("__esq"),
     )
     eta = F.when(
@@ -2533,16 +2531,15 @@ def dtw_distance(
         .cast("long")
         .alias("__c")
     )
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     stats = daily.groupBy("__k").agg(
         F.count("*").cast("long").alias("__n"),
-        F.sum(d38(F.col("__c"))).alias("__s"),
-        F.sum(d38(F.col("__c")) * d38(F.col("__c"))).alias("__ss"),
+        exact_sum("__c").alias("__s"),
+        exact_sum("__c", "__c").alias("__ss"),
     ).filter(
         (F.col("__n") >= m)
         & (
             (
-                d38(F.col("__n")) * F.col("__ss")
+                exact("__n") * F.col("__ss")
                 - F.col("__s") * F.col("__s")
             ).cast("double")
             > 0
@@ -2564,7 +2561,7 @@ def dtw_distance(
     nn = F.col("__n").cast("double")
     mu = F.col("__s").cast("double") / nn
     var = (
-        d38(F.col("__n")) * F.col("__ss") - F.col("__s") * F.col("__s")
+        exact("__n") * F.col("__ss") - F.col("__s") * F.col("__s")
     ).cast("double") / (nn * nn)
     zseg = (
         F.col("__sg").cast("double") / F.col("__kg").cast("double") - mu
@@ -2724,21 +2721,20 @@ def granger_lag1(
         F.col("__yv").alias("__yl"),  # y_{t-1}
         F.col("__x").alias("__xl"),   # x_{t-1}
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    z = F.lit(0).cast("decimal(38,0)")
+    z = exact(F.lit(0))
     agg = rows.agg(
         F.count("*").cast("long").alias("n"),
-        F.coalesce(F.sum(dec(F.col("__t"))), z).alias("__st"),
-        F.coalesce(F.sum(dec(F.col("__yl"))), z).alias("__s1"),
-        F.coalesce(F.sum(dec(F.col("__xl"))), z).alias("__s2"),
-        F.coalesce(F.sum(dec(F.col("__t")) * dec(F.col("__t"))), z).alias("__stt"),
-        F.coalesce(F.sum(dec(F.col("__yl")) * dec(F.col("__yl"))), z).alias("__s11"),
-        F.coalesce(F.sum(dec(F.col("__xl")) * dec(F.col("__xl"))), z).alias("__s22"),
-        F.coalesce(F.sum(dec(F.col("__yl")) * dec(F.col("__xl"))), z).alias("__s12"),
-        F.coalesce(F.sum(dec(F.col("__yl")) * dec(F.col("__t"))), z).alias("__s1t"),
-        F.coalesce(F.sum(dec(F.col("__xl")) * dec(F.col("__t"))), z).alias("__s2t"),
+        F.coalesce(exact_sum("__t"), z).alias("__st"),
+        F.coalesce(exact_sum("__yl"), z).alias("__s1"),
+        F.coalesce(exact_sum("__xl"), z).alias("__s2"),
+        F.coalesce(exact_sum("__t", "__t"), z).alias("__stt"),
+        F.coalesce(exact_sum("__yl", "__yl"), z).alias("__s11"),
+        F.coalesce(exact_sum("__xl", "__xl"), z).alias("__s22"),
+        F.coalesce(exact_sum("__yl", "__xl"), z).alias("__s12"),
+        F.coalesce(exact_sum("__yl", "__t"), z).alias("__s1t"),
+        F.coalesce(exact_sum("__xl", "__t"), z).alias("__s2t"),
     )
-    nd = F.col("n").cast("decimal(38,0)")
+    nd = exact("n")
     syy = (nd * F.col("__stt") - F.col("__st") * F.col("__st")).cast("double")
     s11 = (nd * F.col("__s11") - F.col("__s1") * F.col("__s1")).cast("double")
     s22 = (nd * F.col("__s22") - F.col("__s2") * F.col("__s2")).cast("double")

@@ -76,6 +76,34 @@ def shuffle_volume(df):
     return records, size
 
 
+def aggregate_kinds(df):
+    """(SortAggregate nodes, aggregate nodes with a decimal buffer of
+    precision > 18) in this DataFrame's final executed plan.
+
+    A SortAggregate means the buffer could not live in a hash map (a
+    struct min/max, say) and the input was sorted first. Spark's
+    Decimal is long-backed only up to 18 digits, so a decimal(38,s)
+    buffer accumulates in BigDecimal objects, one per update."""
+    sort_agg = dec_agg = 0
+    for node, name in _walk_plan(df._jdf.queryExecution().executedPlan()):
+        if name not in ("HashAggregateExec", "SortAggregateExec",
+                        "ObjectHashAggregateExec"):
+            continue
+        sort_agg += name == "SortAggregateExec"
+        exprs = node.aggregateExpressions()
+        buffers = " ".join(
+            attrs.apply(j).dataType().simpleString()
+            for i in range(exprs.size())
+            for attrs in [exprs.apply(i).aggregateFunction()
+                          .aggBufferAttributes()]
+            for j in range(attrs.size())
+        )
+        dec_agg += any(
+            int(p) > 18 for p in re.findall(r"decimal\((\d+),", buffers)
+        )
+    return sort_agg, dec_agg
+
+
 def _audit_one(spark, fn, sf_dir):
     """Run one query and summarize its FINAL (post-AQE) physical plan."""
     df = fn(spark, sf_dir)
@@ -107,9 +135,10 @@ def _audit_one(spark, fn, sf_dir):
     )
     row_py = len(re.findall(r"BatchEvalPython", plan))
     codegen = "*(" in plan  # codegen'd operators print as *(n)
+    sort_agg, dec_agg = aggregate_kinds(df)
     return (
         n_ex, ",".join(joins) or "-", py, row_py, codegen,
-        sh_rec, sh_bytes,
+        sh_rec, sh_bytes, sort_agg, dec_agg,
     ), plan
 
 
@@ -141,7 +170,8 @@ def main() -> int:
             rows.append((name, *summary))
         except Exception as ex:  # pragma: no cover - audit tool
             rows.append(
-                (name, -1, f"ERROR {str(ex)[:40]}", 0, 0, False, 0, 0)
+                (name, -1, f"ERROR {str(ex)[:40]}", 0, 0, False, 0, 0,
+                 0, 0)
             )
 
     lines = [
@@ -160,16 +190,21 @@ def main() -> int:
         "staging points in iterative operators) truncate the plan, so",
         "their upstream shuffles are counted in neither column — the",
         "iterative operators' per-round volume is documented in their",
-        "docstrings instead.",
+        "docstrings instead. sort-agg counts SortAggregate nodes;",
+        "dec-agg counts aggregate nodes holding a decimal buffer wider",
+        "than 18 digits (BigDecimal-backed, not long-backed). sh-bytes",
+        "moves by a few percent between audits of the same code.",
         "",
         "| query | shuffles | joins | arrow-py | row-py | codegen |"
-        " sh-rows | sh-bytes |",
-        "|---|---|---|---|---|---|---|---|",
+        " sh-rows | sh-bytes | sort-agg | dec-agg |",
+        "|---|---|---|---|---|---|---|---|---|---|",
     ]
-    for name, n_ex, joins, py, row_py, cg, sh_rec, sh_bytes in rows:
+    for (name, n_ex, joins, py, row_py, cg, sh_rec, sh_bytes, sort_agg,
+         dec_agg) in rows:
         lines.append(
             f"| {name} | {n_ex} | {joins} | {py} | {row_py} | "
-            f"{'y' if cg else 'n'} | {sh_rec} | {sh_bytes} |"
+            f"{'y' if cg else 'n'} | {sh_rec} | {sh_bytes} | {sort_agg} | "
+            f"{dec_agg} |"
         )
     out = "\n".join(lines) + "\n"
     with open(os.path.join(ROOT, "PLANS.md"), "w") as f:

@@ -17,18 +17,52 @@ ORDERS_CSV = "/root/reference/input_data/orders_s.csv"
 PRODUCTS_CSV = "/root/reference/input_data/products_s.csv"
 
 
+def _none_for_null(df: pd.DataFrame) -> pd.DataFrame:
+    """Every null in an object column as None. Spark's toPandas gives
+    None where the pandas oracle gives NaN; both mean SQL null, and
+    assert_frame_equal is to compare them as one value, not through
+    its deprecated leniency for mismatched null-likes."""
+    obj = df.select_dtypes("object").columns
+    return df.assign(**{c: df[c].where(df[c].notna(), None) for c in obj})
+
+
+def _assert_same_frame(got: pd.DataFrame, exp: pd.DataFrame):
+    assert list(got.columns) == list(exp.columns)
+    key = ["order_source_id", "product_id"]
+    got = _none_for_null(got.sort_values(key).reset_index(drop=True))
+    exp = _none_for_null(exp.sort_values(key).reset_index(drop=True))
+    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+
+
 def _assert_pipeline_parity(spark, orders_csv: str, products_csv: str):
     from etl_orders_to_bq_spark.pipeline import OrdersEtl
 
     got = OrdersEtl(spark, orders_csv, products_csv).process().toPandas()
-    exp = etl_oracle(orders_csv, products_csv)
-
-    assert list(got.columns) == list(exp.columns)
-    key = ["order_source_id", "product_id"]
-    got = got.sort_values(key).reset_index(drop=True)
-    exp = exp.sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+    _assert_same_frame(got, etl_oracle(orders_csv, products_csv))
     return got
+
+
+def test_parity_check_tells_null_from_value():
+    """The null normalization keeps the check strict: None against NaN
+    passes, a null against a value fails either way round."""
+    got = pd.DataFrame({
+        "order_source_id": [1, 2], "product_id": [10, 20],
+        "patronymic": ["Ivanovich", None], "price": [1.5, None],
+    })
+    exp = got.astype({"patronymic": object}).assign(
+        patronymic=["Ivanovich", float("nan")]
+    )
+    _assert_same_frame(got, exp)
+    for col, row, value in [
+        ("patronymic", 1, "Petrovich"),  # null -> value
+        ("patronymic", 0, float("nan")),  # value -> null
+        ("price", 1, 2.0),
+        ("price", 0, float("nan")),
+    ]:
+        changed = exp.copy()
+        changed.loc[row, col] = value
+        with pytest.raises(AssertionError):
+            _assert_same_frame(got, changed)
 
 
 def test_full_frame_parity(spark):

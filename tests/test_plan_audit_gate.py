@@ -70,7 +70,8 @@ def audited(spark):
 
 @pytest.mark.parametrize("name", sorted(EXPENSIVE))
 def test_expensive_query_plan_within_ceilings(audited, name):
-    (n_ex, joins, py, row_py, codegen, _rec, _bytes), plan = audited[name]
+    summary, plan = audited[name]
+    n_ex, joins, py, row_py, codegen, _rec, _bytes, _sort, _dec = summary
     max_ex, max_py, allow_smj = EXPENSIVE[name]
     assert n_ex <= max_ex, (
         f"{name}: {n_ex} shuffle exchanges (ceiling {max_ex}) — a "
@@ -123,7 +124,7 @@ def _committed_sh_bytes():
             if not line.startswith("| "):
                 continue
             cells = [c.strip() for c in line.strip().strip("|").split("|")]
-            if len(cells) != 8 or cells[0] in ("query", "---"):
+            if len(cells) != 10 or cells[0] in ("query", "---"):
                 continue
             try:
                 out[cells[0]] = int(cells[7])
@@ -165,3 +166,27 @@ def test_shuffle_volume_within_3x_of_committed_plans(spark):
                 f"(committed {committed[name]})"
             )
     assert not failures, "; ".join(failures)
+
+
+# name -> {column: ceiling}, pinned at the sf0.001 audit; these two are
+# the stall shapes r14 measured: ransac_line's struct-min draw plans
+# SortAggregates, and spearman_corr's moment sums hold decimal(38,0)
+# buffers. Ceilings may only tighten.
+AGG_CEILINGS = {
+    "ransac_line": {"sort-agg": 5},
+    "spearman_corr": {"dec-agg": 2},
+}
+
+
+@pytest.mark.parametrize("name", sorted(AGG_CEILINGS))
+def test_aggregate_kinds_within_ceilings(spark, name):
+    import plan_audit
+
+    import __spark_entry__ as entry
+
+    summary, _plan = plan_audit._audit_one(
+        spark, entry.queries()[name], SF_DIR
+    )
+    got = dict(zip(("sort-agg", "dec-agg"), summary[7:9]))
+    for col, ceiling in AGG_CEILINGS[name].items():
+        assert got[col] <= ceiling, f"{name}: {col} {got[col]} > {ceiling}"
